@@ -30,8 +30,9 @@ object Tables {
   /** `path#length#mtime` via the path's own FileSystem (any scheme);
     * directories key on the status of the directory entry itself plus
     * its content summary length, so a rewritten multi-file table
-    * re-keys too. */
-  private def memoKey(spark: SparkSession, path: String): String = {
+    * re-keys too. Also the source fingerprint of the dimension sinks
+    * in `RefOrchestration`. */
+  private[graft] def memoKey(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = fs.getFileStatus(p)

@@ -44,29 +44,28 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     val r1 = RefOrchestration.runIncremental(spark, in, out)
     assert(r1.batches == 1 && r1.ordersRows > 0)
 
+    // landing run with unchanged dimension sources: users/products
+    // untouched — same file names (writer UUIDs) and same bytes
+    val dims = () => (inventory(s"$out/users"), inventory(s"$out/products"))
+    val dimsBefore = dims()
     RefOrchestration.stageFactChunk(spark, sf, in, 1)
     val r2 = RefOrchestration.runIncremental(spark, in, out)
     assert(r2.batches == 1, "second run must process ONLY the new chunk")
+    assert(dims() == dimsBefore,
+      "landing run with unchanged sources rewrote a dimension sink")
 
     val ordersAfter2 = inventory(s"$out/orders")
     assert(ordersAfter2.keys.exists(_.contains("ingest_batch=0")) &&
       ordersAfter2.keys.exists(_.contains("ingest_batch=1")),
       s"expected two batch partitions, got ${ordersAfter2.keys}")
 
-    // idle third run: no batches, orders sink untouched byte-for-byte,
-    // dimension refresh rewrites identical bytes (determinism law)
-    val dimsBefore = (inventory(s"$out/users"), inventory(s"$out/products"))
+    // idle third run: no batches, every sink untouched byte-for-byte
     val r3 = RefOrchestration.runIncremental(spark, in, out)
     assert(r3 == RefOrchestration.RunSummary(0, 0),
       s"idle re-run did work: $r3 — catchup=False law broken")
     assert(inventory(s"$out/orders") == ordersAfter2,
       "idle re-run changed the orders sink")
-    val dimsAfter = (inventory(s"$out/users"), inventory(s"$out/products"))
-    // names carry writer UUIDs — compare content hashes
-    assert(dimsBefore._1.values.toSeq.sorted == dimsAfter._1.values.toSeq.sorted,
-      "users dimension refresh is not byte-deterministic")
-    assert(dimsBefore._2.values.toSeq.sorted == dimsAfter._2.values.toSeq.sorted,
-      "products dimension refresh is not byte-deterministic")
+    assert(dims() == dimsBefore, "idle re-run rewrote a dimension sink")
 
     // value law: two incremental runs == one-shot batch over both chunks
     val (inB, outB) = freshRoot()
@@ -89,6 +88,9 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     RefOrchestration.runIncremental(spark, in, out)
     val users = spark.read.parquet(s"$out/users")
     assert(users.count() > 0)
+    // the read-back schema every run joins against is the written one
+    assert(users.schema.map(f => f.name -> f.dataType) ==
+      RefOrchestration.usersSinkSchema.map(f => f.name -> f.dataType))
     val genders = users.select("Gender").distinct()
       .collect().map(_.getString(0)).toSet
     assert(genders.subsetOf(Set("M", "F")),
@@ -96,5 +98,117 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     val bad = users.filter(!org.apache.spark.sql.functions.col("BirthDay")
       .rlike("^\\d{4}-\\d{2}-\\d{2}$")).count()
     assert(bad == 0, s"$bad BirthDay values not ISO-day-truncated")
+  }
+
+  // ---- dimension refresh: fingerprint-gated rewrite ---------------------
+
+  /** Content hashes of a sink's data files, leaving out the `_source`
+    * marker (it carries mtimes) — names carry writer UUIDs. */
+  private def contentHashes(inv: Map[String, String]): Seq[String] =
+    inv.filter { case (k, _) => !k.contains(RefOrchestration.SourceMarker) }
+      .values.toSeq.sorted
+
+  private def partFiles(inv: Map[String, String]): Set[String] =
+    inv.keySet.filter(_.startsWith("part-"))
+
+  test("a changed dimension source rewrites its sink; new batches join the new snapshot") {
+    val (in, out) = freshRoot()
+    RefOrchestration.stageDims(spark, sf, in)
+    RefOrchestration.stageFactChunk(spark, sf, in, 0)
+    RefOrchestration.runIncremental(spark, in, out)
+    val batch0 = inventory(s"$out/orders/ingest_batch=0")
+    val products0 = inventory(s"$out/products")
+    val users0 = inventory(s"$out/users")
+    val userOf = (id: Long) => spark.read.parquet(s"$out/users")
+      .filter(s"Id = $id").collect()
+    assert(userOf(1).map(_.getAs[String]("Gender")).toSeq == Seq("F"))
+
+    // user 1's gender f → Male; user 2's document re-keyed out of users.csv,
+    // so J1 drops user 2 and J3 must drop user 2's new orders — gender is
+    // not an orders column, the re-key is what the fact join can show
+    val infoPath = Paths.get(s"$in/user_info.json")
+    val info = Files.readString(infoPath)
+    val edited = info
+      .replaceFirst("(\\{\"document\":100001,[^}]*\"gender\":)\"f\"", "$1\"Male\"")
+      .replace("\"document\":100002,", "\"document\":999002,")
+    assert(edited.length == info.length + 3 && edited.contains("999002"),
+      "fixture edit did not apply")
+    Files.writeString(infoPath, edited)
+
+    RefOrchestration.stageFactChunk(spark, sf, in, 1)
+    val user2 = org.apache.spark.sql.functions.col("User_ID") === 2
+    assert(spark.read.option("header", "true")
+      .schema(graft.sources.Tables.refOrdersSchema)
+      .csv(s"$in/orders/chunk1.csv").filter(user2).count() > 0,
+      "fixture: chunk 1 has no orders of user 2")
+    val r = RefOrchestration.runIncremental(spark, in, out)
+    assert(r.batches == 1)
+
+    val users1 = inventory(s"$out/users")
+    assert(partFiles(users1).intersect(partFiles(users0)).isEmpty,
+      "users sink was not rewritten after user_info.json changed")
+    assert(userOf(1).map(_.getAs[String]("Gender")).toSeq == Seq("M"))
+    assert(userOf(2).isEmpty)
+    assert(inventory(s"$out/products") == products0,
+      "products sink rewritten although products.csv is unchanged")
+    assert(inventory(s"$out/orders/ingest_batch=0") == batch0,
+      "an earlier batch partition changed")
+
+    val newBatch = spark.read.parquet(s"$out/orders/ingest_batch=1")
+    assert(newBatch.count() == r.ordersRows && newBatch.filter(user2).isEmpty,
+      "new batch joined against the old users snapshot")
+    assert(spark.read.parquet(s"$out/orders/ingest_batch=0")
+      .filter(user2).count() > 0, "batch 0 lost user 2's orders")
+  }
+
+  test("an mtime-only source change rewrites the sink with identical bytes") {
+    val (in, out) = freshRoot()
+    RefOrchestration.stageDims(spark, sf, in)
+    RefOrchestration.stageFactChunk(spark, sf, in, 0)
+    RefOrchestration.runIncremental(spark, in, out)
+    val before = Seq("users", "products").map(t => inventory(s"$out/$t"))
+    for (f <- Seq("products.csv", "user_info.json")) {
+      val p = Paths.get(s"$in/$f")
+      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(p).toMillis + 10000))
+    }
+    assert(RefOrchestration.runIncremental(spark, in, out) ==
+      RefOrchestration.RunSummary(0, 0))
+    val after = Seq("users", "products").map(t => inventory(s"$out/$t"))
+    for (((b, a), t) <- before.zip(after).zip(Seq("users", "products"))) {
+      assert(partFiles(a).intersect(partFiles(b)).isEmpty,
+        s"$t sink was not rewritten after its source's mtime moved")
+      // determinism law: a rewrite from identical input is byte-identical
+      assert(contentHashes(a) == contentHashes(b),
+        s"$t dimension rewrite is not byte-deterministic")
+    }
+  }
+
+  test("a deleted sink or a missing _source marker leads to a rewrite") {
+    val (in, out) = freshRoot()
+    RefOrchestration.stageDims(spark, sf, in)
+    RefOrchestration.stageFactChunk(spark, sf, in, 0)
+    RefOrchestration.runIncremental(spark, in, out)
+    val users0 = inventory(s"$out/users")
+    val products0 = inventory(s"$out/products")
+
+    // deleted sink
+    Files.walk(Paths.get(s"$out/users")).iterator().asScala.toSeq.reverse
+      .foreach(Files.delete(_))
+    RefOrchestration.stageFactChunk(spark, sf, in, 1)
+    assert(RefOrchestration.runIncremental(spark, in, out).batches == 1)
+    val users1 = inventory(s"$out/users")
+    assert(partFiles(users1).nonEmpty && users1.keySet.contains(RefOrchestration.SourceMarker))
+    assert(contentHashes(users1) == contentHashes(users0))
+    assert(inventory(s"$out/products") == products0)
+
+    // write committed, marker never written (a crash in between)
+    Files.delete(Paths.get(s"$out/products/${RefOrchestration.SourceMarker}"))
+    RefOrchestration.runIncremental(spark, in, out)
+    val products1 = inventory(s"$out/products")
+    assert(partFiles(products1).intersect(partFiles(products0)).isEmpty,
+      "products sink without a marker was not rewritten")
+    assert(contentHashes(products1) == contentHashes(products0))
+    assert(inventory(s"$out/users") == users1)
   }
 }
