@@ -167,8 +167,8 @@ object Bench {
     println(compactLine)
     // stdout tails get truncated by capture harnesses (r13's driver
     // artifact kept 54/198 timings) — always ALSO write the full JSON
-    // to a file, the ScaleProbe SPARK_GRAFT_PROBE_OUT pattern. Default
-    // path keeps the artifact available even when the env var is unset.
+    // to a file (SPARK_GRAFT_BENCH_OUT). The default path keeps the
+    // artifact available even when the env var is unset.
     // cwd-relative default: a hardcoded absolute path would silently
     // skip the artifact on any other checkout
     val outPath = outPathName

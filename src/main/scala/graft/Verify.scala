@@ -10,6 +10,11 @@ object Verify {
     // checks; the driver passes 2 args → full battery)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // a mistyped name would otherwise dump nothing and look like a pass
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"Verify: unknown queries $unknown")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

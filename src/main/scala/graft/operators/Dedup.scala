@@ -1461,7 +1461,7 @@ object Dedup {
     * candidate paths) inherits the fan-out through this one choke
     * point.
     *
-    * `fan = false` opts a caller out: the r21 A/B (TimeQuery ×5,
+    * `fan = false` opts a caller out: the r21 A/B (5 timed runs,
     * GRAFT_FANOUT on/off) measured the lossless SELF-join path
     * (SimJoin.prefixJaccardJoin) ~25-30% SLOWER with the conditional
     * shuffle — there the shingling is one cheap codegen pass and the

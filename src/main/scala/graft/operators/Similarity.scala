@@ -17,8 +17,8 @@ object Similarity {
   /** Default band count for banded sign-LSH blocking — THE shared
     * constant for [[embeddingPairs]]/[[crossEmbeddingPairs]] defaults,
     * the correctness gate's pinned parameters (`Extensions.gateBands`)
-    * and the growth probe (`ScaleProbe`), so a changed default cannot
-    * leave the probe silently measuring a different blocking than the
+    * and the growth laws in `CandidateBoundSpec`, so a changed default
+    * cannot leave them silently checking a different blocking than the
     * one deployed. */
   val DefaultBands = 4
 

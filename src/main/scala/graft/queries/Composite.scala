@@ -23,7 +23,7 @@ object Composite {
     // the heavy aggregate runs on a single bigint key ahead of the join
     // and only one compact row per order crosses the join exchange — the
     // post-join formulation aggregated every joined lineitem row on a
-    // 3-part string-bearing key (the 10× ScaleProbe's worst grower).
+    // 3-part string-bearing key (the worst grower on a 10× scaled copy).
     "q3_shipping_priority" -> ((s, d) => {
       val o = Tables.orders(s, d)
         .filter(col("o_orderdate") < lit("2001-06-01").cast("timestamp"))

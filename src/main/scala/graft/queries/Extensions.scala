@@ -435,9 +435,9 @@ object Extensions {
     gateRefInMemo.computeIfAbsent(s"$d#${f.length}#${f.lastModified}", _ => {
       val in = graft.sources.Scratch.dir(
         s"refpipe_bench_${java.util.UUID.randomUUID.toString.take(8)}")
-      graft.pipelines.RefOrchestration.stageDims(s, d, in)
-      graft.pipelines.RefOrchestration.stageFactChunk(s, d, in, 0)
-      graft.pipelines.RefOrchestration.stageFactChunk(s, d, in, 1)
+      RefFixtures.stageDims(s, d, in)
+      RefFixtures.stageFactChunk(s, d, in, 0)
+      RefFixtures.stageFactChunk(s, d, in, 1)
       in
     })
   }
@@ -2608,10 +2608,10 @@ object Extensions {
       val root = graft.sources.Scratch.dir(
         s"refpipe_${java.util.UUID.randomUUID.toString.take(8)}")
       val in = s"$root/in"; val out = s"$root/out"
-      graft.pipelines.RefOrchestration.stageDims(s, d, in)
-      graft.pipelines.RefOrchestration.stageFactChunk(s, d, in, 0)
+      RefFixtures.stageDims(s, d, in)
+      RefFixtures.stageFactChunk(s, d, in, 0)
       graft.pipelines.RefOrchestration.runIncremental(s, in, out)
-      graft.pipelines.RefOrchestration.stageFactChunk(s, d, in, 1)
+      RefFixtures.stageFactChunk(s, d, in, 1)
       graft.pipelines.RefOrchestration.runIncremental(s, in, out)
       val rerun = graft.pipelines.RefOrchestration.runIncremental(s, in, out)
       require(rerun.batches == 0 && rerun.ordersRows == 0,

@@ -111,7 +111,8 @@ class CandidateBoundSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("banded candidates: κ-budget holds on a 16×-grown corpus (PROBE_EMBED_r13 law)") {
-    // PROBE_EMBED_r13.json pins the growth law at up to 62 copies of the
+    // The r13 embedding probe (PROBE_EMBED_r13.json, in git history)
+    // measured the growth law at up to 62 copies of the
     // sf0.1 embeddings: autoRowBits holds mean occupancy flat (8.72 →
     // 8.79) while the bucket-skew factor κ = E[occ²]/E[occ]² grows
     // ≈ +0.08 per corpus doubling (1.91 at 2k vectors → 2.38 at 124k),
@@ -125,7 +126,7 @@ class CandidateBoundSpec extends AnyFunSuite with SparkSpec {
     // vectors). Past the ceiling the occ > 1000 hub-star divert caps
     // enumeration at bands·999/2 per vector — linear absolutely.
     val dir = graft.sources.Scratch.dir("candbound-16x")
-    tools.EmbedProbe.buildEmbeddings(spark, "/root/testdata/sf0.1", dir, 16)
+    ScaledCopies.buildEmbeddings(spark, "/root/testdata/sf0.1", dir, 16)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val n = e.count()

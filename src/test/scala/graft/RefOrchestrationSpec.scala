@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipelines.RefOrchestration
+import graft.queries.RefFixtures
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -39,8 +40,8 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
 
   test("arrived files are processed exactly once; idle re-run is a byte-level no-op") {
     val (in, out) = freshRoot()
-    RefOrchestration.stageDims(spark, sf, in)
-    RefOrchestration.stageFactChunk(spark, sf, in, 0)
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
     val r1 = RefOrchestration.runIncremental(spark, in, out)
     assert(r1.batches == 1 && r1.ordersRows > 0)
 
@@ -48,7 +49,7 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     // untouched — same file names (writer UUIDs) and same bytes
     val dims = () => (inventory(s"$out/users"), inventory(s"$out/products"))
     val dimsBefore = dims()
-    RefOrchestration.stageFactChunk(spark, sf, in, 1)
+    RefFixtures.stageFactChunk(spark, sf, in, 1)
     val r2 = RefOrchestration.runIncremental(spark, in, out)
     assert(r2.batches == 1, "second run must process ONLY the new chunk")
     assert(dims() == dimsBefore,
@@ -69,9 +70,9 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
 
     // value law: two incremental runs == one-shot batch over both chunks
     val (inB, outB) = freshRoot()
-    RefOrchestration.stageDims(spark, sf, inB)
-    RefOrchestration.stageFactChunk(spark, sf, inB, 0)
-    RefOrchestration.stageFactChunk(spark, sf, inB, 1)
+    RefFixtures.stageDims(spark, sf, inB)
+    RefFixtures.stageFactChunk(spark, sf, inB, 0)
+    RefFixtures.stageFactChunk(spark, sf, inB, 1)
     val rB = RefOrchestration.runIncremental(spark, inB, outB)
     assert(rB.batches == 1, "both pending files should drain in one batch")
     val inc = RefOrchestration.readOrdersSink(spark, out)
@@ -83,8 +84,8 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
 
   test("users sink: gender normalized (P5) and birthday ISO-truncated (P6)") {
     val (in, out) = freshRoot()
-    RefOrchestration.stageDims(spark, sf, in)
-    RefOrchestration.stageFactChunk(spark, sf, in, 0)
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
     RefOrchestration.runIncremental(spark, in, out)
     val users = spark.read.parquet(s"$out/users")
     assert(users.count() > 0)
@@ -113,8 +114,8 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
 
   test("a changed dimension source rewrites its sink; new batches join the new snapshot") {
     val (in, out) = freshRoot()
-    RefOrchestration.stageDims(spark, sf, in)
-    RefOrchestration.stageFactChunk(spark, sf, in, 0)
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
     RefOrchestration.runIncremental(spark, in, out)
     val batch0 = inventory(s"$out/orders/ingest_batch=0")
     val products0 = inventory(s"$out/products")
@@ -135,7 +136,7 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
       "fixture edit did not apply")
     Files.writeString(infoPath, edited)
 
-    RefOrchestration.stageFactChunk(spark, sf, in, 1)
+    RefFixtures.stageFactChunk(spark, sf, in, 1)
     val user2 = org.apache.spark.sql.functions.col("User_ID") === 2
     assert(spark.read.option("header", "true")
       .schema(graft.sources.Tables.refOrdersSchema)
@@ -163,8 +164,8 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
 
   test("an mtime-only source change rewrites the sink with identical bytes") {
     val (in, out) = freshRoot()
-    RefOrchestration.stageDims(spark, sf, in)
-    RefOrchestration.stageFactChunk(spark, sf, in, 0)
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
     RefOrchestration.runIncremental(spark, in, out)
     val before = Seq("users", "products").map(t => inventory(s"$out/$t"))
     for (f <- Seq("products.csv", "user_info.json")) {
@@ -186,8 +187,8 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
 
   test("a deleted sink or a missing _source marker leads to a rewrite") {
     val (in, out) = freshRoot()
-    RefOrchestration.stageDims(spark, sf, in)
-    RefOrchestration.stageFactChunk(spark, sf, in, 0)
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
     RefOrchestration.runIncremental(spark, in, out)
     val users0 = inventory(s"$out/users")
     val products0 = inventory(s"$out/products")
@@ -195,7 +196,7 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     // deleted sink
     Files.walk(Paths.get(s"$out/users")).iterator().asScala.toSeq.reverse
       .foreach(Files.delete(_))
-    RefOrchestration.stageFactChunk(spark, sf, in, 1)
+    RefFixtures.stageFactChunk(spark, sf, in, 1)
     assert(RefOrchestration.runIncremental(spark, in, out).batches == 1)
     val users1 = inventory(s"$out/users")
     assert(partFiles(users1).nonEmpty && users1.keySet.contains(RefOrchestration.SourceMarker))
@@ -210,5 +211,31 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
       "products sink without a marker was not rewritten")
     assert(contentHashes(products1) == contentHashes(products0))
     assert(inventory(s"$out/users") == users1)
+  }
+
+  test("a batch replayed after a crash before its commit rewrites its partition byte-identically") {
+    val (in, out) = freshRoot()
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
+    val r1 = RefOrchestration.runIncremental(spark, in, out)
+    assert(r1.batches == 1)
+    val batch0 = contentHashes(inventory(s"$out/orders/ingest_batch=0"))
+
+    // crash after the partition write, before the offset commit: the
+    // offset log still holds batch 0, the commit log does not
+    val commits = Paths.get(s"$out/_checkpoint/commits")
+    val last = Files.list(commits).iterator().asScala
+      .map(_.getFileName.toString).filter(_.forall(_.isDigit))
+      .maxBy(_.toLong)
+    Files.delete(commits.resolve(last))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+
+    val r2 = RefOrchestration.runIncremental(spark, in, out)
+    assert(r2 == RefOrchestration.RunSummary(1, r1.ordersRows),
+      s"replay returned $r2, expected the first run's $r1")
+    assert(contentHashes(inventory(s"$out/orders/ingest_batch=0")) == batch0,
+      "replayed batch partition is not byte-identical")
+    assert(RefOrchestration.readOrdersSink(spark, out).count() == r1.ordersRows,
+      "replay appended duplicate rows")
   }
 }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The growth probe's replication must preserve what makes its ratios
-  * meaningful: N× fact rows, unchanged dims, foreign keys still inside
+/** The scaled copies' replication must preserve what makes growth
+  * ratios meaningful: N× fact rows, unchanged dims, foreign keys still inside
   * the dim ranges, and the scaled dir readable through the same Tables
   * accessors the queries use. */
 class ScaleProbeSpec extends AnyFunSuite with SparkSpec {
@@ -12,7 +12,7 @@ class ScaleProbeSpec extends AnyFunSuite with SparkSpec {
   test("buildScaled: 2x facts, unchanged dims, FKs stay joinable") {
     val base = "/root/testdata/sf0.001"
     val out = graft.sources.Scratch.dir("scale-spec")
-    graft.tools.ScaleProbe.buildScaled(spark, base, out, 2)
+    ScaledCopies.buildScaled(spark, base, out, 2)
     def n(d: String, t: String): Long = spark.read.parquet(s"$d/$t.parquet").count()
     assert(n(out, "orders") == 2 * n(base, "orders"))
     assert(n(out, "lineitem") == 2 * n(base, "lineitem"))
@@ -35,7 +35,7 @@ class ScaleProbeSpec extends AnyFunSuite with SparkSpec {
   test("buildScaled: doc/embedding copies are content-disjoint but structure-preserving") {
     val base = "/root/testdata/sf0.001"
     val out = graft.sources.Scratch.dir("scale-spec-docs")
-    graft.tools.ScaleProbe.buildScaled(spark, base, out, 2)
+    ScaledCopies.buildScaled(spark, base, out, 2)
     val OFF = 1000000000L
 
     val d0 = spark.read.parquet(s"$base/documents.parquet")
@@ -92,7 +92,7 @@ class ScaleProbeSpec extends AnyFunSuite with SparkSpec {
     // aggregation over every pair at once (copy = doc_id / OFF)
     val base = "/root/testdata/sf0.001"
     val out = graft.sources.Scratch.dir("scale-spec-pairwise")
-    graft.tools.ScaleProbe.buildScaled(spark, base, out, 62)
+    ScaledCopies.buildScaled(spark, base, out, 62)
     val OFF = 1000000000L
     // STRING shingles, not the 32-bit hashes the operators use: at
     // tens of copies of the corpus the hash space measurably
@@ -111,7 +111,7 @@ class ScaleProbeSpec extends AnyFunSuite with SparkSpec {
     // and 63 copies is refused outright — the ring period makes it
     // unsound, not merely untested
     val ex = intercept[IllegalArgumentException] {
-      graft.tools.ScaleProbe.buildScaled(spark, base,
+      ScaledCopies.buildScaled(spark, base,
         graft.sources.Scratch.dir("scale-spec-63"), 63)
     }
     assert(ex.getMessage.contains("1..62"))

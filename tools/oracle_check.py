@@ -43,7 +43,7 @@ def main(outdir: str, sfdir: str) -> int:
         con.execute(f"SET threads={int(thr)}")
     for t in TABLES:
         # driver sf dirs hold one flat file per table; derived scaled
-        # dirs (graft.tools.BuildScaled) hold Spark part-file DIRECTORIES
+        # dirs (ScaledCopies.buildScaled) hold Spark part-file DIRECTORIES
         p = Path(sfdir, f"{t}.parquet")
         src = f"{p}/*.parquet" if p.is_dir() else str(p)
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
