@@ -1,19 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.operators.Dedup
 
-/** SQL-surface registration for graft's custom expressions, so
+/** SQL-surface builders for graft's custom expressions, so
   * `spark.sql("SELECT cosine_sim(a, b) ...")` works alongside the
-  * Column API. Two paths:
-  *
-  *  - [[GraftFunctions.register]] — runtime, on an existing session;
-  *  - [[GraftExtensions]] — via
-  *    `spark.sql.extensions=graft.functions.GraftExtensions` or
-  *    `.withExtensions(new GraftExtensions)` at session build.
+  * Column API. They are installed only through [[GraftExtensions]], at
+  * session build: `graft.GraftSession.builder` adds it, and a session
+  * built elsewhere sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -102,11 +99,6 @@ object GraftFunctions {
         case Seq(h, bm, k) => BloomMightContain(h, bm,
           intLit("bloom_might_contain", "k")(k))
       })
-
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      ColumnBridge.registerFunction(spark, name, b)
-    }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

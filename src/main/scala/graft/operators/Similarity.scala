@@ -334,13 +334,6 @@ object Similarity {
   private def cellHistStr(h: Map[Int, Long]): String =
     h.toSeq.sortBy(_._1).map { case (c, n) => s"$c:$n" }.mkString(",")
 
-  /** Per-cell row counts of a freshly-written `assigned` layout —
-    * cent_id is the partition column, so this reads directory names +
-    * parquet footers, never vector data. */
-  private def cellCountsOf(spark: SparkSession, path: String): Map[Int, Long] =
-    Dedup.readPq(spark, path).groupBy("cent_id").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-
   /** Writes an (…, cent_id) frame as the cell-partitioned `assigned`
     * layout at `path` and returns its per-cell occupancy, counted by an
     * [[org.apache.spark.sql.Observation]] riding the write job itself —

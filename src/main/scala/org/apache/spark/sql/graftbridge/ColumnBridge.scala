@@ -12,13 +12,6 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Runtime SQL-function registration (sessionState is private[sql]). */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-
   /** Clone a session INCLUDING its runtime state — SQL conf set after
     * startup, temp views, registered functions (`cloneSession` is
     * private[sql]). `newSession()` would start from the base SparkConf,

@@ -223,7 +223,6 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
 
 class SqlFunctionSpec extends AnyFunSuite with SparkSpec {
   test("custom expressions are callable from SQL after registration") {
-    graft.functions.GraftFunctions.register(spark)
     val sim = spark.sql(
       "SELECT cosine_sim(array(3.0F, 4.0F), array(4.0F, 3.0F)) AS s")
       .head().getDouble(0)
@@ -236,7 +235,6 @@ class SqlFunctionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("SQL builders honor optional literal params (no silent defaults)") {
-    graft.functions.GraftFunctions.register(spark)
     // shingle_hashes(t, 2): 'a b c d' has three 2-grams
     val n2 = spark.sql("SELECT size(shingle_hashes('a b c d', 2)) AS n")
       .head().getInt(0)
@@ -253,7 +251,6 @@ class SqlFunctionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bloom functions are callable from SQL and agree with the Scala side") {
-    graft.functions.GraftFunctions.register(spark)
     val mBits = 128
     val k = 5
     // build the 2-word bitmap for hash 42 on the Scala side…
@@ -276,7 +273,6 @@ class SqlFunctionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("SQL builders reject wrong arity and non-literal params") {
-    graft.functions.GraftFunctions.register(spark)
     val e1 = intercept[Exception] {
       spark.sql("SELECT cosine_sim(array(1.0F))").collect()
     }
@@ -288,7 +284,6 @@ class SqlFunctionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("jaccard_sim rejects non-bigint arrays at analysis time") {
-    graft.functions.GraftFunctions.register(spark)
     // array<int> elements would be reinterpreted as 8-byte longs by
     // toLongArray — must fail analysis, not return wrong similarities
     val e = intercept[Exception] {
@@ -302,7 +297,6 @@ class SqlFunctionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("int-literal params reject Long overflow instead of wrapping") {
-    graft.functions.GraftFunctions.register(spark)
     // 4294967304 wraps to 8 under toInt — must throw, not train 8 hashes
     val e = intercept[Exception] {
       spark.sql("SELECT minhash_sig(array(7L), 4294967304)").collect()
@@ -311,7 +305,6 @@ class SqlFunctionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("newer expressions are callable from SQL too") {
-    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(
       "SELECT intersect_count(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS n")
       .head().getInt(0) == 2)
@@ -327,7 +320,6 @@ class SqlFunctionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("cosine_sim fails loudly on mismatched dimensions") {
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT cosine_sim(array(1.0F, 2.0F), array(1.0F))").collect()
     }
@@ -347,8 +339,8 @@ class RewriteRuleSpec extends AnyFunSuite with SparkSpec {
       .otherwise(array(lit(1L), lit(3L))).as("b"))
 
   test("composed size(array_intersect) Jaccard is rewritten to JaccardSim") {
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.RewriteJaccardIntersect)
+    // the rule comes from GraftExtensions alone, not a runtime fallback
+    assert(spark.experimental.extraOptimizations.isEmpty)
     val df = arrays
       .select((size(array_intersect(col("a"), col("b"))).cast("double") /
         (size(col("a")) + size(col("b")) -
@@ -362,8 +354,6 @@ class RewriteRuleSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("rewrite declines when the size legs reference other arrays") {
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.RewriteJaccardIntersect)
     val df = arrays
       .select((size(array_intersect(col("a"), col("b"))).cast("double") /
         (size(col("a")) + size(col("a")) - // b's size leg replaced by a
@@ -376,8 +366,16 @@ class RewriteRuleSpec extends AnyFunSuite with SparkSpec {
 
 class GraftSessionSpec extends AnyFunSuite with SparkSpec {
   test("GraftSession reuses the active session and registers SQL functions") {
+    // touch the shared session first, so this suite never creates it
+    // with the factory's defaults instead of SparkSpec's settings
+    val shared = spark
     val s = GraftSession.getOrCreate("local[4]")
+    assert(s eq shared)
     assert(s.sql("SELECT simhash32(shingle_hashes('a b c d e'))").count() == 1)
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    // every test session runs the shipped configuration
+    assert(shared.catalog.functionExists("jaccard_sim"))
+    assert(shared.experimental.extraOptimizations.isEmpty)
+    assert(shared.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 }

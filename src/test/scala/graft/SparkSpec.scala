@@ -2,15 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole forked test JVM. */
+/** One shared session for the whole forked test JVM, built by the
+  * shipped factory so every suite runs graft's extensions and rule. */
 object SparkSpec {
   lazy val session: SparkSession = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-test").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir", s"$tmp/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$tmp/metastore_db;create=true")
