@@ -326,11 +326,6 @@ object TextOps {
         col("t.term").as("term"), col("t.tf").as("tf"), col("t.df").as("df"))
   }
 
-  /** [[packOffsets]] auto-sizing target: the driver-side running sum is
-    * one (bucket, total) tuple per occupied bucket, so ~100k buckets
-    * keeps that step a few MB at any corpus size. */
-  val PackTargetBuckets = Sampling.TargetBuckets
-
   /** Sequence-packing offsets — the concatenate-and-chunk pass that
     * turns a tokenized corpus into fixed-`seqLen` training sequences:
     * documents concatenate in `doc_id` order, and each document's
@@ -350,7 +345,7 @@ object TextOps {
     *
     * `bucketSize = 0` (the default) auto-scales: the driver-side running
     * sum holds one tuple per OCCUPIED bucket, so the size is derived
-    * from the observed id span to target ≤ [[PackTargetBuckets]] buckets
+    * from the observed id span to target ≤ [[Sampling.TargetBuckets]] buckets
     * (floor 4096) — the driver step stays ~100k tuples at any corpus
     * size instead of growing as n_docs/4096. The result is invariant to
     * the sizing (the two-phase sum is exact for EVERY bucketing — law in
@@ -401,37 +396,6 @@ object TextOps {
       .select(col("term"), col("df"),
         when(col("df") <= dfCap, col("postings")).as("postings"))
   }
-
-  /** Sequence-length bucketing for padded training batches: every
-    * document lands in the smallest power-of-two length bucket that
-    * holds its token count (floor 16, cap 8192 — the overflow bucket),
-    * and per bucket the operator reports document count, true token
-    * volume, padded cell volume (`bucket · docs`) and the padding-waste
-    * fraction that batch composition pays. Pure scan + one tiny
-    * aggregation (≤ 10 bucket rows at any corpus size); the bucket
-    * thresholds are an integer CASE ladder, not a float log₂ — exact in
-    * any engine. */
-  def lengthBuckets(docs: DataFrame, text: String = "text"): DataFrame = {
-    val n = size(tokens(col(text))).cast("long")
-    val bucket = LengthBucketBounds.foldRight(
-      lit(LengthBucketBounds.last): org.apache.spark.sql.Column) {
-      (b, acc) => when(n <= b, lit(b)).otherwise(acc)
-    }
-    docs.select(bucket.as("bucket"), n.as("n"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
-      .select(col("bucket"), col("n_docs"), col("n_tokens"),
-        (col("bucket") * col("n_docs") - col("n_tokens")).as("pad_cells"),
-        round(lit(1.0) - col("n_tokens") /
-          (col("bucket") * col("n_docs")).cast("double"), 6).as("waste"))
-  }
-
-  /** [[lengthBuckets]] thresholds — powers of two from a 16-token floor
-    * to the 8192 overflow bucket; documents past the cap pool there
-    * (their "waste" can go negative by construction, which is the
-    * signal to split them — see `text_chunks`). */
-  val LengthBucketBounds: Seq[Long] =
-    Seq(16L, 32L, 64L, 128L, 256L, 512L, 1024L, 2048L, 4096L, 8192L)
 
   /** BM25 retrieval: top-k corpus documents per query, Okapi
     * tf-saturation with a RATIONAL idf — the Robertson idf argument

@@ -1,62 +1,70 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.hadoop.fs.Path
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
+import graft.operators.IndexLease
 import graft.sources.Tables
 
-/** The reference's *scheduler* semantics (`dags/etl.py:148-157`: a daily
-  * cron run over whatever input files exist, `catchup=False` at `:154`,
-  * retries at `:20-21`) re-expressed Spark-first as a file-arrival
-  * incremental driver. One call = one scheduled run:
+/** The reference's daily DAG (`dags/etl.py:148-157`: extract, transform,
+  * load, run by a daily cron over whatever input files exist,
+  * `catchup=False` at `:154`, retries at `:20-21`). Two entry points share
+  * one dimension step and one parquet writer; they differ only in the
+  * fact source and the fact write:
   *
-  *  - the orders FACT feed is a Structured Streaming file source over
-  *    `inDir/orders/` drained with `Trigger.AvailableNow` — files that
-  *    arrived since the last run are processed exactly once (the
-  *    checkpoint's offset log is the `catchup=False`: a re-run never
-  *    reprocesses old files, a run after downtime picks up everything
-  *    pending, and a run with nothing pending is a no-op);
-  *  - each micro-batch is enriched through the UNCHANGED batch plans
-  *    ([[RefPipeline.ordersEnriched]] — same join/rename semantics the
-  *    correctness gate pins) against the dimension snapshots read back
-  *    from the users/products sinks, and lands in its own
+  *  - [[runBatch]] enriches all of `inDir/orders.csv` and overwrites
+  *    `outDir/orders` in one parallel pass with no exchange, so input
+  *    split i becomes part file i;
+  *  - [[runIncremental]] drains the fact files that arrived under
+  *    `inDir/orders/` since the last run as a Structured Streaming file
+  *    source with `Trigger.AvailableNow`. The checkpoint's offset log is
+  *    the `catchup=False`: a re-run never reprocesses old files, a run
+  *    after downtime picks up everything pending, and a run with nothing
+  *    pending is a no-op. Each micro-batch lands in its own
   *    `ingest_batch=<id>` partition with overwrite semantics, so
   *    foreachBatch's at-least-once replay (the reference's `retries`)
-  *    rewrites rather than double-appends — rerun ≡ run-once,
-  *    byte-identical;
-  *  - the users/products DIMENSION sinks are refreshed only when their
-  *    sources changed. Each sink is fingerprinted by path, length and
-  *    mtime of its sources (`products` ← `products.csv`; `users` ←
-  *    `users.csv` + `user_info.json`), and the fingerprint is stored as
-  *    a `_source` file inside the sink directory once the sink's write
-  *    has committed. A run rewrites the sink when the stored fingerprint
-  *    differs from the current one or is missing. Spark readers skip
-  *    `_`-prefixed files, and an overwrite deletes the marker along with
-  *    the old sink, so a crash between the write and the marker, or a
-  *    deleted sink, always leads to a rewrite; an idle re-run rewrites
-  *    nothing. A change to the transforms themselves does not change the
-  *    fingerprint: delete the sinks to rebuild them.
+  *    rewrites rather than double-appends, byte-identically.
   *
-  * Every run reads both dimensions back from their sinks with explicit
-  * schemas (no inference job), so `user_info.json` is parsed at most
-  * once per run, facts are always enriched against exactly the rows the
-  * dimension sinks hold, and the parquet size estimate lets the planner
-  * broadcast a snapshot under the broadcast threshold at plan time
-  * (adaptive execution is off in streaming).
+  * Facts go through the UNCHANGED batch plan
+  * ([[RefPipeline.ordersEnriched]], whose join/rename semantics the
+  * correctness gate pins) against the dimension snapshots read back from
+  * the users/products sinks. A sink is refreshed only when its sources
+  * changed. Each sink is fingerprinted by path, length and mtime of its
+  * sources (`products` ← `products.csv`; `users` ← `users.csv` +
+  * `user_info.json`), and the fingerprint is stored as a `_source` file
+  * inside the sink directory once the sink's write has committed. A run
+  * rewrites the sink when the stored fingerprint differs from the current
+  * one or is missing. Spark readers skip `_`-prefixed files, and an
+  * overwrite deletes the marker along with the old sink, so a crash
+  * between the write and the marker, or a deleted sink, always leads to
+  * a rewrite; an idle re-run rewrites nothing. A change to the transforms
+  * themselves does not change the fingerprint: delete the sinks to
+  * rebuild them.
   *
-  * At scale: per-batch volume is the arrival increment (a day of files),
-  * not the corpus — the single-partition zstd batch write below is the
+  * Both snapshots are read back with explicit schemas (no inference
+  * job), so `user_info.json` is parsed only when the users sink is
+  * rewritten, facts are enriched against exactly the rows the sinks hold,
+  * and the parquet size estimate lets the planner broadcast a snapshot
+  * under the broadcast threshold at plan time (adaptive execution is off
+  * in streaming, and a plan-time broadcast shuffles no facts).
+  *
+  * Each run holds the writer lease on `outDir`
+  * ([[graft.operators.IndexLease]]), so an overlapping run refuses
+  * loudly instead of racing the sink overwrites and the checkpoint.
+  *
+  * At scale: an incremental batch is the arrival increment (a day of
+  * files), not the corpus — its single sorted file is the
   * one-file-per-day layout; swap it for `partitionBy(date)` when an
   * increment outgrows one file. Nothing rescans the held sink.
   */
 object RefOrchestration {
 
   /** What one scheduled run did: micro-batches drained and enriched
-    * orders rows appended (0/0 = the no-op re-run). */
+    * orders rows written (0/0 = the no-op re-run; a batch run is 1). */
   final case class RunSummary(batches: Long, ordersRows: Long)
 
   private val payloadCols =
@@ -75,13 +83,74 @@ object RefOrchestration {
   /** Name of the source-fingerprint marker inside a dimension sink. */
   private[graft] val SourceMarker = "_source"
 
+  /** One daily batch run: refresh the dimension sinks whose sources
+    * changed, enrich every order, overwrite the orders sink. Layout
+    * contract: inDir holds `orders.csv`, `products.csv`, `users.csv`,
+    * `user_info.json`; outDir gains `orders`, `users`, `products`.
+    * Refuses an outDir that [[runIncremental]] writes: overwriting its
+    * orders would drop rows its offset log counts as processed. */
+  def runBatch(spark: SparkSession, inDir: String,
+               outDir: String): RunSummary =
+    IndexLease.withLease(spark, outDir, "RefOrchestration.runBatch") {
+      val checkpoint = new Path(outDir, "_checkpoint")
+      require(!checkpoint.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(checkpoint), s"RefOrchestration.runBatch refused: $checkpoint " +
+        "exists, so runIncremental writes this outDir; overwriting its orders " +
+        "would drop rows its offset log counts as processed")
+      val (products, users) = dimensions(spark, inDir, outDir)
+      val obs = Observation()
+      overwriteZstd(RefPipeline.ordersEnriched(
+          Tables.csv(spark, s"$inDir/orders.csv", Tables.refOrdersSchema),
+          products, users).observe(obs, count(lit(1)).as("n")),
+        s"$outDir/orders")
+      RunSummary(1, obs.get("n").asInstanceOf[Long])
+    }
+
   /** One scheduled run: refresh the dimension sinks whose sources
     * changed, drain pending fact files, append enriched batches
     * idempotently. Layout contract: inDir holds `orders/` (arriving csv
     * files), `products.csv`, `users.csv`, `user_info.json`; outDir gains
     * `orders/ingest_batch=N`, `users`, `products`, `_checkpoint`. */
   def runIncremental(spark: SparkSession, inDir: String,
-                     outDir: String): RunSummary = {
+                     outDir: String): RunSummary =
+    IndexLease.withLease(spark, outDir, "RefOrchestration.runIncremental") {
+      val (products, usersFinal) = dimensions(spark, inDir, outDir)
+      val batches = new java.util.concurrent.atomic.AtomicLong(0)
+      val rows = new java.util.concurrent.atomic.AtomicLong(0)
+      val q = spark.readStream
+        .schema(Tables.refOrdersSchema)
+        .option("header", "true")
+        .csv(s"$inDir/orders")
+        .writeStream
+        .option("checkpointLocation", s"$outDir/_checkpoint")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          val part = s"$outDir/orders/ingest_batch=$batchId"
+          // row count rides the write job itself (Observation) — the
+          // footer-count read-back this replaces was one extra Spark job
+          // per micro-batch, counting rows the write had just streamed
+          val obs = Observation()
+          writeSorted(RefPipeline.ordersEnriched(batch, products, usersFinal)
+            .observe(obs, count(lit(1)).as("n")), payloadCols, part)
+          batches.incrementAndGet()
+          rows.addAndGet(obs.get("n").asInstanceOf[Long])
+          ()
+        }
+        .start()
+      q.awaitTermination()
+      RunSummary(batches.get, rows.get)
+    }
+
+  /** The enriched-orders sink as a DataFrame, `ingest_batch` replay
+    * bookkeeping projected away. Reads both entry points' layouts. */
+  def readOrdersSink(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.parquet(s"$outDir/orders")
+      .select(payloadCols.map(col): _*)
+
+  /** The dimension step both entry points share: refresh the products
+    * and users sinks, then read both back as (products, users). */
+  private def dimensions(spark: SparkSession, inDir: String,
+                         outDir: String): (DataFrame, DataFrame) = {
     refreshDimension(spark, s"$outDir/products", Seq(s"$inDir/products.csv")) {
       RefPipeline.productsPassthrough(
         Tables.csv(spark, s"$inDir/products.csv", Tables.refProductsSchema))
@@ -92,41 +161,9 @@ object RefOrchestration {
         Tables.csv(spark, s"$inDir/users.csv", Tables.refUsersSchema),
         Tables.userInfoJson(spark, s"$inDir/user_info.json"))
     }
-    val products = spark.read.schema(Tables.refProductsSchema)
-      .parquet(s"$outDir/products")
-    val usersFinal = spark.read.schema(usersSinkSchema).parquet(s"$outDir/users")
-
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val rows = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = spark.readStream
-      .schema(Tables.refOrdersSchema)
-      .option("header", "true")
-      .csv(s"$inDir/orders")
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val part = s"$outDir/orders/ingest_batch=$batchId"
-        // row count rides the write job itself (Observation) — the
-        // footer-count read-back this replaces was one extra Spark job
-        // per micro-batch, counting rows the write had just streamed
-        val obs = org.apache.spark.sql.Observation()
-        writeSorted(RefPipeline.ordersEnriched(batch, products, usersFinal)
-          .observe(obs, count(lit(1)).as("n")), payloadCols, part)
-        batches.incrementAndGet()
-        rows.addAndGet(obs.get("n").asInstanceOf[Long])
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    RunSummary(batches.get, rows.get)
+    (spark.read.schema(Tables.refProductsSchema).parquet(s"$outDir/products"),
+      spark.read.schema(usersSinkSchema).parquet(s"$outDir/users"))
   }
-
-  /** The enriched-orders sink as a DataFrame, `ingest_batch` replay
-    * bookkeeping projected away. */
-  def readOrdersSink(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/orders")
-      .select(payloadCols.map(col): _*)
 
   /** Rewrites the dimension sink at `sink` from `build` unless its
     * [[SourceMarker]] holds the current fingerprint of `sources`; the
@@ -150,11 +187,14 @@ object RefOrchestration {
     }
   }
 
-  /** Deterministic sink write: one fully-sorted zstd parquet file, so
-    * identical input always produces identical bytes (the
-    * rerun-idempotence law is checked at the file level, not just row
-    * sets). */
+  /** Deterministic sink write for the dimension sinks and the
+    * per-arrival batches: one fully-sorted file, so identical input
+    * always produces identical bytes (the rerun-idempotence laws are
+    * checked at the file level, not just row sets). */
   private def writeSorted(df: DataFrame, by: Seq[String], path: String): Unit =
-    df.repartition(1).sortWithinPartitions(by.map(col): _*)
-      .write.mode("overwrite").option("compression", "zstd").parquet(path)
+    overwriteZstd(df.repartition(1).sortWithinPartitions(by.map(col): _*), path)
+
+  /** The one parquet writer of every sink: overwrite, zstd. */
+  private def overwriteZstd(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
 }

@@ -5170,22 +5170,6 @@ object Extensions {
     s"(CASE WHEN ($proj) >= 0 THEN ${1L << j} ELSE 0 END)"
   }.mkString(" + ")
 
-  // banded sign-LSH band key — mirrors VectorOps.signLshBands (weights
-  // ((i0+1)*(j+1)*7919 + i0*31 + j*17) % 1009 - 504 with 0-based dim i0;
-  // DuckDB's generate_series i is 1-based, so i0+1 = i). All operands are
-  // non-negative before the mod, so SQL % and Scala % agree exactly; the
-  // weight product is forced to BIGINT (Scala computes it in Long) —
-  // in INT32 `i * (j+1) * 7919` would overflow (DuckDB errors out) once
-  // the embedding dim approaches ~8.5k at the high planes.
-  private def duckBandKey(band: Int, rowBits: Int): String =
-    (0 until rowBits).map { r =>
-      val j = band * rowBits + r
-      val proj = "list_aggregate(list_transform(generate_series(1, len(embedding)), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * " +
-        s"CAST((CAST(i AS BIGINT) * ${j + 1} * 7919 + (i-1) * 31 + $j * 17) % 1009 - 504 AS DOUBLE)), 'sum')"
-      s"(CASE WHEN ($proj) >= 0 THEN ${1L << r} ELSE 0 END)"
-    }.mkString(" + ")
-
   /** The DuckDB banding oracles below were once GENERATED at a fixed
     * rowBits (8) with a fail-loud autoRowBits tripwire on the gate side
     * — which the r19 scale-decade sweep tripped exactly as designed
@@ -5235,11 +5219,16 @@ object Extensions {
               WHERE (CAST(8 AS BIGINT) << r) >= n)"""
   }
 
-  /** The [[duckBandKey]] bit-pack with rowBits as a RUNTIME column
-    * (`rb` from the [[duckRbCte]] cross join, `band_idx` from the band
-    * series): plane j = band_idx·rb + (t−1) for bit t in 1..rb, the
-    * same `bandWeight` lattice — verified term-for-term equal to the
-    * statically generated key at rb ∈ {8, 11, 12}. */
+  /** Banded sign-LSH band key — mirrors VectorOps.signLshBands (weights
+    * ((i0+1)*(j+1)*7919 + i0*31 + j*17) % 1009 - 504 with 0-based dim
+    * i0; DuckDB's generate_series i is 1-based, so i0+1 = i) — with
+    * rowBits as a RUNTIME column (`rb` from the [[duckRbCte]] cross
+    * join, `band_idx` from the band series): plane j = band_idx·rb +
+    * (t−1) for bit t in 1..rb. All operands are non-negative before the
+    * mod, so SQL % and Scala % agree exactly; the weight product is
+    * forced to BIGINT (Scala computes it in Long) — in INT32
+    * `i * (j+1) * 7919` would overflow (DuckDB errors out) once the
+    * embedding dim approaches ~8.5k at the high planes. */
   private val duckDynBandKey: String =
     """CAST(list_aggregate(list_transform(generate_series(1, rb), t ->
         CASE WHEN list_aggregate(list_transform(generate_series(1, len(embedding)),

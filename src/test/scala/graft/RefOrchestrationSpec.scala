@@ -6,26 +6,29 @@ import graft.queries.RefFixtures
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Laws for the file-arrival incremental driver (the reference DAG's
-  * scheduler semantics, `dags/etl.py:148-157`): exactly-once pickup of
-  * arrived files across runs, no-op on an idle re-run (`catchup=False`),
-  * and byte-level determinism of every sink so a retried/replayed run is
-  * indistinguishable from the first. The incremental ≡ batch value law
-  * is gated in CORRECTNESS (`ref_pipeline_incremental` vs the DuckDB
-  * one-shot join); this spec pins the orchestration behaviors the oracle
-  * can't see. */
+/** Laws for the two ETL entry points (the reference DAG's scheduler
+  * semantics, `dags/etl.py:148-157`): exactly-once pickup of arrived
+  * files across incremental runs, no-op on an idle re-run
+  * (`catchup=False`), byte-level determinism of every sink so a
+  * retried/replayed run is indistinguishable from the first, batch ≡
+  * incremental over the same inputs, and one writer per outDir. The
+  * incremental ≡ one-shot value law is gated in CORRECTNESS
+  * (`ref_pipeline_incremental` vs the DuckDB one-shot join); this spec
+  * pins the orchestration behaviors the oracle can't see. */
 class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
   /** file name → md5 of contents for every regular file under dir,
-    * excluding the checkpoint (offset logs are run bookkeeping). */
-  private def inventory(dir: String): Map[String, String] = {
+    * excluding the checkpoint (offset logs are run bookkeeping) unless
+    * `checkpoint` is set. */
+  private def inventory(dir: String,
+                        checkpoint: Boolean = false): Map[String, String] = {
     val root = Paths.get(dir)
     if (!Files.exists(root)) Map.empty
     else Files.walk(root).iterator().asScala
-      .filter(p => Files.isRegularFile(p) &&
-        !root.relativize(p).toString.contains("_checkpoint"))
+      .filter(p => Files.isRegularFile(p) && (checkpoint ||
+        !root.relativize(p).toString.contains("_checkpoint")))
       .map { p =>
         val md = java.security.MessageDigest.getInstance("MD5")
         root.relativize(p).toString ->
@@ -37,6 +40,25 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("refpipe-spec")
     (s"$root/in", s"$root/out")
   }
+
+  /** Dimension sources plus fact chunk 0, staged both ways: as the
+    * arrival `orders/chunk0.csv` and as the batch input `orders.csv`. */
+  private def stageBoth(in: String): Unit = {
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
+    Files.copy(Paths.get(s"$in/orders/chunk0.csv"), Paths.get(s"$in/orders.csv"))
+  }
+
+  /** An entry point and what its re-run over unchanged facts returns,
+    * given the first run's summary. */
+  private case class EntryPoint(name: String,
+                                run: (String, String) => RefOrchestration.RunSummary,
+                                rerun: RefOrchestration.RunSummary => RefOrchestration.RunSummary)
+
+  private val entryPoints = Seq(
+    EntryPoint("runBatch", RefOrchestration.runBatch(spark, _, _), identity),
+    EntryPoint("runIncremental", RefOrchestration.runIncremental(spark, _, _),
+      _ => RefOrchestration.RunSummary(0, 0)))
 
   test("arrived files are processed exactly once; idle re-run is a byte-level no-op") {
     val (in, out) = freshRoot()
@@ -163,54 +185,56 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an mtime-only source change rewrites the sink with identical bytes") {
-    val (in, out) = freshRoot()
-    RefFixtures.stageDims(spark, sf, in)
-    RefFixtures.stageFactChunk(spark, sf, in, 0)
-    RefOrchestration.runIncremental(spark, in, out)
-    val before = Seq("users", "products").map(t => inventory(s"$out/$t"))
-    for (f <- Seq("products.csv", "user_info.json")) {
-      val p = Paths.get(s"$in/$f")
-      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(
-        Files.getLastModifiedTime(p).toMillis + 10000))
-    }
-    assert(RefOrchestration.runIncremental(spark, in, out) ==
-      RefOrchestration.RunSummary(0, 0))
-    val after = Seq("users", "products").map(t => inventory(s"$out/$t"))
-    for (((b, a), t) <- before.zip(after).zip(Seq("users", "products"))) {
-      assert(partFiles(a).intersect(partFiles(b)).isEmpty,
-        s"$t sink was not rewritten after its source's mtime moved")
-      // determinism law: a rewrite from identical input is byte-identical
-      assert(contentHashes(a) == contentHashes(b),
-        s"$t dimension rewrite is not byte-deterministic")
+    for (e <- entryPoints) {
+      val (in, out) = freshRoot()
+      stageBoth(in)
+      val r1 = e.run(in, out)
+      val before = Seq("users", "products").map(t => inventory(s"$out/$t"))
+      for (f <- Seq("products.csv", "user_info.json")) {
+        val p = Paths.get(s"$in/$f")
+        Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(
+          Files.getLastModifiedTime(p).toMillis + 10000))
+      }
+      assert(e.run(in, out) == e.rerun(r1), e.name)
+      val after = Seq("users", "products").map(t => inventory(s"$out/$t"))
+      for (((b, a), t) <- before.zip(after).zip(Seq("users", "products"))) {
+        assert(partFiles(a).intersect(partFiles(b)).isEmpty,
+          s"${e.name}: $t sink was not rewritten after its source's mtime moved")
+        // determinism law: a rewrite from identical input is byte-identical
+        assert(contentHashes(a) == contentHashes(b),
+          s"${e.name}: $t dimension rewrite is not byte-deterministic")
+      }
     }
   }
 
   test("a deleted sink or a missing _source marker leads to a rewrite") {
-    val (in, out) = freshRoot()
-    RefFixtures.stageDims(spark, sf, in)
-    RefFixtures.stageFactChunk(spark, sf, in, 0)
-    RefOrchestration.runIncremental(spark, in, out)
-    val users0 = inventory(s"$out/users")
-    val products0 = inventory(s"$out/products")
+    for (e <- entryPoints) {
+      val (in, out) = freshRoot()
+      stageBoth(in)
+      e.run(in, out)
+      val users0 = inventory(s"$out/users")
+      val products0 = inventory(s"$out/products")
 
-    // deleted sink
-    Files.walk(Paths.get(s"$out/users")).iterator().asScala.toSeq.reverse
-      .foreach(Files.delete(_))
-    RefFixtures.stageFactChunk(spark, sf, in, 1)
-    assert(RefOrchestration.runIncremental(spark, in, out).batches == 1)
-    val users1 = inventory(s"$out/users")
-    assert(partFiles(users1).nonEmpty && users1.keySet.contains(RefOrchestration.SourceMarker))
-    assert(contentHashes(users1) == contentHashes(users0))
-    assert(inventory(s"$out/products") == products0)
+      // deleted sink
+      Files.walk(Paths.get(s"$out/users")).iterator().asScala.toSeq.reverse
+        .foreach(Files.delete(_))
+      RefFixtures.stageFactChunk(spark, sf, in, 1)
+      assert(e.run(in, out).batches == 1, e.name)
+      val users1 = inventory(s"$out/users")
+      assert(partFiles(users1).nonEmpty &&
+        users1.keySet.contains(RefOrchestration.SourceMarker), e.name)
+      assert(contentHashes(users1) == contentHashes(users0), e.name)
+      assert(inventory(s"$out/products") == products0, e.name)
 
-    // write committed, marker never written (a crash in between)
-    Files.delete(Paths.get(s"$out/products/${RefOrchestration.SourceMarker}"))
-    RefOrchestration.runIncremental(spark, in, out)
-    val products1 = inventory(s"$out/products")
-    assert(partFiles(products1).intersect(partFiles(products0)).isEmpty,
-      "products sink without a marker was not rewritten")
-    assert(contentHashes(products1) == contentHashes(products0))
-    assert(inventory(s"$out/users") == users1)
+      // write committed, marker never written (a crash in between)
+      Files.delete(Paths.get(s"$out/products/${RefOrchestration.SourceMarker}"))
+      e.run(in, out)
+      val products1 = inventory(s"$out/products")
+      assert(partFiles(products1).intersect(partFiles(products0)).isEmpty,
+        s"${e.name}: products sink without a marker was not rewritten")
+      assert(contentHashes(products1) == contentHashes(products0), e.name)
+      assert(inventory(s"$out/users") == users1, e.name)
+    }
   }
 
   test("a batch replayed after a crash before its commit rewrites its partition byte-identically") {
@@ -237,5 +261,125 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
       "replayed batch partition is not byte-identical")
     assert(RefOrchestration.readOrdersSink(spark, out).count() == r1.ordersRows,
       "replay appended duplicate rows")
+  }
+
+  // ---- batch entry point ------------------------------------------------
+
+  /** `body`'s result and the shuffle bytes its tasks wrote. */
+  private def withShuffleBytes[T](body: => T): (T, Long) = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m =>
+          n.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+      (r, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("runBatch and runIncremental over the same inputs write the same sinks") {
+    val (in, outInc) = freshRoot()
+    stageBoth(in)
+    val outBatch = s"${Paths.get(outInc).getParent}/out-batch"
+    val rB = RefOrchestration.runBatch(spark, in, outBatch)
+    val rI = RefOrchestration.runIncremental(spark, in, outInc)
+    assert(rB == RefOrchestration.RunSummary(1, rI.ordersRows) && rI.ordersRows > 0,
+      s"batch $rB vs incremental $rI")
+    val batch = RefOrchestration.readOrdersSink(spark, outBatch)
+    val inc = RefOrchestration.readOrdersSink(spark, outInc)
+    assert(batch.count() == rB.ordersRows)
+    assert(batch.exceptAll(inc).isEmpty && inc.exceptAll(batch).isEmpty,
+      "batch orders sink != incremental orders sink")
+    for (t <- Seq("users", "products")) {
+      assert(contentHashes(inventory(s"$outBatch/$t")) ==
+        contentHashes(inventory(s"$outInc/$t")), s"$t sinks differ")
+      val marker = (o: String) =>
+        Files.readString(Paths.get(s"$o/$t/${RefOrchestration.SourceMarker}"))
+      assert(marker(outBatch) == marker(outInc), s"$t _source markers differ")
+    }
+  }
+
+  test("a runBatch rerun keeps the dimension sinks, rewrites orders " +
+    "byte-identically and shuffles nothing") {
+    val (in, out) = freshRoot()
+    stageBoth(in)
+    // the first run writes the dimension sinks through one sorting task
+    val (r1, firstShuffled) =
+      withShuffleBytes(RefOrchestration.runBatch(spark, in, out))
+    assert(firstShuffled > 0, "the listener saw no shuffle in the dimension writes")
+    val dims = () => (inventory(s"$out/users"), inventory(s"$out/products"))
+    val dimsBefore = dims()
+    val orders1 = inventory(s"$out/orders")
+    val (r2, shuffled) = withShuffleBytes(RefOrchestration.runBatch(spark, in, out))
+    assert(r2 == r1)
+    assert(dims() == dimsBefore,
+      "a rerun over unchanged sources rewrote a dimension sink")
+    val orders2 = inventory(s"$out/orders")
+    assert(partFiles(orders2).intersect(partFiles(orders1)).isEmpty,
+      "the rerun did not rewrite the orders sink")
+    assert(contentHashes(orders2) == contentHashes(orders1),
+      "orders rewrite is not byte-deterministic")
+    assert(shuffled == 0L, s"the rerun wrote $shuffled shuffle bytes")
+  }
+
+  test("runBatch refuses an incremental outDir before writing anything") {
+    val (in, out) = freshRoot()
+    stageBoth(in)
+    RefOrchestration.runIncremental(spark, in, out)
+    val before = inventory(out, checkpoint = true)
+    val ex = intercept[IllegalArgumentException] {
+      RefOrchestration.runBatch(spark, in, out)
+    }
+    assert(ex.getMessage.contains("_checkpoint"), ex.getMessage)
+    assert(inventory(out, checkpoint = true) == before,
+      "a refused runBatch changed the incremental outDir")
+  }
+
+  test("an overlapping run refuses loudly naming the holder; a stale " +
+    "lease is taken over") {
+    val leaseFile = graft.operators.Dedup.LeaseFile
+    def plantLease(out: String, ts: Long): Unit = {
+      val props = new java.util.Properties()
+      props.setProperty("token", "11112222-3333-4444-5555-666677778888")
+      props.setProperty("op", "otherWriter.run")
+      props.setProperty("ts", ts.toString)
+      val w = Files.newOutputStream(Paths.get(s"$out/$leaseFile"))
+      try props.store(w, "test") finally w.close()
+    }
+    for (e <- entryPoints) {
+      val (in, out) = freshRoot()
+      stageBoth(in)
+      e.run(in, out)
+      // pending work for the refused run: a changed user_info.json and,
+      // for the incremental run, an arrived chunk
+      val info = Paths.get(s"$in/user_info.json")
+      Files.setLastModifiedTime(info, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(info).toMillis + 10000))
+      RefFixtures.stageFactChunk(spark, sf, in, 1)
+      val sinks = () => inventory(out, checkpoint = true)
+        .filter { case (k, _) => !k.contains(leaseFile) }
+      val before = sinks()
+      val users0 = inventory(s"$out/users")
+
+      plantLease(out, System.currentTimeMillis())
+      val ex = intercept[IllegalArgumentException](e.run(in, out))
+      assert(ex.getMessage.contains("otherWriter.run"),
+        s"${e.name}: refusal does not name the holder: ${ex.getMessage}")
+      assert(sinks() == before, s"${e.name}: a refused run changed the outDir")
+
+      // the holder is long dead: the run takes over and completes
+      plantLease(out, System.currentTimeMillis() -
+        graft.operators.IndexLease.ttlMs - 60000L)
+      assert(e.run(in, out).batches == 1, e.name)
+      assert(partFiles(inventory(s"$out/users")).intersect(partFiles(users0)).isEmpty,
+        s"${e.name}: the takeover run did not refresh users")
+      assert(!inventory(out).keys.exists(_.contains(leaseFile)),
+        s"${e.name}: lease files left after the run")
+    }
   }
 }
