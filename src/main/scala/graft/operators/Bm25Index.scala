@@ -26,8 +26,6 @@ import org.apache.spark.sql.functions._
   *    into the same table (df is distributive over signed
   *    contributions — the `Maintain.mergeAggStateWithDeletes`
   *    argument), so the fold stays exact under takedowns too;
-  *  - `stats/` — (n, s) per-batch signed partials, same fold law
-  *    (N = Σ n, S = Σ s) — two driver longs off a ≤ |batches|-row read;
   *  - `tomb/` — (doc_id, shadow_upto) per-batch SHADOW tombstones
   *    written by [[delete]] (`Dedup.ShadowCol`): each kills the doc's
   *    rows from batches ≤ its `shadow_upto` (the marker at delete
@@ -35,9 +33,15 @@ import org.apache.spark.sql.functions._
   *    delete+insert UPDATE within one CDC batch — serves its new
   *    image. The serving path masks its (already query-term-bounded)
   *    match stream against them; dead postings stay on disk until
-  *    [[rebuild]] or [[compact]] folds them away.
+  *    [[rebuild]] or [[compact]] folds them away;
+  *  - the metadata file — the commit record: `kind`,
+  *    `last_committed_batch`, and the live corpus totals (N, S) as
+  *    `n_docs` / `n_tokens` (as the minhash index keeps `n_docs`). Each
+  *    write adds its batch's signed (n, s) to the pre-batch totals in
+  *    the same rename that advances the marker, so serving reads (N, S)
+  *    with no Spark job.
   *
-  * Because every statistic folds exactly — including the negative
+  * Because every statistic stays exact — including the negative
   * delete partials — a served board equals the inline
   * [[TextOps.bm25TopK]] over (base ∪ all committed batches) −
   * committed tombstones BIT FOR BIT, at any append/delete count:
@@ -52,19 +56,21 @@ import org.apache.spark.sql.functions._
   * [[Dedup.swapInDir]] (mid-build crash leaves the old state — or
   * nothing — at `dir`; the delete+rename instant is loudly unreadable
   * and repaired by [[Dedup.recoverSwap]]). [[append]]/[[delete]] write
-  * their tables non-atomically but the commit marker strictly LAST, so
+  * their tables non-atomically but the commit record strictly LAST, so
   * for batchId ≥ 0 calls [[Dedup.committedOnly]] reads exclude a torn
-  * call's partitions and a replayed batchId either skips (marker holds
-  * it) or dynamically overwrites its own partitions. A batchId=None
+  * call's partitions, a torn call leaves (N, S) at the pre-batch
+  * totals, and a replayed batchId either skips (marker holds it) or
+  * dynamically overwrites its own partitions, adding its (n, s) to the
+  * same pre-batch totals. A batchId=None
   * (synchronous) call writes into the always-committed base partition
   * with NO torn-write protection — it is a one-shot under the
   * single-writer contract, exactly like `appendToMinhashIndex`'s
   * synchronous path; route retried/streamed traffic through batchIds.
   * Appends assume batch doc_ids are not currently LIVE in the index
-  * (a live id re-ingested without a delete double-counts df/stats —
+  * (a live id re-ingested without a delete double-counts df/(N, S) —
   * the same uniqueness contract the minhash index's append carries).
   * A DELETED id may be re-ingested through any batched path: its old
-  * rows and stats were retracted at delete time and the shadow
+  * rows and (n, s) were retracted at delete time and the shadow
   * tombstone spares the new batch — an update is delete+insert, in
   * one CDC batch or across batches. Only the synchronous
   * (batchId=None) append refuses re-inserts, because its rows land in
@@ -76,7 +82,7 @@ object Bm25Index {
   /** Fixed on-disk table schemas, passed EXPLICITLY to every read:
     * parquet schema inference fires a footer-reading Spark job per
     * `spark.read.parquet` call, and the sharded serve
-    * ([[ShardedIndex.crossBm25TopKSharded]]) opens 3 tables × S shards
+    * ([[ShardedIndex.crossBm25TopKSharded]]) opens 2 tables × S shards
     * — at the S-in-the-hundreds sizing that is hundreds of tiny
     * sequential driver jobs per serve, for schemas that never change
     * (they are this writer's own fixed layout). Explicit schemas make
@@ -100,24 +106,45 @@ object Bm25Index {
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField(Dedup.IngestBatchCol,
       org.apache.spark.sql.types.LongType)))
-  private val statsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("s",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField(Dedup.IngestBatchCol,
-      org.apache.spark.sql.types.LongType)))
 
   private def readPostings(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(postingsSchema).parquet(s"$root/postings")
   private def readDfTable(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(dfSchema).parquet(s"$root/df")
-  private def readStatsTable(spark: SparkSession, root: String): DataFrame =
-    spark.read.schema(statsSchema).parquet(s"$root/stats")
 
-  private def validate(meta: Map[String, String], dir: String): Unit =
+  /** Commit-record keys of the live corpus totals: N (documents) and S
+    * (Σ document lengths). */
+  private val NDocs = "n_docs"
+  private val NTokens = "n_tokens"
+
+  private def validate(meta: Map[String, String], dir: String): Unit = {
     require(meta.get("kind").contains(Kind),
       s"$dir is not a BM25 index (kind=${meta.getOrElse("kind", "<absent>")})")
+    require(meta.contains(NDocs) && meta.contains(NTokens),
+      s"BM25 index at $dir has no (N, S) in its metadata ($NDocs and " +
+        s"$NTokens are required) — rewrite it with Bm25Index.write")
+  }
+
+  /** Σ (n, s) over (n, s) rows ([[TextOps.bm25StatsPartials]],
+    * negated for retractions) — one `.head()`. */
+  private def totalsOf(partials: DataFrame): (Long, Long) = {
+    val r = partials.agg(coalesce(sum(col("n")), lit(0L)),
+      coalesce(sum(col("s")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** `meta` with a batch's signed (n, s) added to its (N, S) totals. */
+  private def addTotals(meta: Map[String, String],
+                        partials: DataFrame): Map[String, String] = {
+    val (n, s) = totalsOf(partials)
+    meta + (NDocs -> (meta(NDocs).toLong + n).toString) +
+      (NTokens -> (meta(NTokens).toLong + s).toString)
+  }
+
+  /** Negated (n, s) partials of retracted postings. */
+  private def retracted(delPost: DataFrame): DataFrame =
+    TextOps.bm25StatsPartials(delPost)
+      .select((-col("n")).as("n"), (-col("s")).as("s"))
 
   private def dfPartials(postings: DataFrame): DataFrame =
     postings.groupBy("term").agg(count(lit(1)).as("df"))
@@ -130,40 +157,50 @@ object Bm25Index {
                              meta: Map[String, String]): Option[DataFrame] =
     Dedup.committedTombsAt(spark, s"$dir/tomb", meta, "doc_id")
 
+  /** The one whole-index writer behind [[write]], [[writeFromPostings]]
+    * and [[rebuild]]: `post` and its df partials land in a fresh
+    * version, then the commit record — `base` with the (N, S) of
+    * `post` — strictly last, and the version swaps in whole
+    * ([[Dedup.swapInDir]]): stale batch partitions and tombstones of the
+    * old version never ride into the new one. `post` must be
+    * materialized; both tables and the totals read it. */
+  private def swapInIndex(spark: SparkSession, dir: String, post: DataFrame,
+                          base: Map[String, String]): Unit = {
+    val (nDocs, sTok) = totalsOf(TextOps.bm25StatsPartials(post))
+    val meta = base + (NDocs -> nDocs.toString) + (NTokens -> sTok.toString)
+    Dedup.swapInDir(spark, dir) { tmp =>
+      // two independent writes off the one postings frame — overlapped
+      // (Par, guide §2.6); the commit record strictly after
+      Par.run(Seq(
+        () => Dedup.writeIndexTable(post, -1L, s"$tmp/postings",
+          overwriteAll = true),
+        () => Dedup.writeIndexTable(dfPartials(post), -1L, s"$tmp/df",
+          overwriteAll = true)))
+      Dedup.writeMeta(spark, tmp, meta)
+    }
+  }
+
   /** Build the index over `corpus` (one tokenize pass; postings feed
-    * the df and stats folds off the same materialized table — the
-    * [[TextOps.bm25TopK]] branch-reuse shape, persisted). Lands via a
-    * whole-directory swap: writing over an existing index replaces
-    * EVERYTHING — stale batch partitions and tombstones from the old
-    * index can never ride into the new one. */
+    * the df fold and the (N, S) totals off the same materialized table
+    * — the [[TextOps.bm25TopK]] branch-reuse shape, persisted). Writing
+    * over an existing index replaces EVERYTHING. */
   def write(corpus: DataFrame, dir: String, id: String = "doc_id",
             text: String = "text"): Unit = {
     val spark = corpus.sparkSession
     IndexLease.withLease(spark, dir, "Bm25Index.write") {
-    val (post, release) = Dedup.materializeTracked(
-      TextOps.docTermFreqs(corpus, id, text))
-    try {
-      Dedup.swapInDir(spark, dir) { tmp =>
-        // three independent writes off the one materialized postings
-        // pass — overlapped (Par, guide §2.6); meta strictly after
-        Par.run(Seq(
-          () => Dedup.writeIndexTable(post, -1L, s"$tmp/postings",
-            overwriteAll = true),
-          () => Dedup.writeIndexTable(dfPartials(post), -1L, s"$tmp/df",
-            overwriteAll = true),
-          () => Dedup.writeIndexTable(TextOps.bm25StatsPartials(post), -1L,
-            s"$tmp/stats", overwriteAll = true)))
-        Dedup.writeMeta(spark, tmp, Map("kind" -> Kind))
-      }
-    } finally release()
+      val (post, release) = Dedup.materializeTracked(
+        TextOps.docTermFreqs(corpus, id, text))
+      try swapInIndex(spark, dir, post, Map("kind" -> Kind))
+      finally release()
     }
   }
 
-  /** Append a batch: its postings, df partials and stats partials land
-    * in their own `ingest_batch` partitions; the marker commits all
-    * three. Replay-idempotent for batchId ≥ 0 (skip if committed,
-    * partition-overwrite if torn); batchId=None is a one-shot with no
-    * torn-write protection (see the object doc). */
+  /** Append a batch: its postings and df partials land in their own
+    * `ingest_batch` partitions; the commit record adds the batch's
+    * (n, s) to (N, S) and commits both. Replay-idempotent for
+    * batchId ≥ 0 (skip if committed, partition-overwrite if torn);
+    * batchId=None is a one-shot with no torn-write protection (see the
+    * object doc). */
   def append(spark: SparkSession, dir: String, newDocs: DataFrame,
              batchId: Option[Long] = None, id: String = "doc_id",
              text: String = "text"): Unit =
@@ -179,15 +216,14 @@ object Bm25Index {
       TextOps.docTermFreqs(newDocs, id, text))
     try {
       val part = batchId.getOrElse(-1L)
-      // three independent batch-partition writes off the materialized
+      // two independent batch-partition writes off the materialized
       // postings — overlapped (Par, guide §2.6); marker strictly last
       Par.run(Seq(
         () => Dedup.writeIndexTable(post, part, s"$root/postings"),
-        () => Dedup.writeIndexTable(dfPartials(post), part, s"$root/df"),
-        () => Dedup.writeIndexTable(TextOps.bm25StatsPartials(post), part,
-          s"$root/stats")))
+        () => Dedup.writeIndexTable(dfPartials(post), part, s"$root/df")))
       Dedup.writeMeta(spark, root,
-        meta ++ batchId.map(b => "last_committed_batch" -> b.toString))
+        addTotals(meta, TextOps.bm25StatsPartials(post))
+          ++ batchId.map(b => "last_committed_batch" -> b.toString))
     } finally release()
   }
 
@@ -198,19 +234,20 @@ object Bm25Index {
     *
     * Mechanics: the retraction is derived FROM THE STORED POSTINGS —
     * the deleted docs' (term, tf, dl) rows are exactly what their
-    * ingestion contributed, so writing their df counts and (n, s)
-    * stats NEGATED into the same partial tables makes every read-side
-    * fold exact over the live corpus (df and (N, S) are distributive
-    * over signed contributions — `Maintain.mergeAggStateWithDeletes`
-    * applied to retrieval). The ids land in `tomb/` as SHADOW
-    * tombstones (`Dedup.ShadowCol` — they kill only rows from batches
-    * ≤ the marker at delete time, so a later batched re-insert of the
-    * id serves and re-counts); the serving path masks its match
-    * stream against them, and postings rows stay on disk until
-    * [[rebuild]]/[[compact]] fold them away. The retraction targets
-    * only ids the index currently holds LIVE, so a double-delete (or
-    * a delete of an unknown id) retracts and tombstones nothing.
-    * Cost: one postings semi-join (vocab of the deleted docs) + three
+    * ingestion contributed, so writing their df counts NEGATED into the
+    * df partials and subtracting their (n, s) from the commit record's
+    * (N, S) keeps both exact over the live corpus (df and (N, S) are
+    * distributive over signed contributions —
+    * `Maintain.mergeAggStateWithDeletes` applied to retrieval). The ids
+    * land in `tomb/` as SHADOW tombstones (`Dedup.ShadowCol` — they
+    * kill only rows from batches ≤ the marker at delete time, so a
+    * later batched re-insert of the id serves and re-counts); the
+    * serving path masks its match stream against them, and postings
+    * rows stay on disk until [[rebuild]]/[[compact]] fold them away.
+    * The retraction targets only ids the index currently holds LIVE,
+    * so a double-delete (or a delete of an unknown id) retracts and
+    * tombstones nothing.
+    * Cost: one postings semi-join (vocab of the deleted docs) + two
     * batch-bounded writes — never a corpus rescan.
     *
     * Replay contract: identical to [[append]] — batchId ≥ 0 deletes
@@ -243,20 +280,16 @@ object Bm25Index {
         livePost.join(fresh, Seq("doc_id"), "left_semi"))
       try {
         val part = batchId.getOrElse(-1L)
-        // three independent writes off the two materialized frames —
+        // two independent writes off the two materialized frames —
         // overlapped (Par, guide §2.6); marker strictly last
         Par.run(Seq(
           () => Dedup.writeTombs(fresh, Dedup.lastCommittedBatch(meta),
             part, s"$root/tomb"),
           () => Dedup.writeIndexTable(
             dfPartials(delPost).select(col("term"), (-col("df")).as("df")),
-            part, s"$root/df"),
-          () => Dedup.writeIndexTable(
-            TextOps.bm25StatsPartials(delPost)
-              .select((-col("n")).as("n"), (-col("s")).as("s")),
-            part, s"$root/stats")))
-        Dedup.writeMeta(spark, root,
-          meta ++ batchId.map(b => "last_committed_batch" -> b.toString))
+            part, s"$root/df")))
+        Dedup.writeMeta(spark, root, addTotals(meta, retracted(delPost))
+          ++ batchId.map(b => "last_committed_batch" -> b.toString))
       } finally relP()
     } finally relT()
   }
@@ -268,17 +301,18 @@ object Bm25Index {
     * commits the marker, the second would skip), and two
     * partition-overwrite writes into the same `ingest_batch` would
     * clobber each other — so the combined op writes the batch's insert
-    * postings, its SIGNED df/(N,S) partials (insert positives ∪ delete
-    * negatives in one table write each), and its tombstones into one
-    * partition, marker strictly last. Deletes apply FIRST, to the
-    * PRE-batch state (the shadow tombstone's `shadow_upto` is the
-    * pre-batch marker, so it kills no row of this batch): a
-    * delete+insert of one id in the batch is an UPDATE — the old
-    * image's stats retract, the new image indexes and counts — and a
-    * re-insert of an id deleted in an earlier batch serves the same
-    * way, no rebuild required. Inserting a currently-live id WITHOUT
-    * deleting it in the same batch remains the double-count
-    * caller-contract violation it always was. */
+    * postings, its SIGNED df partials (insert positives ∪ delete
+    * negatives in one table write), and its tombstones into one
+    * partition, then commits the batch's signed (n, s) with the
+    * marker, strictly last. Deletes apply FIRST, to the PRE-batch
+    * state (the shadow tombstone's `shadow_upto` is the pre-batch
+    * marker, so it kills no row of this batch): a delete+insert of one
+    * id in the batch is an UPDATE — the old image's (n, s) retracts,
+    * the new image indexes and counts — and a re-insert of an id
+    * deleted in an earlier batch serves the same way, no rebuild
+    * required. Inserting a currently-live id WITHOUT deleting it in the
+    * same batch remains the double-count caller-contract violation it
+    * always was. */
   def applyCdc(spark: SparkSession, dir: String, newDocs: DataFrame,
                tombstones: DataFrame, batchId: Long,
                id: String = "doc_id", text: String = "text"): Unit =
@@ -311,7 +345,7 @@ object Bm25Index {
       val (post, relI) = Dedup.materializeTracked(
         TextOps.docTermFreqs(newDocs, id, text))
       try {
-        // four independent batch-partition writes off the three
+        // three independent batch-partition writes off the two
         // materialized frames — overlapped (Par, guide §2.6); marker
         // strictly last
         Par.run(Seq(
@@ -321,14 +355,11 @@ object Bm25Index {
           () => Dedup.writeIndexTable(
             dfPartials(post).unionByName(
               dfPartials(delPost).select(col("term"), (-col("df")).as("df"))),
-            batchId, s"$root/df"),
-          () => Dedup.writeIndexTable(
-            TextOps.bm25StatsPartials(post).unionByName(
-              TextOps.bm25StatsPartials(delPost)
-                .select((-col("n")).as("n"), (-col("s")).as("s"))),
-            batchId, s"$root/stats")))
+            batchId, s"$root/df")))
         Dedup.writeMeta(spark, root,
-          meta + ("last_committed_batch" -> batchId.toString))
+          addTotals(meta, TextOps.bm25StatsPartials(post)
+            .unionByName(retracted(delPost)))
+            + ("last_committed_batch" -> batchId.toString))
       } finally relI()
     } finally relT()
   }
@@ -336,20 +367,20 @@ object Bm25Index {
   /** Folds a CDC/append-fed index's per-batch partitions back into
     * `targetFiles` files per table — the retrieval twin of
     * `Dedup.compactMinhashIndex`: at micro-batch cadence postings, the
-    * signed df/(N,S) partials, and the tombstones fragment one file
-    * set per batch, the classic streaming-sink killer. Committed rows
-    * are preserved EXACTLY (the signed partials keep folding to the
-    * same totals), so a readable mix of compacted and uncompacted
+    * signed df partials, and the tombstones fragment one file set per
+    * batch, the classic streaming-sink killer. Committed rows are
+    * preserved EXACTLY (the signed partials keep folding to the same
+    * totals), so a readable mix of compacted and uncompacted
     * TABLES is content-identical and the per-table swap sequence is
     * safe here — unlike [[rebuild]], whose content changes and
-    * therefore swaps one directory. `last_committed_batch` survives in
-    * the metadata: folded batches live on in the base partition, so
-    * replayed batchIds still skip. Tombstoned postings are folded away
-    * physically and the tombstone table dropped (squashing batches
-    * into the base would erase the shadow ordering — see
-    * `Dedup.compactTables`); the signed df/(N,S) partials fold
-    * verbatim, so every read-side total is unchanged. Offline
-    * single-writer maintenance. */
+    * therefore swaps one directory. The metadata is copied as it is —
+    * `last_committed_batch` (folded batches live on in the base
+    * partition, so replayed batchIds still skip) and (N, S) alike.
+    * Tombstoned postings are folded away physically and the tombstone
+    * table dropped (squashing batches into the base would erase the
+    * shadow ordering — see `Dedup.compactTables`); the signed df
+    * partials fold verbatim, so every read-side total is unchanged.
+    * Offline single-writer maintenance. */
   def compact(spark: SparkSession, dir: String,
               targetFiles: Int = 4): Unit =
     IndexLease.withLease(spark, dir, "Bm25Index.compact") {
@@ -357,8 +388,7 @@ object Bm25Index {
       Dedup.compactTables(spark, dir, targetFiles,
         masked = Seq("postings" -> Seq("doc_id", "term", "tf", "dl")),
         idCol = "doc_id",
-        unmasked = Seq("df" -> Seq("term", "df"),
-          "stats" -> Seq("n", "s")))
+        unmasked = Seq("df" -> Seq("term", "df")))
     }
 
   /** Exact global document frequencies: Σ over committed batch
@@ -374,56 +404,32 @@ object Bm25Index {
       .filter(col("df") > 0)
   }
 
-  /** Exact global (N, S): Σ over committed per-batch signed stat
-    * rows. */
+  /** Exact global (N, S) of the live corpus, read from the commit
+    * record — no Spark job. */
   def foldedStats(spark: SparkSession, dir: String): (Long, Long) = {
-    val (n, s) = foldedStatsTolerant(spark, dir)
+    val (n, s) = committedTotals(spark, dir)
     require(n > 0, s"BM25 index at $dir holds no committed documents")
     (n, s)
   }
 
-  /** [[foldedStats]] tolerating a zero-doc state — the per-shard leg of
-    * the sharded fold ([[ShardedIndex.crossBm25TopKSharded]]), where a
-    * takedown may empty ONE shard while the global index stays live;
-    * the n > 0 refusal belongs to whoever owns the global total. */
-  private[graft] def foldedStatsTolerant(spark: SparkSession,
-                                         dir: String): (Long, Long) = {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
+  /** The commit record's (N, S), zero docs allowed — the per-shard leg
+    * of the sharded serves ([[ShardedIndex.crossBm25TopKSharded]]),
+    * where a takedown may empty ONE shard while the global index stays
+    * live; the n > 0 refusal belongs to whoever owns the total. */
+  private[graft] def committedTotals(spark: SparkSession,
+                                     dir: String): (Long, Long) = {
+    val meta = Dedup.readMeta(spark, Dedup.indexRoot(spark, dir))
     validate(meta, dir)
-    val r = Dedup.committedOnly(readStatsTable(spark, root), meta)
-      .agg(sum(col("n")).as("n"), sum(col("s")).as("s")).head()
-    // an empty-corpus write lands one (n=0, s=NULL) partial — both
-    // folds null-coalesce so "zero docs" reads as (0, 0) here and the
-    // caller owns the refusal
-    (if (r.isNullAt(0)) 0L else r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
-  /** The committed signed (n, s) stat partials of the index at `dir`
-    * as a LAZY frame — the per-shard leg of the sharded serve's
-    * one-action global fold: [[ShardedIndex.crossBm25TopKSharded]]
-    * unions S of these and aggregates ONCE, instead of S sequential
-    * per-shard [[foldedStatsTolerant]] `.head()` jobs — at the
-    * S-in-the-hundreds sizing `docs/SCALING.md` recommends, the
-    * difference between one Spark job and hundreds of serve-latency
-    * driver round trips. (Per-shard metadata reads remain — driver-side
-    * filesystem property loads, not Spark jobs.) */
-  private[graft] def statsFrame(spark: SparkSession, dir: String): DataFrame = {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    Dedup.committedOnly(readStatsTable(spark, root), meta)
-      .select("n", "s")
+    (meta(NDocs).toLong, meta(NTokens).toLong)
   }
 
   /** The committed signed df partials of the index at `dir`, RAW
-    * (un-aggregated) and lazy — the df twin of [[statsFrame]]: the
-    * sharded serve unions S of these and runs ONE global
-    * `groupBy(term).sum`, instead of per-shard [[foldedDf]] aggregates
-    * whose S shuffle stages each materialize as their own AQE job
-    * (df is distributive, so one fold over all partials ≡ the fold of
-    * per-shard folds; the df > 0 drop applies to the global sum). */
+    * (un-aggregated) and lazy — the sharded serve unions S of these
+    * and runs ONE global `groupBy(term).sum`, instead of per-shard
+    * [[foldedDf]] aggregates whose S shuffle stages each materialize as
+    * their own AQE job (df is distributive, so one fold over all
+    * partials ≡ the fold of per-shard folds; the df > 0 drop applies to
+    * the global sum). */
   private[graft] def dfPartialsFrame(spark: SparkSession,
                                      dir: String): DataFrame = {
     val root = Dedup.indexRoot(spark, dir)
@@ -675,64 +681,44 @@ object Bm25Index {
     val spark = post.sparkSession
     IndexLease.withLease(spark, dir, "Bm25Index.writeFromPostings") {
       val (p, release) = Dedup.materializeTracked(post)
-      try {
-        Dedup.swapInDir(spark, dir) { tmp =>
-          // three independent writes off the materialized postings —
-          // overlapped (Par, guide §2.6); meta strictly after
-          Par.run(Seq(
-            () => Dedup.writeIndexTable(p, -1L, s"$tmp/postings",
-              overwriteAll = true),
-            () => Dedup.writeIndexTable(dfPartials(p), -1L, s"$tmp/df",
-              overwriteAll = true),
-            () => Dedup.writeIndexTable(TextOps.bm25StatsPartials(p), -1L,
-              s"$tmp/stats", overwriteAll = true)))
-          Dedup.writeMeta(spark, tmp, Map("kind" -> Kind))
-        }
-      } finally release()
+      try swapInIndex(spark, dir, p, Map("kind" -> Kind))
+      finally release()
     }
   }
 
   /** Recomputes df and (N, S) from the LIVE postings (committed minus
-    * tombstoned) and diffs them against the folded signed partials —
-    * the [[graft.operators.IndexAudit]] cross-check that makes a torn
-    * synchronous delete DETECTABLE: a batchId=None [[delete]] performs
-    * three non-atomic writes (tomb, negative df, negative stats), and a
-    * crash mid-call leaves a doc masked while its statistics still
-    * count (or df retracted but N/S not) — skew no marker can diagnose,
-    * because the base partition is always committed. Under any
-    * crash-free history the partials fold EXACTLY to the live
-    * recompute, so any nonzero diff here is that torn write (or a
-    * second writer). Costs one full postings scan — the audit's
-    * countChecks tier, not the metadata tier. Returns
+    * tombstoned) and diffs them against the folded signed df partials
+    * and the commit record's (N, S) — the [[graft.operators.IndexAudit]]
+    * cross-check that makes a torn synchronous delete DETECTABLE: a
+    * batchId=None [[delete]] performs two non-atomic writes (tomb,
+    * negative df) before its metadata rename, and a crash mid-call
+    * leaves a doc masked while its statistics still count (or df
+    * retracted but N/S not) — skew no marker can diagnose, because the
+    * base partition is always committed. Under any crash-free history
+    * the partials and totals match the live recompute EXACTLY, so any
+    * nonzero diff here is that torn write (or a second writer). Costs
+    * one full postings scan — the audit's countChecks tier, not the
+    * metadata tier. Returns
     * (mismatched df terms, N diff, S diff); all-zero = consistent. */
   private[graft] def statsConsistency(spark: SparkSession,
                                       dir: String): (Long, Long, Long) = {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    val committed = Dedup.committedOnly(
-      readPostings(spark, root), meta)
-    val live = Dedup.maskShadowed(committed, "doc_id",
-      committedTombs(spark, root, meta), "doc_id")
-      .select("doc_id", "term", "tf", "dl")
+    val live = livePostings(spark, dir)
     val dfMismatch = dfPartials(live).withColumnRenamed("df", "df_live")
       .join(foldedDf(spark, dir).withColumnRenamed("df", "df_fold"),
         Seq("term"), "full_outer")
       .filter(coalesce(col("df_live"), lit(0L)) =!=
         coalesce(col("df_fold"), lit(0L)))
       .count()
-    val liveStats = TextOps.bm25StatsPartials(live)
-      .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
-        coalesce(sum(col("s")), lit(0L)).as("s")).head()
+    val (nLive, sLive) = totalsOf(TextOps.bm25StatsPartials(live))
     val (nFold, sFold) = foldedStats(spark, dir)
-    (dfMismatch, liveStats.getLong(0) - nFold, liveStats.getLong(1) - sFold)
+    (dfMismatch, nLive - nFold, sLive - sFold)
   }
 
   /** Compaction hygiene (NOT a correctness op — the folds are already
     * exact): fold every committed batch's LIVE postings (appends minus
-    * tombstoned docs) into the base partition, re-derive df/stats from
-    * them, drop the tombstone table, and swap the WHOLE directory in
-    * one rename ([[Dedup.swapInDir]] — a per-table sequence would have
+    * tombstoned docs) into the base partition, re-derive df and (N, S)
+    * from them, drop the tombstone table, and swap the WHOLE directory
+    * in one rename ([[Dedup.swapInDir]] — a per-table sequence would have
     * readable-but-mixed crash windows; the directory swap's only crash
     * window is loudly unreadable and [[Dedup.recoverSwap]]-repairable).
     * Metadata (including the commit marker) survives, so a replayed
@@ -740,30 +726,15 @@ object Bm25Index {
     * and deleted rows are now physically gone. */
   def rebuild(spark: SparkSession, dir: String, targetFiles: Int = 4): Unit =
     IndexLease.withLease(spark, dir, "Bm25Index.rebuild") {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    val committed = Dedup.committedOnly(
-      readPostings(spark, root), meta)
-    val live = Dedup.maskShadowed(committed, "doc_id",
-      committedTombs(spark, root, meta), "doc_id")
-      .select("doc_id", "term", "tf", "dl")
-    val (post, release) = Dedup.materializeTracked(live)
+    val meta = Dedup.readMeta(spark, Dedup.indexRoot(spark, dir))
+    val (post, release) = Dedup.materializeTracked(livePostings(spark, dir))
     try {
       // an all-deleted corpus would rebuild to empty-born tables that
       // no reader can open — refuse with the honest instruction instead
       require(post.head(1).nonEmpty,
         s"Bm25Index.rebuild: every document in $dir is deleted — " +
           "nothing to rebuild; delete the index directory instead")
-      Dedup.swapInDir(spark, dir) { tmp =>
-        Dedup.writeIndexTable(post.coalesce(targetFiles), -1L,
-          s"$tmp/postings", overwriteAll = true)
-        Dedup.writeIndexTable(dfPartials(post).coalesce(targetFiles), -1L,
-          s"$tmp/df", overwriteAll = true)
-        Dedup.writeIndexTable(TextOps.bm25StatsPartials(post), -1L,
-          s"$tmp/stats", overwriteAll = true)
-        Dedup.writeMeta(spark, tmp, meta)
-      }
+      swapInIndex(spark, dir, post.coalesce(targetFiles), meta)
     } finally release()
   }
 }

@@ -1252,7 +1252,7 @@ object Dedup {
     * mask must be applied physically here rather than carried. Served
     * results are unchanged (the mask was already hiding those rows);
     * physical removal simply stops being a rebuild-only event.
-    * `unmasked` tables (BM25's signed df/stats partials) hold no
+    * `unmasked` tables (BM25's signed df partials) hold no
     * per-id rows and fold verbatim — their signed sums are
     * order-free. Reads the serving version LAZILY — safe under pointer
     * commits, which never touch it; coalesce, not repartition — file

@@ -30,13 +30,13 @@ import org.apache.spark.sql.functions._
   * Two tiers, because the checks split cleanly by cost:
   * `countChecks = true` (default) additionally runs the DATA-SCAN
   * checks — committed/uncommitted row counts, live-count vs declared
-  * metadata, the BM25 folded-stats vs live-postings cross-check
-  * ([[Bm25Index.statsConsistency]], the one probe that catches a torn
-  * synchronous delete's silent skew). `countChecks = false` is the
-  * metadata-only fsck — file listings, partition names, metadata,
-  * readability — O(files), never O(rows): the form a 100 TB deployment
-  * runs at page cadence. Uncommitted-partition detection is listing-
-  * based in both tiers (partition NAMES carry the batch id).
+  * metadata, the BM25 df partials and (N, S) vs live-postings
+  * cross-check ([[Bm25Index.statsConsistency]], the one probe that
+  * catches a torn synchronous delete's silent skew). `countChecks =
+  * false` is the metadata-only fsck — file listings, partition names,
+  * metadata, readability — O(files), never O(rows): the form a 100 TB
+  * deployment runs at page cadence. Uncommitted-partition detection is
+  * listing-based in both tiers (partition NAMES carry the batch id).
   *
   * Returns one row per check: (chk, status ∈ OK|WARN|ERROR, detail).
   * Statuses are scale-independent (details carry the counts), so a
@@ -52,7 +52,7 @@ object IndexAudit {
     "minhash-v2" -> Seq("bands", "sets"),
     "signlsh-v2" -> Seq("bands", "vectors"),
     "prefix_index" -> Seq("sets", "df", "prefix"),
-    "bm25_index" -> Seq("postings", "df", "stats"),
+    "bm25_index" -> Seq("postings", "df"),
     "ivf_index" -> Seq("centroids", "assigned"),
     "bpe_vocab" -> Seq("merges"))
 
@@ -346,18 +346,18 @@ object IndexAudit {
               fold.fold(e => e.getMessage,
                 { case (n, s) => s"n=$n s=$s" })))
             // the one probe that catches a TORN synchronous delete: its
-            // three writes land in the always-committed base partition,
-            // so no marker excludes a half-applied retraction — only
+            // writes land in the always-committed base partition, so no
+            // marker excludes a half-applied retraction — only
             // recomputing df/(N,S) from the live postings can expose the
-            // skew (advisor r15). Scan-tier by construction.
+            // skew. Scan-tier by construction.
             val cons = scala.util.Try(
               graft.operators.Bm25Index.statsConsistency(spark, dir))
             rows += (("stats_consistency",
               if (cons.toOption.contains((0L, 0L, 0L))) "OK" else "ERROR",
               cons.fold(e => e.getMessage, { case (dfm, nd, sd) =>
                 if ((dfm, nd, sd) == ((0L, 0L, 0L)))
-                  "folded partials == live recompute"
-                else s"folded partials diverge from live postings " +
+                  "df partials and (N, S) == live recompute"
+                else s"df partials or (N, S) diverge from live postings " +
                   s"(df terms off=$dfm, N off by ${-nd}, S off by " +
                   s"${-sd}) — a torn synchronous delete or a second " +
                   "writer; rebuild restores truth from the live rows" })))

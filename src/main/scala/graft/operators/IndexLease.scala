@@ -108,12 +108,11 @@ object IndexLease {
     fs.mkdirs(new org.apache.hadoop.fs.Path(dir)) // first write on a new home
     def refuse(l: LeaseInfo): Nothing =
       throw new IllegalArgumentException(
-        s"$op refused: index at $dir is being mutated by another writer " +
-          s"(op=${l.op}, lease age ${l.ageMs / 1000}s, token " +
-          s"${l.token.take(8)}…) — concurrent maintenance corrupts " +
-          "silently. Wait for it (the lease is released on completion, " +
-          s"or taken over as stale after ${ttlMs / 1000}s), or if that " +
-          "writer is known dead, delete " + leasePath(dir))
+        s"$op refused: $dir is held by another writer (op=${l.op}, " +
+          s"lease age ${l.ageMs / 1000}s, token ${l.token.take(8)}…). " +
+          "Wait for it (the lease is released on completion, or taken " +
+          s"over as stale after ${ttlMs / 1000}s), or if that writer is " +
+          "known dead, delete " + leasePath(dir))
     status(spark, dir) match {
       case Some(l) if l.ageMs < ttlMs => refuse(l)
       case Some(stale) =>

@@ -689,7 +689,8 @@ object ShardedIndex {
     * unsharded; scores are integer micro-units summed per (query, doc)
     * — order-free. Cost: the same query-term-bounded match stream
     * (each shard contributes its slice, union is one lazy plan — ONE
-    * job, not S), plus a vocab-bounded df fold per shard. */
+    * job, not S), plus a vocab-bounded df fold per shard; (N, S) is a
+    * sum of the shards' commit records, no Spark job. */
   def crossBm25TopKSharded(spark: SparkSession, queries: DataFrame,
                            home: String, k: Int = 5,
                            qid: String = "query_id",
@@ -702,19 +703,7 @@ object ShardedIndex {
     require(m("child_kind") == Bm25Index.Kind,
       s"sharded index at $home holds ${m("child_kind")}, not BM25")
     val dirs = shardDirs(home, m)
-    // global (N, S): the S per-shard signed-partial frames union
-    // LAZILY and fold in ONE aggregate job — per-shard `.head()` folds
-    // would be S sequential driver round trips before the serve even
-    // starts. Emptied shards (a takedown may have drained one)
-    // contribute (0, NULL) partials that the null-coalescing sum
-    // absorbs; only the GLOBAL total is refused.
-    val st = dirs.map(Bm25Index.statsFrame(spark, _))
-      .reduce(_.unionByName(_))
-      .agg(sum(col("n")).as("n"), sum(col("s")).as("s")).head()
-    val nDocs = if (st.isNullAt(0)) 0L else st.getLong(0)
-    val sTok = if (st.isNullAt(1)) 0L else st.getLong(1)
-    require(nDocs > 0,
-      s"sharded BM25 index at $home holds no committed documents")
+    val (nDocs, sTok) = bm25Totals(spark, home, dirs)
     // RAW signed partials unioned, ONE global fold: per-shard foldedDf
     // aggregates would put S shuffle stages in the plan (one AQE job
     // each); df is distributive over the partials, so a single
@@ -739,6 +728,18 @@ object ShardedIndex {
     TextOps.bm25Board(scored, k)
   }
 
+  /** Global (N, S) of a sharded BM25 home: the sum of the shards'
+    * commit records, read from metadata — no Spark job at any S.
+    * Emptied shards (a takedown may have drained one) contribute
+    * (0, 0); only the GLOBAL total is refused. */
+  private def bm25Totals(spark: SparkSession, home: String,
+                         dirs: Seq[String]): (Long, Long) = {
+    val (n, s) = dirs.map(Bm25Index.committedTotals(spark, _))
+      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+    require(n > 0, s"sharded BM25 index at $home holds no committed documents")
+    (n, s)
+  }
+
   /** Metadata-filtered serve over a SHARDED BM25 home — the filter ×
     * layout cell: [[Bm25Index.crossBm25TopKFiltered]]'s contract
     * (ids-only `allowed` key set, typed [[Bm25Index.FilterScope]]
@@ -750,10 +751,10 @@ object ShardedIndex {
     * `ShardedIndexSpec`), and sharding stays an operational knob
     * under filters too:
     *
-    *  - [[Bm25Index.HomeStats]]: the global (N, S)/df folds are the
-    *    unchanged cross-shard gathers (one aggregate job each, never
-    *    S driver round trips); the filter adds ONE ids-only semi-join
-    *    to the unioned query-term-bounded match stream.
+    *  - [[Bm25Index.HomeStats]]: the global (N, S) and df are the
+    *    unchanged cross-shard gathers (a metadata sum and one aggregate
+    *    job, never S driver round trips); the filter adds ONE ids-only
+    *    semi-join to the unioned query-term-bounded match stream.
     *  - [[Bm25Index.FilteredStats]]: the allowed docs' live postings
     *    (per-shard unions, one slice) feed the shared
     *    [[Bm25Index.tenantBoard]] arithmetic — df/N/S recomputed over
@@ -780,13 +781,7 @@ object ShardedIndex {
     val qterms = TextOps.bm25QueryTerms(queries, qid, qtext)
     scope match {
       case Bm25Index.HomeStats =>
-        val st = dirs.map(Bm25Index.statsFrame(spark, _))
-          .reduce(_.unionByName(_))
-          .agg(sum(col("n")).as("n"), sum(col("s")).as("s")).head()
-        val nDocs = if (st.isNullAt(0)) 0L else st.getLong(0)
-        val sTok = if (st.isNullAt(1)) 0L else st.getLong(1)
-        require(nDocs > 0,
-          s"sharded BM25 index at $home holds no committed documents")
+        val (nDocs, sTok) = bm25Totals(spark, home, dirs)
         val globalDf = dirs.map(Bm25Index.dfPartialsFrame(spark, _))
           .reduce(_.unionByName(_))
           .groupBy("term").agg(sum(col("df")).as("df"))

@@ -110,10 +110,18 @@ object RefOrchestration {
     * changed, drain pending fact files, append enriched batches
     * idempotently. Layout contract: inDir holds `orders/` (arriving csv
     * files), `products.csv`, `users.csv`, `user_info.json`; outDir gains
-    * `orders/ingest_batch=N`, `users`, `products`, `_checkpoint`. */
+    * `orders/ingest_batch=N`, `users`, `products`, `_checkpoint`.
+    * Refuses an outDir that [[runBatch]] writes: its orders and the
+    * batch partitions would mix two layouts in one sink. */
   def runIncremental(spark: SparkSession, inDir: String,
                      outDir: String): RunSummary =
     IndexLease.withLease(spark, outDir, "RefOrchestration.runIncremental") {
+      val orders = new Path(outDir, "orders")
+      val fs = orders.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(!fs.exists(orders) || fs.exists(new Path(outDir, "_checkpoint")),
+        s"RefOrchestration.runIncremental refused: $orders exists without " +
+          "_checkpoint, so runBatch writes this outDir; its orders and the " +
+          "ingest_batch partitions would mix two layouts in one sink")
       val (products, usersFinal) = dimensions(spark, inDir, outDir)
       val batches = new java.util.concurrent.atomic.AtomicLong(0)
       val rows = new java.util.concurrent.atomic.AtomicLong(0)

@@ -128,7 +128,7 @@ object Extensions {
     })
   }
 
-  /** Persisted-BM25 twin of [[gateIvfIndex]]: the postings/df/stats
+  /** Persisted-BM25 twin of [[gateIvfIndex]]: the postings/df
     * artifact behind `retrieval_bm25_incr`'s bench override (and the
     * BM25 leg of `retrieval_rrf`'s), built over the SAME committed
     * content as the registered gate (write on the 10-residue cut,
@@ -2026,7 +2026,7 @@ object Extensions {
     // up): a healthy 2-shard BM25 home through a takedown audits to a
     // FIXED (chk, status) set — the 9 manifest-level rows (router,
     // shard population, staging residue, cross-shard marker spread)
-    // plus each shard's full 15-row fsck under its shard<i>: prefix.
+    // plus each shard's full 13-row fsck under its shard<i>: prefix.
     // Any write-path change that perturbs the sharded layout, routing
     // fingerprint, marker discipline, or per-shard health turns this
     // gate red against a literal oracle
@@ -5414,7 +5414,7 @@ object Extensions {
   private val bm25Oracle: String = bm25OracleFor("doc_id % 29 <> 0")
 
   /** write + append + delete must serve the board a fresh build over
-    * the live corpus would: signed df/(N,S) partials fold the deleted
+    * the live corpus would: signed df partials and (N, S) net the deleted
     * docs out exactly, the tombstone anti-join hides their postings. */
   private val bm25DeletedOracle: String =
     bm25OracleFor("doc_id % 29 <> 0 AND doc_id % 13 <> 5")
@@ -6103,7 +6103,7 @@ object Extensions {
         ('fragmentation', 'OK'),
         ('tomb', 'OK'), ('count', 'OK')) AS t(chk, status)""",
     // the sharded fsck canary: 9 manifest-level rows + 2 shards x the
-    // BM25 15-row fsck, every status OK — statuses are
+    // BM25 13-row fsck, every status OK — statuses are
     // scale-independent, so the row set is literal
     "q_shard_audit" -> ("""
       SELECT chk, status FROM (VALUES
@@ -6119,8 +6119,6 @@ object Extensions {
         ('shard$i:table:postings', 'OK'),
         ('shard$i:uncommitted:postings', 'OK'),
         ('shard$i:table:df', 'OK'), ('shard$i:uncommitted:df', 'OK'),
-        ('shard$i:table:stats', 'OK'),
-        ('shard$i:uncommitted:stats', 'OK'),
         ('shard$i:fragmentation', 'OK'), ('shard$i:tomb', 'OK'),
         ('shard$i:stats_fold', 'OK'),
         ('shard$i:stats_consistency', 'OK')"""

@@ -30,6 +30,13 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     val fresh = board(TextOps.bm25TopK(corpus, queries, k = 5))
     assert(stored == fresh, "persisted serve diverged from inline bm25TopK")
     assert(stored.nonEmpty, "fixture produced an empty board — gate is vacuous")
+    // the metadata is read from disk: a commit record without (N, S)
+    // is refused, never served as zeros
+    val meta = Dedup.readMeta(spark, idxRoot(dir))
+    Dedup.writeMeta(spark, idxRoot(dir), meta - "n_tokens")
+    val ex = intercept[IllegalArgumentException](
+      Bm25Index.crossBm25TopK(spark, queries, dir, k = 5))
+    assert(ex.getMessage.contains("n_tokens"), ex.getMessage)
   }
 
   test("append law: base + two committed batches ≡ fresh over the union") {
@@ -58,8 +65,8 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     val delta = corpus.filter(col("doc_id") % 3 === 2)
     Bm25Index.write(base, dir)
     val baseBoard = board(Bm25Index.crossBm25TopK(spark, queries, dir, 5))
-    // simulate the crash: postings + df partition land, stats and the
-    // commit marker do not
+    // simulate the crash: the postings partition lands, the df
+    // partition and the commit record do not
     val post = TextOps.docTermFreqs(delta, "doc_id", "text")
     post.withColumn("ingest_batch", lit(0L))
       .write.partitionBy("ingest_batch").mode("append")
@@ -147,7 +154,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     val before = board(Bm25Index.crossBm25TopK(spark, queries, dir, 5))
     val tomb = corpus.filter(col("doc_id") % 5 === 1).select("doc_id")
     // simulate the crash: the NEGATIVE df partials of batch 0 land but
-    // the tombstones, stats and the commit marker do not — the nastiest
+    // the tombstones and the commit record do not — the nastiest
     // torn layout, because a committed-side read of it would misscore
     // every term the deleted docs carried
     val delPost = TextOps.docTermFreqs(
@@ -227,9 +234,9 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     val before = board(Bm25Index.crossBm25TopK(spark, queries, dir, 5))
     val upd = corpus.filter(col("doc_id") % 11 === 3)
       .withColumn("text", concat(lit("torn upsert image "), col("text")))
-    // crash after the FIRST of the batch's five writes (postings; no
-    // tomb, no signed partials, no marker): the partition sits past
-    // the marker, so every read must exclude it whole
+    // crash after the FIRST of the batch's four writes (postings; no
+    // tomb, no signed df partials, no commit record): the partition
+    // sits past the marker, so every read must exclude it whole
     Dedup.writeIndexTable(TextOps.docTermFreqs(upd, "doc_id", "text"),
       0L, s"${idxRoot(dir)}/postings")
     assert(board(Bm25Index.crossBm25TopK(spark, queries, dir, 5)) == before,

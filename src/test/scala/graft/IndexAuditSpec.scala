@@ -70,9 +70,10 @@ class IndexAuditSpec extends AnyFunSuite with SparkSpec {
       docs.filter(col("doc_id") % 2 === 0), dir)
     assert(statuses(dir)("stats_consistency") == "OK")
     // simulate a batchId=None delete crashing after its tomb write but
-    // before the negative df/stats partials land: doc masked, stats
-    // still counted — the base partition is always committed, so no
-    // replay heals it and only the live-recompute cross-check sees it
+    // before the negative df partials and the (N, S) update land: doc
+    // masked, its statistics still counted — the base partition is
+    // always committed, so no replay heals it and only the
+    // live-recompute cross-check sees it
     import spark.implicits._
     Dedup.writeIndexTable(Seq(0L, 2L).toDF("doc_id"), -1L, s"${idxRoot(dir)}/tomb")
     val s = statuses(dir)

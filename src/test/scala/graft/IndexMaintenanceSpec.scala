@@ -117,6 +117,8 @@ class IndexMaintenanceSpec extends AnyFunSuite with SparkSpec {
     assert(parquetFiles(s"${idxRoot(idxDir)}/postings") < filesBefore)
     assert(Dedup.readMeta(spark, idxRoot(idxDir)) == metaBefore,
       "compaction must preserve metadata exactly")
+    assert(graft.operators.Bm25Index.statsConsistency(spark, idxDir)
+      == ((0L, 0L, 0L)), "compaction skewed df or (N, S)")
     // tombstones still mask after folding into the base partition
     graft.operators.Bm25Index.applyCdc(spark, idxDir,
       docs.filter(col("doc_id") % 6 === 1),

@@ -339,8 +339,16 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
           home, k = 5).collect()
         org.apache.spark.sql.graftbridge.ColumnBridge
           .drainListenerBus(spark)
+        val served = n.getAndSet(0)
+        // (N, S) is read from the commit record: no Spark job at all
+        graft.operators.Bm25Index.foldedStats(spark,
+          graft.operators.ShardedIndex.shardDir(home, 0))
+        org.apache.spark.sql.graftbridge.ColumnBridge
+          .drainListenerBus(spark)
+        assert(n.get() == 0,
+          s"Bm25Index.foldedStats launched ${n.get()} Spark jobs")
+        served
       } finally spark.sparkContext.removeSparkListener(l)
-      n.get()
     }
     val j2 = jobsFor(2)
     val j8 = jobsFor(8)

@@ -340,6 +340,21 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
       "a refused runBatch changed the incremental outDir")
   }
 
+  test("runIncremental refuses a batch outDir before writing anything") {
+    val (in, out) = freshRoot()
+    stageBoth(in)
+    RefOrchestration.runBatch(spark, in, out)
+    val before = inventory(out, checkpoint = true)
+    val ex = intercept[IllegalArgumentException] {
+      RefOrchestration.runIncremental(spark, in, out)
+    }
+    assert(ex.getMessage.contains("runBatch"), ex.getMessage)
+    assert(inventory(out, checkpoint = true) == before,
+      "a refused runIncremental changed the batch outDir")
+    assert(!Files.exists(Paths.get(s"$out/_checkpoint")),
+      "a refused runIncremental left a _checkpoint")
+  }
+
   test("an overlapping run refuses loudly naming the holder; a stale " +
     "lease is taken over") {
     val leaseFile = graft.operators.Dedup.LeaseFile

@@ -241,6 +241,11 @@ class ShardedIndexSpec extends AnyFunSuite with SparkSpec {
     assert(canon(graft.operators.ShardedIndex.crossBm25TopKSharded(
       spark, queries(docs), home2, k = 5)) == board4,
       "reshard 4->2 moved the board")
+    (0 until 2).foreach { i =>
+      assert(Bm25Index.statsConsistency(spark,
+        graft.operators.ShardedIndex.shardDir(home2, i)) == ((0L, 0L, 0L)),
+        s"reshard left shard $i's df or (N, S) off its live postings")
+    }
     // first sharding of a MONOLITHIC home, same history
     val mono = graft.sources.Scratch.dir("rs-bm25-mono")
     Bm25Index.write(held, mono)
