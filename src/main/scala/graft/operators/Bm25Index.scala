@@ -197,40 +197,21 @@ object Bm25Index {
 
   /** Append a batch: its postings and df partials land in their own
     * `ingest_batch` partitions; the commit record adds the batch's
-    * (n, s) to (N, S) and commits both. Replay-idempotent for
-    * batchId ≥ 0 (skip if committed, partition-overwrite if torn);
-    * batchId=None is a one-shot with no torn-write protection (see the
-    * object doc). */
+    * (n, s) to (N, S) and commits both — an [[applyCdc]] batch with no
+    * deletes. Replay-idempotent for batchId ≥ 0 (skip if committed,
+    * partition-overwrite if torn); batchId=None is a one-shot with no
+    * torn-write protection (see the object doc). */
   def append(spark: SparkSession, dir: String, newDocs: DataFrame,
              batchId: Option[Long] = None, id: String = "doc_id",
              text: String = "text"): Unit =
-    IndexLease.withLease(spark, dir, "Bm25Index.append") {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
-    Dedup.refuseShadowedInserts(newDocs, id,
-      committedTombs(spark, root, meta), "doc_id", "Bm25Index.append", dir,
-      syncPath = batchId.isEmpty)
-    val (post, release) = Dedup.materializeTracked(
-      TextOps.docTermFreqs(newDocs, id, text))
-    try {
-      val part = batchId.getOrElse(-1L)
-      // two independent batch-partition writes off the materialized
-      // postings — overlapped (Par, guide §2.6); marker strictly last
-      Par.run(Seq(
-        () => Dedup.writeIndexTable(post, part, s"$root/postings"),
-        () => Dedup.writeIndexTable(dfPartials(post), part, s"$root/df")))
-      Dedup.writeMeta(spark, root,
-        addTotals(meta, TextOps.bm25StatsPartials(post))
-          ++ batchId.map(b => "last_committed_batch" -> b.toString))
-    } finally release()
-  }
+    commit(spark, dir, newDocs, IndexCdc.emptyDeletes(spark, Kind, id),
+      batchId, id, text, "Bm25Index.append")
 
   /** Delete documents from the index — the takedown /
     * right-to-be-forgotten leg a daily-ingesting corpus needs daily.
     * `tombstones` carries the doc ids to remove (any other columns are
     * ignored; duplicates and ids the index never held are harmless).
+    * It is an [[applyCdc]] batch with no inserts.
     *
     * Mechanics: the retraction is derived FROM THE STORED POSTINGS —
     * the deleted docs' (term, tf, dl) rows are exactly what their
@@ -248,83 +229,51 @@ object Bm25Index {
     * so a double-delete (or a delete of an unknown id) retracts and
     * tombstones nothing.
     * Cost: one postings semi-join (vocab of the deleted docs) + two
-    * batch-bounded writes — never a corpus rescan.
-    *
-    * Replay contract: identical to [[append]] — batchId ≥ 0 deletes
-    * are marker-committed (torn partitions excluded by every read,
-    * healed by the replay's partition overwrite; the replay re-derives
-    * the SAME retraction because single-writer monotone batchIds mean
-    * nothing else committed in between); batchId=None is a
-    * synchronous one-shot. */
+    * batch-bounded writes — never a corpus rescan. A replay re-derives
+    * the SAME retraction, because single-writer monotone batchIds mean
+    * nothing else committed in between. */
   def delete(spark: SparkSession, dir: String, tombstones: DataFrame,
              batchId: Option[Long] = None, id: String = "doc_id"): Unit =
-    IndexLease.withLease(spark, dir, "Bm25Index.delete") {
+    commit(spark, dir, IndexCdc.emptyInserts(spark, Kind, id, "text"),
+      tombstones, batchId, id, "text", "Bm25Index.delete")
+
+  /** One CDC change-batch applied atomically under ONE commit marker —
+    * the family's in-place commit, which [[append]] and [[delete]] run
+    * with one side empty and [[IndexCdc]] routes change streams to. It
+    * writes the batch's insert postings, its SIGNED df partials (insert
+    * positives ∪ delete negatives in one table write), and its
+    * tombstones into one partition, then commits the batch's signed
+    * (n, s) with the marker, strictly last. Deletes apply FIRST, to the
+    * PRE-batch state (the shadow tombstone's `shadow_upto` is the
+    * pre-batch marker, so it kills no row of this batch): a
+    * delete+insert of one id in the batch is an UPDATE — the old
+    * image's (n, s) retracts, the new image indexes and counts — and a
+    * re-insert of an id deleted in an earlier batch serves the same
+    * way, no rebuild required. Inserting a currently-live id WITHOUT
+    * deleting it in the same batch remains the double-count
+    * caller-contract violation it always was. */
+  def applyCdc(spark: SparkSession, dir: String, newDocs: DataFrame,
+               tombstones: DataFrame, batchId: Long,
+               id: String = "doc_id", text: String = "text"): Unit =
+    commit(spark, dir, newDocs, tombstones, Some(batchId), id, text,
+      "Bm25Index.applyCdc")
+
+  /** The family's one in-place commit body ([[applyCdc]]):
+    * `batchId = None` is the synchronous path — base partition, marker
+    * untouched, re-inserts of tombstoned ids refused. A statically
+    * empty side writes nothing. `op` names the lease and the refusals. */
+  private def commit(spark: SparkSession, dir: String, newDocs: DataFrame,
+                     tombstones: DataFrame, batchId: Option[Long],
+                     id: String, text: String, op: String): Unit =
+    IndexLease.withLease(spark, dir, op) {
     val root = Dedup.indexRoot(spark, dir)
     val meta = Dedup.readMeta(spark, root)
     validate(meta, dir)
     if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
     val ids = tombstones.select(col(id).cast("long").as("doc_id")).distinct()
-    val tombs = committedTombs(spark, root, meta)
-    // LIVE postings only: a re-deleted id's earlier (already-shadowed,
-    // already-retracted) postings must not retract again
-    val livePost = Dedup.maskShadowed(
-      Dedup.committedOnly(readPostings(spark, root), meta),
-      "doc_id", tombs, "doc_id")
-      .select("doc_id", "term", "tf", "dl")
-    // materialized: the fresh-ids plan reads tomb/ (via the mask),
-    // which the write below appends to — the retraction reuses it
-    val (fresh, relT) = Dedup.materializeTracked(
-      Dedup.liveAmong(ids, "doc_id", livePost, "doc_id"))
-    try {
-      val (delPost, relP) = Dedup.materializeTracked(
-        livePost.join(fresh, Seq("doc_id"), "left_semi"))
-      try {
-        val part = batchId.getOrElse(-1L)
-        // two independent writes off the two materialized frames —
-        // overlapped (Par, guide §2.6); marker strictly last
-        Par.run(Seq(
-          () => Dedup.writeTombs(fresh, Dedup.lastCommittedBatch(meta),
-            part, s"$root/tomb"),
-          () => Dedup.writeIndexTable(
-            dfPartials(delPost).select(col("term"), (-col("df")).as("df")),
-            part, s"$root/df")))
-        Dedup.writeMeta(spark, root, addTotals(meta, retracted(delPost))
-          ++ batchId.map(b => "last_committed_batch" -> b.toString))
-      } finally relP()
-    } finally relT()
-  }
-
-  /** One CDC change-batch applied atomically under ONE commit marker —
-    * the per-trigger body of
-    * [[graft.streaming.StreamOps.maintainBm25CdcStream]]. [[append]]
-    * then [[delete]] with the same batchId cannot compose (the first
-    * commits the marker, the second would skip), and two
-    * partition-overwrite writes into the same `ingest_batch` would
-    * clobber each other — so the combined op writes the batch's insert
-    * postings, its SIGNED df partials (insert positives ∪ delete
-    * negatives in one table write), and its tombstones into one
-    * partition, then commits the batch's signed (n, s) with the
-    * marker, strictly last. Deletes apply FIRST, to the PRE-batch
-    * state (the shadow tombstone's `shadow_upto` is the pre-batch
-    * marker, so it kills no row of this batch): a delete+insert of one
-    * id in the batch is an UPDATE — the old image's (n, s) retracts,
-    * the new image indexes and counts — and a re-insert of an id
-    * deleted in an earlier batch serves the same way, no rebuild
-    * required. Inserting a currently-live id WITHOUT deleting it in the
-    * same batch remains the double-count caller-contract violation it
-    * always was. */
-  def applyCdc(spark: SparkSession, dir: String, newDocs: DataFrame,
-               tombstones: DataFrame, batchId: Long,
-               id: String = "doc_id", text: String = "text"): Unit =
-    IndexLease.withLease(spark, dir, "Bm25Index.applyCdc") {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    if (batchId <= Dedup.lastCommittedBatch(meta)) return
-    val ids = tombstones.select(col(id).cast("long").as("doc_id")).distinct()
     val priorTombs = committedTombs(spark, root, meta)
-    Dedup.refuseShadowedInserts(newDocs, id, priorTombs, "doc_id",
-      "Bm25Index.applyCdc", dir, syncPath = false)
+    Dedup.refuseShadowedInserts(newDocs, id, priorTombs, "doc_id", op, dir,
+      syncPath = batchId.isEmpty)
     // LIVE pre-batch postings: the retraction must see exactly what
     // this batch's tombstones newly kill, never already-shadowed rows
     val livePost = Dedup.maskShadowed(
@@ -345,21 +294,22 @@ object Bm25Index {
       val (post, relI) = Dedup.materializeTracked(
         TextOps.docTermFreqs(newDocs, id, text))
       try {
+        val part = batchId.getOrElse(-1L)
         // three independent batch-partition writes off the two
         // materialized frames — overlapped (Par, guide §2.6); marker
         // strictly last
         Par.run(Seq(
-          () => Dedup.writeIndexTable(post, batchId, s"$root/postings"),
+          () => Dedup.writeIndexTable(post, part, s"$root/postings"),
           () => Dedup.writeTombs(fresh, Dedup.lastCommittedBatch(meta),
-            batchId, s"$root/tomb"),
+            part, s"$root/tomb"),
           () => Dedup.writeIndexTable(
             dfPartials(post).unionByName(
               dfPartials(delPost).select(col("term"), (-col("df")).as("df"))),
-            batchId, s"$root/df")))
+            part, s"$root/df")))
         Dedup.writeMeta(spark, root,
           addTotals(meta, TextOps.bm25StatsPartials(post)
             .unionByName(retracted(delPost)))
-            + ("last_committed_batch" -> batchId.toString))
+            ++ batchId.map(b => "last_committed_batch" -> b.toString))
       } finally relI()
     } finally relT()
   }

@@ -62,19 +62,40 @@ object Dedup {
     * lineage-truncated, so an executor loss would fail the job; that
     * trade is acceptable only in single-JVM runs, which is exactly when
     * no checkpoint dir is set. */
-  /** True iff the frame's OPTIMIZED plan folds to a zero-row local
-    * relation — `df.limit(0)`, a filter Catalyst proves false, a join
-    * against either: the one-sided CDC batch shapes (insert-only /
-    * delete-only micro-batches), which every stream fixture and most
-    * real change feeds produce. Driver-only plan inspection, no Spark
-    * job; conservative — a frame that is merely empty AT RUNTIME stays
+  /** True iff the frame's OPTIMIZED plan provably yields no rows — a
+    * zero-row local relation (`df.limit(0)`, a filter Catalyst proves
+    * false, the empty side `IndexCdc.emptyInserts`/`emptyDeletes`
+    * builds), or a plan that derives rows only from one through
+    * projections, filters, repartitions, non-outer generators
+    * (`posexplode` — which Catalyst does not fold), grouped
+    * aggregates and the joins those rows drive: the one-sided CDC
+    * batch shapes (insert-only / delete-only batches, every `append`
+    * and `delete`). Pure plan inspection, no Spark job;
+    * conservative — a frame that is merely empty AT RUNTIME stays
     * false and takes the normal path. */
   private[graft] def staticallyEmpty(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
+    yieldsNoRows(df.queryExecution.optimizedPlan)
+
+  private def yieldsNoRows(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans._
+    import org.apache.spark.sql.catalyst.plans.logical._
+    p match {
+      case l: LocalRelation => l.data.isEmpty
+      case _: Project | _: Filter | _: RepartitionOperation =>
+        yieldsNoRows(p.children.head)
+      case g: Generate => !g.outer && yieldsNoRows(g.child)
+      case a: Aggregate =>
+        a.groupingExpressions.nonEmpty && yieldsNoRows(a.child)
+      case j: Join => j.joinType match {
+        case Inner | Cross | LeftSemi =>
+          yieldsNoRows(j.left) || yieldsNoRows(j.right)
+        case LeftOuter | LeftAnti => yieldsNoRows(j.left)
+        case _ => false
+      }
       case _ => false
     }
+  }
 
   private[graft] def materialize(df: DataFrame): DataFrame =
     materializeTracked(df)._1
@@ -459,8 +480,7 @@ object Dedup {
           s"$sib — a swap-in crashed between delete and rename; run " +
           s"graft.operators.Dedup.recoverSwap(spark, \"$dir\") to repair")
       require(false,
-        s"no signature-index metadata at $p — not an index directory, or " +
-          "written by something other than writeMinhashIndex/writeEmbeddingIndex")
+        s"no index metadata at $p — $dir is not a graft index directory")
     }
     val props = new java.util.Properties()
     val in = fs.open(p)
@@ -482,30 +502,39 @@ object Dedup {
     val spark = corpus.sparkSession
     IndexLease.withLease(spark, dir, "writeMinhashIndex") {
       val idx = buildMinhashIndex(corpus, id, text, numHashes, bands)
-      // pointer commit: writing over an existing index replaces
-      // EVERYTHING atomically — stale batch partitions and tombstones
-      // from the old index can never ride into the new one, and
-      // readers of the old one keep serving it
-      swapInDir(spark, dir) { tmp =>
-        // two independent writes overlapped (Par, guide §2.6); n_docs
-        // rides the sets write as an Observation instead of a separate
-        // count job (§1.2)
-        val obs = org.apache.spark.sql.Observation()
-        Par.run(Seq(
-          () => writeIndexTable(idx.bands, -1L, s"$tmp/bands",
-            overwriteAll = true),
-          () => writeIndexTable(
-            idx.sets.observe(obs, count(lit(1)).as("n")), -1L,
-            s"$tmp/sets", overwriteAll = true)))
-        writeMeta(spark, tmp, Map(
-          "kind" -> MinhashIndexKind,
-          "numHashes" -> numHashes.toString,
-          "bands" -> bands.toString,
-          "family" -> MinhashFamily,
-          "n_docs" -> obs.get("n").asInstanceOf[Long].toString))
-      }
+      swapInMinhash(spark, dir, idx.bands, idx.sets,
+        minhashParams(numHashes, bands))
     }
   }
+
+  /** The commit-record keys of a fresh minhash index. */
+  private def minhashParams(numHashes: Int,
+                            bands: Int): Map[String, String] = Map(
+    "kind" -> MinhashIndexKind, "numHashes" -> numHashes.toString,
+    "bands" -> bands.toString, "family" -> MinhashFamily)
+
+  /** The minhash family's one whole-index writer, behind
+    * [[writeMinhashIndex]], [[writeMinhashFromTables]] and
+    * [[rebuildMinhashIndex]]: `bands` and `sets` land in a fresh
+    * version, then the commit record — `meta` plus `n_docs`, which
+    * rides the sets write as an Observation instead of a separate count
+    * job (§1.2) — strictly last. Pointer commit: the version replaces
+    * EVERYTHING atomically — stale batch partitions and tombstones
+    * from the old index can never ride into the new one, and readers
+    * of the old one keep serving it. */
+  private def swapInMinhash(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, bands: DataFrame, sets: DataFrame,
+                            meta: Map[String, String]): Unit =
+    swapInDir(spark, dir) { tmp =>
+      val obs = org.apache.spark.sql.Observation()
+      // two independent writes overlapped (Par, guide §2.6)
+      Par.run(Seq(
+        () => writeIndexTable(bands, -1L, s"$tmp/bands", overwriteAll = true),
+        () => writeIndexTable(sets.observe(obs, count(lit(1)).as("n")), -1L,
+          s"$tmp/sets", overwriteAll = true)))
+      writeMeta(spark, tmp,
+        meta + ("n_docs" -> obs.get("n").asInstanceOf[Long].toString))
+    }
 
   /** [[writeMinhashIndex]] from already-signed tables — the re-shard
     * writer: a sharded home's new shards are built from LIVE
@@ -521,24 +550,8 @@ object Dedup {
     IndexLease.withLease(spark, dir, "Dedup.writeMinhashFromTables") {
       val (b, relB) = materializeTracked(bands)
       val (s2, relS) = materializeTracked(sets)
-      try {
-        swapInDir(spark, dir) { tmp =>
-          // two independent writes overlapped (Par, guide §2.6); n_docs
-          // rides the sets write as an Observation (§1.2)
-          val obs = org.apache.spark.sql.Observation()
-          Par.run(Seq(
-            () => writeIndexTable(b, -1L, s"$tmp/bands",
-              overwriteAll = true),
-            () => writeIndexTable(s2.observe(obs, count(lit(1)).as("n")),
-              -1L, s"$tmp/sets", overwriteAll = true)))
-          writeMeta(spark, tmp, Map(
-            "kind" -> MinhashIndexKind,
-            "numHashes" -> numHashes.toString,
-            "bands" -> nBands.toString,
-            "family" -> MinhashFamily,
-            "n_docs" -> obs.get("n").asInstanceOf[Long].toString))
-        }
-      } finally { relB(); relS() }
+      try swapInMinhash(spark, dir, b, s2, minhashParams(numHashes, nBands))
+      finally { relB(); relS() }
     }
   }
 
@@ -550,10 +563,13 @@ object Dedup {
     * REPLACES its own partition instead of double-appending — the
     * idempotency backbone), plain `append` into the base partition for
     * synchronous batch = -1 callers, which by the single-writer
-    * contract run once. */
+    * contract run once. A statically empty frame writes nothing. */
   private[graft] def writeIndexTable(rows: DataFrame, batch: Long,
                                      path: String,
                                      overwriteAll: Boolean = false): Unit = {
+    // an in-place write of a statically empty frame (the empty side of
+    // an append or delete) has no partition to add: skip its job
+    if (!overwriteAll && staticallyEmpty(rows)) return
     val part = rows.withColumn(IngestBatchCol, lit(batch))
     val w = part.write.partitionBy(IngestBatchCol)
     if (overwriteAll) w.mode("overwrite").parquet(path)
@@ -662,12 +678,29 @@ object Dedup {
       Some(committedOnly(shadowed, meta).select(idCol, ShadowCol))
     } else None
 
+  /** [[writeIndexTable]] returning the number of rows written, counted
+    * by an Observation riding the write instead of a separate count
+    * job (§1.2); a statically empty frame writes nothing and counts 0. */
+  private[graft] def writeCounted(rows: DataFrame, batch: Long,
+                                  path: String): Long =
+    if (staticallyEmpty(rows)) 0L
+    else {
+      val obs = org.apache.spark.sql.Observation()
+      writeIndexTable(rows.observe(obs, count(lit(1)).as("n")), batch, path)
+      obs.get("n").asInstanceOf[Long]
+    }
+
+  /** Row count without a Spark job for a statically empty frame. */
+  private[graft] def countRows(df: DataFrame): Long =
+    if (staticallyEmpty(df)) 0L else df.count()
+
   /** One tombstone-table write: `ids` (single id column) stamped with
     * `shadow_upto = shadowUpto`, landing in the `ingest_batch = batch`
-    * partition under the usual replay semantics. */
+    * partition under the usual replay semantics. Returns the number of
+    * tombstones written ([[writeCounted]]). */
   private[graft] def writeTombs(ids: DataFrame, shadowUpto: Long,
-                                batch: Long, path: String): Unit =
-    writeIndexTable(ids.withColumn(ShadowCol, lit(shadowUpto)), batch, path)
+                                batch: Long, path: String): Long =
+    writeCounted(ids.withColumn(ShadowCol, lit(shadowUpto)), batch, path)
 
   /** THE masking choke point: drops every row of `rows` that a
     * committed tombstone shadows (same id, `shadow_upto ≥` the row's
@@ -692,11 +725,14 @@ object Dedup {
     * `liveRows` (which must carry `liveIdCol`) — the delete legs'
     * "what does this tombstone actually kill" set: double-deletes and
     * never-held ids drop out, so counts stay exact and the tombstone
-    * table never accretes no-op rows. */
+    * table never accretes no-op rows. `liveRows` is by-name: a
+    * statically empty `ids` (an append's delete side) never builds it,
+    * so it never pays the table read's schema inference either. */
   private[graft] def liveAmong(ids: DataFrame, idCol: String,
-                               liveRows: DataFrame,
+                               liveRows: => DataFrame,
                                liveIdCol: String): DataFrame =
-    ids.join(liveRows.select(col(liveIdCol).as(idCol)).distinct(),
+    if (staticallyEmpty(ids)) ids
+    else ids.join(liveRows.select(col(liveIdCol).as(idCol)).distinct(),
       Seq(idCol), "left_semi")
 
   /** Refuses the two insert shapes shadow masking cannot absorb:
@@ -799,8 +835,8 @@ object Dedup {
     * newly-tombstoned ids actually held, keeping the sizing metadata a
     * live count. Physical removal happens at the next
     * [[rebuildMinhashIndex]] or [[compactMinhashIndex]], which read
-    * the live set and swap a tombstone-free layout in. Same replay
-    * contract as the appends (batchId ≥ 0 marker-committed, None =
+    * the live set and swap a tombstone-free layout in. It is an
+    * [[applyMinhashCdc]] batch with no inserts (`batchId = None` is the
     * synchronous one-shot). Tombstones are SHADOW tombstones
     * ([[ShadowCol]]): they kill only rows from batches ≤ the marker at
     * delete time, so a later batched re-insert of the id serves —
@@ -810,43 +846,16 @@ object Dedup {
   def deleteFromMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                              dir: String, tombstones: DataFrame,
                              batchId: Option[Long] = None): Unit =
-    IndexLease.withLease(spark, dir, "deleteFromMinhashIndex") {
-    val root = indexRoot(spark, dir)
-    val meta = readMeta(spark, root)
-    validateMinhashMeta(meta, dir)
-    if (batchId.exists(_ <= lastCommittedBatch(meta))) return
-    val ids = tombstones.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct()
-    val tombs = committedTombsAt(spark, s"$root/tomb", meta, "doc_id")
-    // materialized: the plan reads tomb/ (via the mask), which the
-    // write below appends to — and the n_docs count reuses it
-    val (fresh, relT) = materializeTracked(
-      liveAmong(ids, "doc_id",
-        maskShadowed(committedOnly(readPq(spark, s"$root/sets"), meta),
-          "doc_id", tombs, "doc_id"), "doc_id"))
-    try {
-      // the tombstoned-held count rides the tomb write as an
-      // Observation instead of a separate count job (§1.2)
-      val obs = org.apache.spark.sql.Observation()
-      writeTombs(fresh.observe(obs, count(lit(1)).as("n")),
-        lastCommittedBatch(meta), batchId.getOrElse(-1L),
-        s"$root/tomb")
-      writeMeta(spark, root,
-        meta + ("n_docs" -> (meta("n_docs").toLong -
-          obs.get("n").asInstanceOf[Long]).toString)
-          ++ batchId.map(b => "last_committed_batch" -> b.toString))
-    } finally relT()
-  }
+    commitMinhash(spark, dir,
+      IndexCdc.emptyInserts(spark, MinhashIndexKind, "doc_id", "text"),
+      tombstones, batchId, "doc_id", "text", "deleteFromMinhashIndex")
 
   /** One CDC change-batch applied to the minhash index atomically
-    * under ONE commit marker — the per-trigger body of
-    * [[graft.streaming.StreamOps.maintainMinhashCdcStream]], completing
-    * the grow-and-shrink lifecycle the serving indexes got in
-    * `Bm25Index.applyCdc`: [[appendToMinhashIndex]] then
-    * [[deleteFromMinhashIndex]] with the same batchId cannot compose
-    * (the first commits the marker, the second would skip), so the
-    * combined op writes the batch's band keys, sets, and tombstones
-    * into one `ingest_batch` partition, marker strictly last. Within
+    * under ONE commit marker — the family's in-place commit, which
+    * [[appendToMinhashIndex]] and [[deleteFromMinhashIndex]] run with
+    * one side empty and [[IndexCdc]] routes change streams to: the
+    * batch's band keys, sets, and tombstones land in one
+    * `ingest_batch` partition, marker strictly last. Within
     * ONE batch deletes apply FIRST (to the pre-batch state) and
     * inserts land after: delete+insert of one id is an UPDATE — the
     * new image serves, the old rows fall under the shadow tombstone
@@ -860,15 +869,27 @@ object Dedup {
                       dir: String, newDocs: DataFrame,
                       tombstones: DataFrame, batchId: Long,
                       id: String = "doc_id", text: String = "text"): Unit =
-    IndexLease.withLease(spark, dir, "applyMinhashCdc") {
+    commitMinhash(spark, dir, newDocs, tombstones, Some(batchId), id, text,
+      "applyMinhashCdc")
+
+  /** The minhash family's one in-place commit body: [[applyMinhashCdc]]
+    * with `batchId = None` for the synchronous path (base partition,
+    * marker untouched), and [[appendToMinhashIndex]] /
+    * [[deleteFromMinhashIndex]] with the other side statically empty,
+    * which writes nothing. `op` names the lease and the refusals. */
+  private def commitMinhash(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, newDocs: DataFrame,
+                            tombstones: DataFrame, batchId: Option[Long],
+                            id: String, text: String, op: String): Unit =
+    IndexLease.withLease(spark, dir, op) {
     val root = indexRoot(spark, dir)
     val meta = readMeta(spark, root)
     validateMinhashMeta(meta, dir)
-    if (batchId <= lastCommittedBatch(meta)) return
+    if (batchId.exists(_ <= lastCommittedBatch(meta))) return
     val ids = tombstones.select(col(id).cast("long").as("doc_id")).distinct()
     val priorTombs = committedTombsAt(spark, s"$root/tomb", meta, "doc_id")
-    refuseShadowedInserts(newDocs, id, priorTombs, "doc_id",
-      "applyMinhashCdc", dir, syncPath = false)
+    refuseShadowedInserts(newDocs, id, priorTombs, "doc_id", op, dir,
+      syncPath = batchId.isEmpty)
     // materialized: the fresh-ids plan reads tomb/ (via the mask),
     // which the write below appends to — and the n_docs count reuses it
     val (fresh, relT) = materializeTracked(
@@ -883,26 +904,21 @@ object Dedup {
       // delete+insert of one id in this batch is an UPDATE — the new
       // image is signed and serves
       val sigs = minhashSignatures(newDocs, id, text, nh)
+      val part = batchId.getOrElse(-1L)
       // the three table writes are independent (materialized inputs,
       // distinct paths) — overlapped (Par, guide §2.6); the n_docs
-      // deltas ride the writes as Observations instead of separate
-      // count jobs (§1.2 — the writes stream exactly those rows), and
-      // the marker bump stays strictly last
-      val obsIns = org.apache.spark.sql.Observation()
-      val obsDel = org.apache.spark.sql.Observation()
-      Par.run(Seq(
-        () => writeIndexTable(bandKeysOf(sigs, nh, nb), batchId,
-          s"$root/bands"),
-        () => writeIndexTable(sigs.select(col("doc_id"), col("hs"))
-          .observe(obsIns, count(lit(1)).as("n")), batchId, s"$root/sets"),
-        () => writeTombs(fresh.observe(obsDel, count(lit(1)).as("n")),
-          lastCommittedBatch(meta), batchId, s"$root/tomb")))
-      val nIns = obsIns.get("n").asInstanceOf[Long]
-      val nDel = obsDel.get("n").asInstanceOf[Long]
+      // deltas ride the writes as Observations (writeCounted), and the
+      // marker bump stays strictly last
+      val Seq(_, nIns, nDel) = Par.run(Seq(
+        () => { writeIndexTable(bandKeysOf(sigs, nh, nb), part,
+          s"$root/bands"); 0L },
+        () => writeCounted(sigs.select(col("doc_id"), col("hs")), part,
+          s"$root/sets"),
+        () => writeTombs(fresh, lastCommittedBatch(meta), part,
+          s"$root/tomb")))
       writeMeta(spark, root,
-        meta + ("n_docs" ->
-          (meta("n_docs").toLong + nIns - nDel).toString)
-          + ("last_committed_batch" -> batchId.toString))
+        meta + ("n_docs" -> (meta("n_docs").toLong + nIns - nDel).toString)
+          ++ batchId.map(b => "last_committed_batch" -> b.toString))
     } finally relT()
   }
 
@@ -949,40 +965,17 @@ object Dedup {
     * DYNAMIC partition overwrite, replacing the crashed attempt's
     * leftovers instead of double-appending them (which reads never saw
     * anyway: they filter to committed partitions). The commit marker is
-    * written strictly last. Without `batchId` (synchronous callers) the
-    * append is a plain one-shot under the single-writer contract: a
-    * caller retrying a failure must route retries through a batchId. */
+    * written strictly last — this is an [[applyMinhashCdc]] batch with
+    * no deletes. Without `batchId` (synchronous callers) the append is
+    * a plain one-shot under the single-writer contract: a caller
+    * retrying a failure must route retries through a batchId. */
   def appendToMinhashIndex(batch: DataFrame, id: String, text: String,
                            dir: String,
                            batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    IndexLease.withLease(spark, dir, "appendToMinhashIndex") {
-    val root = indexRoot(spark, dir)
-    val meta = readMeta(spark, root)
-    validateMinhashMeta(meta, dir)
-    if (batchId.exists(_ <= lastCommittedBatch(meta))) return // replayed, durable
-    refuseShadowedInserts(batch, id,
-      committedTombsAt(spark, s"$root/tomb", meta, "doc_id"), "doc_id",
-      "appendToMinhashIndex", dir, syncPath = batchId.isEmpty)
-    val numHashes = meta("numHashes").toInt
-    val bands = meta("bands").toInt
-    // materialized once (inside minhashSignatures): both writes reuse it
-    val sigs = minhashSignatures(batch, id, text, numHashes)
-    val part = batchId.getOrElse(-1L)
-    // two independent table writes overlapped (Par, guide §2.6); the
-    // n_docs delta rides the sets write as an Observation instead of a
-    // separate count job (§1.2); marker strictly last
-    val obs = org.apache.spark.sql.Observation()
-    Par.run(Seq(
-      () => writeIndexTable(bandKeysOf(sigs, numHashes, bands), part,
-        s"$root/bands"),
-      () => writeIndexTable(sigs.select(col("doc_id"), col("hs"))
-        .observe(obs, count(lit(1)).as("n")), part, s"$root/sets")))
-    writeMeta(spark, root,
-      meta + ("n_docs" -> (meta("n_docs").toLong +
-        obs.get("n").asInstanceOf[Long]).toString)
-        ++ batchId.map(b => "last_committed_batch" -> b.toString))
-    }
+    commitMinhash(spark, dir, batch,
+      IndexCdc.emptyDeletes(spark, MinhashIndexKind, id), batchId, id, text,
+      "appendToMinhashIndex")
   }
 
   /** ---- Version-pointer commits (r16) ----
@@ -1357,24 +1350,14 @@ object Dedup {
         graft.functions.exprs.minhash_sig(col("hs"), nh,
           999983L, 424243L, 12345L, 7L, P).as("sig")))
     try {
-      val n = sigs.count()
       // an all-deleted corpus would rebuild to empty-born tables that
       // no reader can open — refuse with the honest instruction instead
-      require(n > 0,
+      require(sigs.head(1).nonEmpty,
         s"rebuildMinhashIndex: every document in $dir is deleted — " +
           "nothing to rebuild; delete the index directory instead")
-      swapInDir(spark, dir) { tmp =>
-        // two independent writes off the materialized signatures —
-        // overlapped (Par, guide §2.6); meta strictly after
-        Par.run(Seq(
-          () => writeIndexTable(bandKeysOf(sigs, nh, nb), -1L,
-            s"$tmp/bands", overwriteAll = true),
-          () => writeIndexTable(sigs.select(col("doc_id"), col("hs")),
-            -1L, s"$tmp/sets", overwriteAll = true)))
-        writeMeta(spark, tmp, meta
-          + ("numHashes" -> nh.toString) + ("bands" -> nb.toString)
-          + ("n_docs" -> n.toString))
-      }
+      swapInMinhash(spark, dir, bandKeysOf(sigs, nh, nb),
+        sigs.select(col("doc_id"), col("hs")),
+        meta + ("numHashes" -> nh.toString) + ("bands" -> nb.toString))
     } finally release()
   }
 

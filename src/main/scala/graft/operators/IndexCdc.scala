@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType,
+  StringType, StructField, StructType}
 
 /** One façade over the five per-family CDC appliers. All five persisted
   * index families (BM25, IVF, embedding-LSH, minhash-LSH, prefix) share
@@ -10,13 +12,16 @@ import org.apache.spark.sql.functions._
   * UPDATE: the new image serves, the old one falls under its shadow
   * tombstone — `Dedup.ShadowCol`), re-inserts of previously deleted ids
   * serving without a rebuild, committed counts netting to the live row
-  * set, and replayed batchIds skipping — but grew five parallel
-  * implementations as the families evolved. The façade makes the
+  * set, and replayed batchIds skipping. Each family has ONE in-place
+  * commit body — its CDC applier, with `batchId = None` as the
+  * synchronous path — and its `append`/`delete` entry points are that
+  * body with one side statically empty ([[emptyInserts]] /
+  * [[emptyDeletes]]), which writes nothing. The façade makes the
   * contract a single call site:
   * it reads the index's own `kind` metadata and dispatches, so a CDC
   * feed (or a composite pipeline fanning one change stream into several
   * indexes) never hard-codes family-specific entry points, and the
-  * cross-family contract law in `IndexMaintenanceSpec` pins all five
+  * cross-family contract law in `IndexCdcSpec` pins all five
   * behaviours to stay aligned as they evolve.
   *
   * Column contract, by family:
@@ -29,6 +34,60 @@ import org.apache.spark.sql.functions._
   * Same single-writer lease, replay, and tombstone semantics as the
   * family methods — this is routing, not a sixth implementation. */
 object IndexCdc {
+
+  /** The vector families: their batches key on `vec_id` and carry an
+    * `embedding`, whatever the caller's document-id name is. */
+  private[graft] val VectorKinds = Set(Similarity.IvfIndexKind,
+    Similarity.EmbeddingIndexKind)
+
+  /** The id column a `kind` family's batches key on. */
+  private[graft] def idColOf(kind: String, id: String): String =
+    if (VectorKinds(kind)) "vec_id" else id
+
+  private def emptyFrame(spark: SparkSession,
+                         fields: Seq[(String, DataType)]): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
+
+  /** A zero-row insert side of a `kind` family's batch — what a delete
+    * passes to its family's CDC body. A local relation, so
+    * `Dedup.staticallyEmpty` sees it and the body skips every insert
+    * job (refusal, materialization, table writes). Its columns are
+    * attributes, never literals: Catalyst's ConstantFolding would
+    * evaluate the IVF appliers' dimension-checked expressions on a
+    * foldable 0-dim literal array at plan time. */
+  private[graft] def emptyInserts(spark: SparkSession, kind: String,
+                                  id: String, text: String): DataFrame =
+    if (VectorKinds(kind))
+      emptyFrame(spark, Seq("vec_id" -> LongType,
+        "embedding" -> ArrayType(FloatType)))
+    else emptyFrame(spark, Seq(id -> LongType, text -> StringType))
+
+  /** A zero-row delete side of a `kind` family's batch — what an append
+    * passes to its family's CDC body (see [[emptyInserts]]). */
+  private[graft] def emptyDeletes(spark: SparkSession, kind: String,
+                                  id: String): DataFrame =
+    emptyFrame(spark, Seq(idColOf(kind, id) -> LongType))
+
+  /** Splits an op-column change frame into (inserts, deletes): rows
+    * with `opCol = "insert"` are the inserts (an update's new image
+    * included), `"delete"` the tombstones; any other value refuses
+    * loudly, naming `who`. NULL ops are checked explicitly — under
+    * three-valued logic a NULL makes `!isin(...)` NULL, which a bare
+    * filter would drop, and the malformed row would vanish SILENTLY.
+    * The one splitter of [[applyOps]] and the `StreamOps` CDC streams. */
+  private[graft] def splitOps(changes: DataFrame, opCol: String,
+                              who: String): (DataFrame, DataFrame) = {
+    val unknown = changes.filter(col(opCol).isNull ||
+        !col(opCol).isin("insert", "delete"))
+      .limit(1).collect()
+    require(unknown.isEmpty,
+      s"$who: unknown $opCol value " +
+        s"'${unknown.headOption.map(_.getAs[Any](opCol)).getOrElse("")}'" +
+        " — expected insert|delete")
+    (changes.filter(col(opCol) === "insert"),
+      changes.filter(col(opCol) === "delete"))
+  }
 
   private def kindOf(spark: SparkSession, dir: String): String = {
     val meta = Dedup.readMeta(spark, Dedup.indexRoot(spark, dir))
@@ -63,26 +122,16 @@ object IndexCdc {
           "ivf_index, signlsh-v2, sharded_index")
     }
 
-  /** [[apply]] for an op-column change batch — the exact splitter the
-    * streaming twins (`StreamOps.cdcFoldStream`) use, for BATCH
-    * callers replaying a changelog: rows with `opCol = "insert"` are
-    * the inserts (an update's new image included), `"delete"` the
-    * tombstones; anything else refuses loudly. Deletes-apply-first
-    * semantics, so a changelog that encodes an update as delete+insert
-    * of one id lands as an update. */
+  /** [[apply]] for an op-column change batch, for BATCH callers
+    * replaying a changelog — split by [[splitOps]], the splitter the
+    * CDC streams use. Deletes-apply-first semantics, so a changelog
+    * that encodes an update as delete+insert of one id lands as an
+    * update. */
   def applyOps(spark: SparkSession, dir: String, changes: DataFrame,
                batchId: Long, opCol: String = "op",
                id: String = "doc_id", text: String = "text"): Unit = {
-    val unknown = changes.filter(col(opCol).isNull ||
-        !col(opCol).isin("insert", "delete"))
-      .limit(1).collect()
-    require(unknown.isEmpty,
-      s"IndexCdc.applyOps: unknown $opCol value " +
-        s"'${unknown.headOption.map(_.getAs[Any](opCol)).getOrElse("")}'" +
-        " — expected insert|delete")
-    apply(spark, dir,
-      changes.filter(col(opCol) === "insert").drop(opCol),
-      changes.filter(col(opCol) === "delete").drop(opCol),
+    val (inserts, deletes) = splitOps(changes, opCol, "IndexCdc.applyOps")
+    apply(spark, dir, inserts.drop(opCol), deletes.drop(opCol),
       batchId, id, text)
   }
 
@@ -147,6 +196,20 @@ object IndexCdc {
           "rebuild")
     }
 
+  /** Committed `doc_id`s of one document family's primary table,
+    * shadow tombstones applied — the [[liveIds]] leg of the families
+    * with no masked reader of their own. */
+  private def livePrimary(spark: SparkSession, dir: String,
+                          table: String): DataFrame = {
+    val root = Dedup.indexRoot(spark, dir)
+    val meta = Dedup.readMeta(spark, root)
+    Dedup.maskShadowed(
+      Dedup.committedOnly(Dedup.readPq(spark, s"$root/$table"), meta),
+      "doc_id", Dedup.committedTombsAt(spark, s"$root/tomb", meta, "doc_id"),
+      "doc_id")
+      .select(col("doc_id").as("id")).distinct()
+  }
+
   /** The LIVE id set of the index at `dir` — committed rows minus
     * committed tombstones, one column named `id` — read through each
     * family's own masking choke point. This is the observable the
@@ -154,27 +217,11 @@ object IndexCdc {
     * history applied to every family must net to the same live set. */
   def liveIds(spark: SparkSession, dir: String): DataFrame =
     kindOf(spark, dir) match {
-      case Bm25Index.Kind =>
-        val root = Dedup.indexRoot(spark, dir)
-        val meta = Dedup.readMeta(spark, root)
-        Dedup.maskShadowed(
-          Dedup.committedOnly(Dedup.readPq(spark, s"$root/postings"), meta),
-          "doc_id",
-          Dedup.committedTombsAt(spark, s"$root/tomb", meta, "doc_id"),
-          "doc_id")
-          .select(col("doc_id").as("id")).distinct()
+      case Bm25Index.Kind => livePrimary(spark, dir, "postings")
       case Dedup.MinhashIndexKind =>
         Dedup.readMinhashIndex(spark, dir).sets
           .select(col("doc_id").as("id")).distinct()
-      case SimJoin.PrefixIndexKind =>
-        val root = Dedup.indexRoot(spark, dir)
-        val meta = Dedup.readMeta(spark, root)
-        Dedup.maskShadowed(
-          Dedup.committedOnly(Dedup.readPq(spark, s"$root/sets"), meta),
-          "doc_id",
-          Dedup.committedTombsAt(spark, s"$root/tomb", meta, "doc_id"),
-          "doc_id")
-          .select(col("doc_id").as("id")).distinct()
+      case SimJoin.PrefixIndexKind => livePrimary(spark, dir, "sets")
       case Similarity.IvfIndexKind =>
         Similarity.readIvfIndex(spark, dir).assigned
           .select(col("vec_id").as("id")).distinct()

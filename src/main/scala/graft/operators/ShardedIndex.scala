@@ -77,9 +77,6 @@ object ShardedIndex {
     SimJoin.PrefixIndexKind, Similarity.IvfIndexKind,
     Similarity.EmbeddingIndexKind)
 
-  private val vecKinds = Set(Similarity.IvfIndexKind,
-    Similarity.EmbeddingIndexKind)
-
   /** The shard an id routes to — one deterministic integer in
     * [0, shards). The id is normalized to LONG before hashing:
     * xxhash64 is type-sensitive (INT 5 and BIGINT 5 hash differently),
@@ -87,8 +84,8 @@ object ShardedIndex {
     * built from BIGINT ids would otherwise silently route to the wrong
     * shard — deletes missing, ids duplicating across shards — with
     * nothing at open to catch it. The cast pins the one convention
-    * every id-typed caller already nets to ([[emptyInserts]]/
-    * [[emptyDeletes]] and the family tombstone writers all cast to
+    * every id-typed caller already nets to (`IndexCdc.emptyInserts`/
+    * `IndexCdc.emptyDeletes` and the family tombstone writers all cast to
     * long), and [[Router]] fingerprints it. */
   def shardOf(id: Column, shards: Int): Column =
     pmod(xxhash64(id.cast("long")), lit(shards.toLong)).cast("int")
@@ -115,11 +112,6 @@ object ShardedIndex {
     m
   }
 
-  /** The routing id column for a child family (vector families key on
-    * `vec_id` whatever the caller's document-id name is). */
-  private def routeCol(childKind: String, id: String): String =
-    if (vecKinds(childKind)) "vec_id" else id
-
   /** Stages `df` into `<home>/_staging_<tag>` partitioned by the shard
     * column, so the per-shard loop reads partition-PRUNED slices of one
     * materialized pass instead of rescanning the input S times. The
@@ -130,6 +122,9 @@ object ShardedIndex {
   private def stageRouted(df: DataFrame, home: String, shards: Int,
                           idCol: String, tag: String)
       : (Int => DataFrame, Seq[Int], () => Unit) = {
+    // a statically empty side (an append's deletes, a delete's inserts)
+    // touches no shard: nothing to stage
+    if (Dedup.staticallyEmpty(df)) return (_ => df, Seq.empty, () => ())
     val spark = df.sparkSession
     val dir = s"$home/_staging_$tag"
     // ONE pass over the input: the routed write itself. The old shape
@@ -343,7 +338,7 @@ object ShardedIndex {
       if (batchId <= Dedup.lastCommittedBatch(m)) return
       val childKind = m("child_kind")
       val shards = m("shards").toInt
-      val rid = routeCol(childKind, id)
+      val rid = IndexCdc.idColOf(childKind, id)
       val (insSlice, insShards, cleanI) =
         stageRouted(inserts, home, shards, rid, s"ins_$batchId")
       val (delSlice, delShards, cleanD) =
@@ -367,7 +362,7 @@ object ShardedIndex {
              batchId: Long, id: String = "doc_id",
              text: String = "text"): Unit =
     applyCdc(spark, home, newRows,
-      emptyDeletes(spark, manifest(spark, home)("child_kind"), id),
+      IndexCdc.emptyDeletes(spark, manifest(spark, home)("child_kind"), id),
       batchId, id, text)
 
   /** Takedown-only [[applyCdc]]. */
@@ -375,29 +370,10 @@ object ShardedIndex {
              batchId: Long, id: String = "doc_id",
              text: String = "text"): Unit = {
     val m = manifest(spark, home)
-    applyCdc(spark, home, emptyInserts(spark, m("child_kind"), id, text),
+    applyCdc(spark, home,
+      IndexCdc.emptyInserts(spark, m("child_kind"), id, text),
       tombstones, batchId, id, text)
   }
-
-  private def emptyDeletes(spark: SparkSession, childKind: String,
-                           id: String): DataFrame =
-    spark.range(0).select(col("id").cast("long").as(routeCol(childKind, id)))
-
-  private def emptyInserts(spark: SparkSession, childKind: String,
-                           id: String, text: String): DataFrame =
-    if (vecKinds(childKind))
-      // NOT a literal empty array: the IVF appliers build
-      // dimension-checked expressions (cosine against the stored
-      // centroids) over this column, and Catalyst's ConstantFolding
-      // would EVALUATE them at plan time on a foldable 0-dim literal —
-      // crashing a delete-only batch that carries no insert rows at
-      // all. A column-dependent array is unfoldable, and with zero
-      // rows it is never evaluated at runtime either.
-      spark.range(0).select(col("id").cast("long").as("vec_id"),
-        array(col("id").cast("float")).as("embedding"))
-    else
-      spark.range(0).select(col("id").cast("long").as(id),
-        lit("").as(text))
 
   /** Data-file count across a shard's core tables — the fragmentation
     * measure [[compact]] selects on (listing cost only). */

@@ -138,9 +138,9 @@ object SimJoin {
     * selectivity-only — a stale (over-counting) df order can never
     * change the VERIFIED result, the same contract appends already
     * rely on — so nothing is retracted from it. Physical removal (and
-    * df refresh) happens at the next [[rebuildPrefixIndex]]. Same
-    * replay contract as the appends (batchId ≥ 0 marker-committed,
-    * None = synchronous one-shot). Tombstones are SHADOW tombstones
+    * df refresh) happens at the next [[rebuildPrefixIndex]]. It is an
+    * [[applyPrefixCdc]] batch with no inserts (`batchId = None` is the
+    * synchronous one-shot). Tombstones are SHADOW tombstones
     * (`Dedup.ShadowCol`): they kill only rows from batches ≤ the
     * marker at delete time, so a later batched re-insert of the id
     * serves — no rebuild required. No statistics and no counts hang
@@ -150,18 +150,9 @@ object SimJoin {
   def deleteFromPrefixIndex(spark: SparkSession, dir: String,
                             tombstones: DataFrame,
                             batchId: Option[Long] = None): Unit =
-    IndexLease.withLease(spark, dir, "deleteFromPrefixIndex") {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validatePrefixMeta(meta, dir)
-    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
-    val ids = tombstones.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct()
-    Dedup.writeTombs(ids, Dedup.lastCommittedBatch(meta),
-      batchId.getOrElse(-1L), s"$root/tomb")
-    Dedup.writeMeta(spark, root,
-      meta ++ batchId.map(b => "last_committed_batch" -> b.toString))
-  }
+    commitPrefix(spark, dir,
+      IndexCdc.emptyInserts(spark, PrefixIndexKind, "doc_id", "text"),
+      tombstones, batchId, "doc_id", "text", "deleteFromPrefixIndex")
 
   def writePrefixIndex(df: DataFrame, id: String, text: String,
                        thrNum: Int, thrDen: Int, dir: String,
@@ -344,30 +335,15 @@ object SimJoin {
     * v2 index layout — a replayed batchId is skipped outright (durable
     * commit marker) or, if its previous attempt crashed mid-append,
     * dynamically overwrites its own partition. df is left stale —
-    * selectivity-only debt, by the losslessness argument above. */
+    * selectivity-only debt, by the losslessness argument above. An
+    * [[applyPrefixCdc]] batch with no deletes. */
   def appendPrefixIndex(spark: SparkSession, dir: String,
                         newDocs: DataFrame, batchId: Option[Long] = None,
                         id: String = "doc_id",
                         text: String = "text"): Unit =
-    IndexLease.withLease(spark, dir, "appendPrefixIndex") {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validatePrefixMeta(meta, dir)
-    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
-    Dedup.refuseShadowedInserts(newDocs, id,
-      Dedup.committedTombsAt(spark, s"$root/tomb", meta, "doc_id"),
-      "doc_id", "appendPrefixIndex", dir, syncPath = batchId.isEmpty)
-    val (thrNum, thrDen) = (meta("pj_num").toInt, meta("pj_den").toInt)
-    val w = meta("pj_w").toInt
-    val dfreq = Dedup.committedOnly(
-      Dedup.readPq(spark, s"$root/df"), meta).select("h", "df")
-    val part = batchId.getOrElse(-1L)
-    val newSets = writeBatchSets(spark, root, newDocs, id, text, w, part)
-    Dedup.writeIndexTable(prefixPostings(newSets, dfreq, thrNum, thrDen),
-      part, s"$root/prefix")
-    Dedup.writeMeta(spark, root,
-      meta ++ batchId.map(b => "last_committed_batch" -> b.toString))
-  }
+    commitPrefix(spark, dir, newDocs,
+      IndexCdc.emptyDeletes(spark, PrefixIndexKind, id), batchId, id, text,
+      "appendPrefixIndex")
 
   /** Shingles `newDocs`, lands the sets in their `ingest_batch = part`
     * partition, and returns the batch's sets for the prefix cut. For a
@@ -378,13 +354,15 @@ object SimJoin {
     * where they were going anyway. The synchronous part = -1 path
     * appends into the base partition, which already holds prior rows —
     * a read-back could not isolate the batch, so it keeps the explicit
-    * checkpoint. */
+    * checkpoint. A statically empty batch writes nothing and returns
+    * itself. */
   private def writeBatchSets(spark: SparkSession, root: String,
                              newDocs: DataFrame, id: String, text: String,
                              w: Int, part: Long): DataFrame = {
     val setsPlan = Dedup.shingleHashesFlat(newDocs, id, text, w)
       .filter(size(col("hs")) > 0)
-    if (part >= 0L) {
+    if (Dedup.staticallyEmpty(setsPlan)) setsPlan
+    else if (part >= 0L) {
       Dedup.writeIndexTable(setsPlan, part, s"$root/sets")
       Dedup.readPq(spark, s"$root/sets")
         .filter(col(Dedup.IngestBatchCol) === part)
@@ -397,10 +375,10 @@ object SimJoin {
   }
 
   /** One CDC change-batch applied to the prefix index atomically under
-    * ONE commit marker — the per-trigger body of
-    * [[graft.streaming.StreamOps.maintainPrefixCdcStream]], the
-    * lossless twin of `Dedup.applyMinhashCdc`: inserts are shingled
-    * and their prefixes cut under the STORED dictionary (order
+    * ONE commit marker — the family's in-place commit, which
+    * [[appendPrefixIndex]] and [[deleteFromPrefixIndex]] run with one
+    * side empty and [[IndexCdc]] routes change streams to: inserts are
+    * shingled and their prefixes cut under the STORED dictionary (order
     * staleness is selectivity-only, per the losslessness argument
     * above), deletes tombstoned, sets + prefixes + tombstones all in
     * one `ingest_batch` partition with the marker strictly last.
@@ -411,36 +389,48 @@ object SimJoin {
   def applyPrefixCdc(spark: SparkSession, dir: String, newDocs: DataFrame,
                      tombstones: DataFrame, batchId: Long,
                      id: String = "doc_id", text: String = "text"): Unit =
-    IndexLease.withLease(spark, dir, "applyPrefixCdc") {
+    commitPrefix(spark, dir, newDocs, tombstones, Some(batchId), id, text,
+      "applyPrefixCdc")
+
+  /** The prefix family's one in-place commit body ([[applyPrefixCdc]]):
+    * `batchId = None` is the synchronous path (base partition, marker
+    * untouched); a statically empty side writes nothing. `op` names the
+    * lease and the refusals. */
+  private def commitPrefix(spark: SparkSession, dir: String,
+                           newDocs: DataFrame, tombstones: DataFrame,
+                           batchId: Option[Long], id: String, text: String,
+                           op: String): Unit =
+    IndexLease.withLease(spark, dir, op) {
     val root = Dedup.indexRoot(spark, dir)
     val meta = Dedup.readMeta(spark, root)
     validatePrefixMeta(meta, dir)
-    if (batchId <= Dedup.lastCommittedBatch(meta)) return
+    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
     val ids = tombstones.select(col(id).cast("long").as("doc_id")).distinct()
-    val priorTombs =
-      Dedup.committedTombsAt(spark, s"$root/tomb", meta, "doc_id")
-    Dedup.refuseShadowedInserts(newDocs, id, priorTombs, "doc_id",
-      "applyPrefixCdc", dir, syncPath = false)
+    Dedup.refuseShadowedInserts(newDocs, id,
+      Dedup.committedTombsAt(spark, s"$root/tomb", meta, "doc_id"),
+      "doc_id", op, dir, syncPath = batchId.isEmpty)
     val (thrNum, thrDen) = (meta("pj_num").toInt, meta("pj_den").toInt)
-    val w = meta("pj_w").toInt
+    val part = batchId.getOrElse(-1L)
     // deletes apply first (the shadow tombstone kills pre-batch rows
     // only), so the batch's own inserts — including an update's new
-    // image — are all indexed
-    val dfreq = Dedup.committedOnly(
-      Dedup.readPq(spark, s"$root/df"), meta).select("h", "df")
-    // sets land first (the write IS the batch's materialization — see
-    // writeBatchSets); the prefix cut reads the batch partition back,
-    // and the tombstone write is independent of it, so the two overlap
-    // (Par, guide §2.6) — the marker bump stays strictly last
-    val newSets = writeBatchSets(spark, root, newDocs, id, text, w, batchId)
+    // image — are all indexed. Sets land first (the write IS the
+    // batch's materialization — see writeBatchSets); the prefix cut
+    // reads the batch partition back, and the tombstone write is
+    // independent of it, so the two overlap (Par, guide §2.6) — the
+    // marker bump stays strictly last. An empty insert side never opens
+    // the stored dictionary, whose first read infers its schema in a job
+    val newSets = writeBatchSets(spark, root, newDocs, id, text,
+      meta("pj_w").toInt, part)
     Par.run(Seq(
-      () => Dedup.writeIndexTable(
-        prefixPostings(newSets, dfreq, thrNum, thrDen),
-        batchId, s"$root/prefix"),
-      () => Dedup.writeTombs(ids, Dedup.lastCommittedBatch(meta), batchId,
+      () => if (!Dedup.staticallyEmpty(newSets)) Dedup.writeIndexTable(
+        prefixPostings(newSets, Dedup.committedOnly(
+          Dedup.readPq(spark, s"$root/df"), meta).select("h", "df"),
+          thrNum, thrDen),
+        part, s"$root/prefix"),
+      () => Dedup.writeTombs(ids, Dedup.lastCommittedBatch(meta), part,
         s"$root/tomb")))
     Dedup.writeMeta(spark, root,
-      meta + ("last_committed_batch" -> batchId.toString))
+      meta ++ batchId.map(b => "last_committed_batch" -> b.toString))
   }
 
   /** Folds a CDC/append-fed prefix index's per-batch partitions back

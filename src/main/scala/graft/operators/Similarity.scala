@@ -545,74 +545,76 @@ object Similarity {
                      newVectors: DataFrame,
                      batchId: Option[Long] = None,
                      allowCellDrift: Boolean = false): Unit =
-    IndexLease.withLease(spark, dir, "appendIvfIndex") {
-    val (root, meta) = ivfMeta(spark, dir)
-    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
-    Dedup.refuseShadowedInserts(newVectors, "vec_id",
-      ivfTombs(spark, root, meta), "vec_id", "appendIvfIndex", dir,
-      syncPath = batchId.isEmpty)
-    val histUpdate = appendIvfRowsCore(spark, root, meta, newVectors,
-      batchId, allowCellDrift)
-    Dedup.writeMeta(spark, root,
-      meta ++ histUpdate ++ batchId.map(b => "last_committed_batch" -> b.toString))
-  }
+    commitIvf(spark, dir, newVectors,
+      IndexCdc.emptyDeletes(spark, IvfIndexKind, "vec_id"), batchId,
+      allowCellDrift, "appendIvfIndex")
 
   /** One CDC change-batch applied atomically under ONE commit marker —
-    * the per-trigger body of
-    * [[graft.streaming.StreamOps.maintainIvfCdcStream]], mirroring
-    * [[graft.operators.Bm25Index.applyCdc]]: the batch's inserted
-    * vectors land as their `ingest_batch` subtree, its tombstones in
-    * `tomb/`'s matching partition, marker strictly last — an
-    * append-then-delete composition with one batchId cannot exist (the
-    * first call would commit the marker, the second skip). Deletes
+    * the IVF family's in-place commit, which [[appendIvfIndex]] and
+    * [[deleteFromIvfIndex]] run with one side empty and [[IndexCdc]]
+    * routes change streams to: the batch's inserted vectors land as
+    * their `ingest_batch` subtree, its tombstones in `tomb/`'s matching
+    * partition, marker strictly last. Deletes
     * apply FIRST, to the pre-batch state (shadow tombstones —
     * `Dedup.ShadowCol` — kill only rows from batches ≤ the pre-batch
     * marker): delete+insert of one vec_id in the batch is an UPDATE
     * (the new vector is assigned and serves, the old one falls under
     * the shadow), and a re-insert of a vec_id deleted in an earlier
-    * batch serves the same way. Inserts flow through the same drift
-    * sentinel as [[appendIvfIndex]]. */
+    * batch serves the same way. Inserts flow through the drift
+    * sentinel (see [[appendIvfIndex]]). */
   def applyIvfCdc(spark: SparkSession, dir: String, newVectors: DataFrame,
                   tombstones: DataFrame, batchId: Long,
                   allowCellDrift: Boolean = false): Unit =
-    IndexLease.withLease(spark, dir, "applyIvfCdc") {
+    commitIvf(spark, dir, newVectors, tombstones, Some(batchId),
+      allowCellDrift, "applyIvfCdc")
+
+  /** The IVF family's one in-place commit body ([[applyIvfCdc]]):
+    * `batchId = None` is the synchronous path (base partition, marker
+    * untouched); a statically empty side writes nothing. `op` names the
+    * lease and the refusals. */
+  private def commitIvf(spark: SparkSession, dir: String,
+                        newVectors: DataFrame, tombstones: DataFrame,
+                        batchId: Option[Long], allowCellDrift: Boolean,
+                        op: String): Unit =
+    IndexLease.withLease(spark, dir, op) {
     val (root, meta) = ivfMeta(spark, dir)
-    if (batchId <= Dedup.lastCommittedBatch(meta)) return
+    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
     // cast like every other family: an int-typed CDC feed would land
     // int32 tomb partitions beside other writers' int64 ones, and the
     // schema merge / anti-join behavior of that mix is undefined
     val ids = tombstones.select(col("vec_id").cast("long").as("vec_id"))
       .distinct()
     Dedup.refuseShadowedInserts(newVectors, "vec_id",
-      ivfTombs(spark, root, meta), "vec_id", "applyIvfCdc", dir,
-      syncPath = false)
+      ivfTombs(spark, root, meta), "vec_id", op, dir,
+      syncPath = batchId.isEmpty)
     // deletes-first: ALL inserts are assigned (an update's new image
     // too — the pre-batch shadow_upto spares this batch's rows).
     // The assignment+write chain and the tombstone write touch
     // disjoint paths — overlapped (Par, guide §2.6); the marker bump
-    // stays strictly last. (A drift refusal inside the core now lands
-    // after the tomb write — harmless: nothing below the marker is
-    // readable, and the replay overwrites the partition.)
-    var histUpdate: Map[String, String] = Map.empty
-    Par.run(Seq(
-      () => { histUpdate = appendIvfRowsCore(spark, root, meta,
-        newVectors, Some(batchId), allowCellDrift) },
-      () => Dedup.writeTombs(ids, Dedup.lastCommittedBatch(meta), batchId,
-        s"$root/tomb")))
-    Dedup.writeMeta(spark, root, meta ++ histUpdate +
-      ("last_committed_batch" -> batchId.toString))
+    // stays strictly last. (A drift refusal inside the core may land
+    // after the tomb write — harmless for a batchId: nothing above the
+    // marker is readable, and the replay overwrites the partition.)
+    val Seq(histUpdate, _) = Par.run(Seq(
+      () => appendIvfRowsCore(spark, root, meta, newVectors, batchId,
+        allowCellDrift),
+      () => { Dedup.writeTombs(ids, Dedup.lastCommittedBatch(meta),
+        batchId.getOrElse(-1L), s"$root/tomb"); Map.empty[String, String] }))
+    Dedup.writeMeta(spark, root, meta ++ histUpdate ++
+      batchId.map(b => "last_committed_batch" -> b.toString))
   }
 
-  /** The shared append body (assign under the stored quantizer, drift
-    * sentinel, whole-subtree replay replacement, data write) WITHOUT
-    * the marker commit — callers own the marker so a combined
-    * insert+delete batch commits once. Returns the folded `cell_hist`
-    * metadata update. `dir` here is the RESOLVED version root. */
+  /** The insert leg of [[commitIvf]] (assign under the stored
+    * quantizer, drift sentinel, whole-subtree replay replacement, data
+    * write) WITHOUT the marker commit, which the body owns. Returns the
+    * folded `cell_hist` metadata update; a statically empty batch
+    * writes nothing and updates nothing. `dir` here is the RESOLVED
+    * version root. */
   private def appendIvfRowsCore(spark: SparkSession, dir: String,
                                 meta: Map[String, String],
                                 newVectors: DataFrame,
                                 batchId: Option[Long],
                                 allowCellDrift: Boolean): Map[String, String] = {
+    if (Dedup.staticallyEmpty(newVectors)) return Map.empty
     val cents = readIvfCentroids(spark, dir)
     // materialized: the cell histogram below and the write both
     // consume it — without this the quantize+argmax runs twice
@@ -675,10 +677,9 @@ object Similarity {
     * retrains, and swaps a tombstone-free layout in — physical removal
     * plus the usual cell-balance remedy in one op.
     *
-    * Replay contract: identical to [[appendIvfIndex]] — batchId ≥ 0
-    * deletes are marker-committed (torn partitions excluded by
-    * committed-only reads, healed by replay's partition overwrite);
-    * batchId=None is a synchronous single-writer one-shot. Tombstones
+    * It is an [[applyIvfCdc]] batch with no inserts, so the replay
+    * contract is the same (batchId=None is a synchronous single-writer
+    * one-shot). Tombstones
     * are SHADOW tombstones (`Dedup.ShadowCol` — they kill only rows
     * from batches ≤ the marker at delete time), so a later batched
     * re-insert of the vec_id serves; deleting unknown ids stays free
@@ -687,17 +688,9 @@ object Similarity {
   def deleteFromIvfIndex(spark: SparkSession, dir: String,
                          tombstones: DataFrame,
                          batchId: Option[Long] = None): Unit =
-    IndexLease.withLease(spark, dir, "deleteFromIvfIndex") {
-    val (root, meta) = ivfMeta(spark, dir)
-    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
-    // long cast for tomb-partition type stability (see applyIvfCdc)
-    val ids = tombstones.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct()
-    Dedup.writeTombs(ids, Dedup.lastCommittedBatch(meta),
-      batchId.getOrElse(-1L), s"$root/tomb")
-    Dedup.writeMeta(spark, root,
-      meta ++ batchId.map(b => "last_committed_batch" -> b.toString))
-  }
+    commitIvf(spark, dir,
+      IndexCdc.emptyInserts(spark, IvfIndexKind, "vec_id", "embedding"),
+      tombstones, batchId, allowCellDrift = false, "deleteFromIvfIndex")
 
   /** Committed shadow tombstones — (vec_id, `Dedup.ShadowCol`) — or
     * None when no delete ever ran, so the append-only read path pays
@@ -1279,28 +1272,35 @@ object Similarity {
     val spark = corpus.sparkSession
     IndexLease.withLease(spark, dir, "writeEmbeddingIndex") {
       val idx = buildEmbeddingIndex(corpus, bands, rowBits)
-      // pointer commit: replaces everything atomically; readers of the
-      // old index keep serving it
-      Dedup.swapInDir(spark, dir) { tmp =>
-        // two independent writes overlapped (Par, guide §2.6);
-        // n_vectors rides the vectors write as an Observation instead
-        // of a separate count job (§1.2)
-        val obs = org.apache.spark.sql.Observation()
-        Par.run(Seq(
-          () => Dedup.writeIndexTable(idx.bands, -1L, s"$tmp/bands",
-            overwriteAll = true),
-          () => Dedup.writeIndexTable(
-            idx.vectors.observe(obs, count(lit(1)).as("n")), -1L,
-            s"$tmp/vectors", overwriteAll = true)))
-        Dedup.writeMeta(spark, tmp, Map(
-          "kind" -> EmbeddingIndexKind,
-          "bands" -> idx.nBands.toString,
-          "rowBits" -> idx.rowBits.toString,
-          "lattice" -> SignLshLattice,
-          "n_vectors" -> obs.get("n").asInstanceOf[Long].toString))
-      }
+      swapInEmbedding(spark, dir, idx,
+        Map("kind" -> EmbeddingIndexKind, "lattice" -> SignLshLattice))
     }
   }
+
+  /** The embedding family's one whole-index writer, behind
+    * [[writeEmbeddingIndex]] and [[rebuildEmbeddingIndex]]: `idx`'s
+    * bands and vectors land in a fresh version, then the commit record
+    * — `meta` plus the blocking and `n_vectors`, which rides the vectors
+    * write as an Observation instead of a separate count job (§1.2) —
+    * strictly last. Pointer commit: replaces everything atomically;
+    * readers of the old index keep serving it. */
+  private def swapInEmbedding(spark: SparkSession, dir: String,
+                              idx: EmbeddingIndex,
+                              meta: Map[String, String]): Unit =
+    Dedup.swapInDir(spark, dir) { tmp =>
+      val obs = org.apache.spark.sql.Observation()
+      // two independent writes overlapped (Par, guide §2.6)
+      Par.run(Seq(
+        () => Dedup.writeIndexTable(idx.bands, -1L, s"$tmp/bands",
+          overwriteAll = true),
+        () => Dedup.writeIndexTable(
+          idx.vectors.observe(obs, count(lit(1)).as("n")), -1L,
+          s"$tmp/vectors", overwriteAll = true)))
+      Dedup.writeMeta(spark, tmp, meta +
+        ("bands" -> idx.nBands.toString) +
+        ("rowBits" -> idx.rowBits.toString) +
+        ("n_vectors" -> obs.get("n").asInstanceOf[Long].toString))
+    }
 
   private def validateEmbeddingMeta(meta: Map[String, String],
                                     dir: String): Unit = {
@@ -1356,98 +1356,51 @@ object Similarity {
     * [[readEmbeddingIndex]] anti-joins both tables, and `n_vectors`
     * decrements by the newly-tombstoned held ids (the occupancy-drift
     * refusal keeps sizing against the LIVE count). Physical removal at
-    * the next [[rebuildEmbeddingIndex]]. Same replay contract as the
-    * appends; a tombstoned id stays gone until a rebuild. */
+    * the next [[rebuildEmbeddingIndex]]. It is an [[applyEmbeddingCdc]]
+    * batch with no inserts, so the replay contract is the same, and it
+    * never refuses on occupancy: deleting only shrinks the index. */
   def deleteFromEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
                                dir: String, tombstones: DataFrame,
                                batchId: Option[Long] = None): Unit =
-    IndexLease.withLease(spark, dir, "deleteFromEmbeddingIndex") {
-    val (root, meta) = embMeta(spark, dir)
-    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
-    val ids = tombstones.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct()
-    val tombs = Dedup.committedTombsAt(spark, s"$root/tomb", meta, "vec_id")
-    // only ids the index currently holds LIVE tombstone and decrement —
-    // double-deletes and unknown ids are no-ops, keeping n_vectors a
-    // live count under any delete/re-insert history
-    val (fresh, relT) = Dedup.materializeTracked(
-      Dedup.liveAmong(ids, "vec_id",
-        Dedup.maskShadowed(
-          Dedup.committedOnly(Dedup.readPq(spark, s"$root/vectors"), meta),
-          "vec_id", tombs, "vec_id"), "vec_id"))
-    try {
-      // the tombstoned-held count rides the tomb write as an
-      // Observation instead of a separate count job (§1.2)
-      val obs = org.apache.spark.sql.Observation()
-      Dedup.writeTombs(fresh.observe(obs, count(lit(1)).as("n")),
-        Dedup.lastCommittedBatch(meta),
-        batchId.getOrElse(-1L), s"$root/tomb")
-      Dedup.writeMeta(spark, root,
-        meta + ("n_vectors" -> (meta("n_vectors").toLong -
-          obs.get("n").asInstanceOf[Long]).toString)
-          ++ batchId.map(b => "last_committed_batch" -> b.toString))
-    } finally relT()
-  }
+    commitEmbedding(spark, dir,
+      IndexCdc.emptyInserts(spark, EmbeddingIndexKind, "vec_id", "embedding"),
+      tombstones, batchId, allowOccupancyDrift = false,
+      "deleteFromEmbeddingIndex")
 
   /** Folds a batch into a persisted embedding index IN PLACE, keying it
     * with the index's OWN (bands, rowBits) — persisted keys must all be
     * cut by one blocking. Growth contract: appending is refused once the
-    * grown total drifts past the occupancy target ([[autoRowBits]] no
-    * longer picks the index's rowBits) — occupancy, and with it
+    * grown total drifts past the occupancy target ([[autoRowBits]] picks
+    * a LARGER rowBits than the index's) — occupancy, and with it
     * candidate volume per batch, would creep quadratically if batches
-    * kept piling into a band space sized for a smaller corpus. Pass
+    * kept piling into a band space sized for a smaller corpus. An index
+    * whose keys were cut for a larger corpus than it holds accepts
+    * appends until it reaches that size. Pass
     * `allowOccupancyDrift = true` to accept that cost consciously
     * (e.g. mid-migration); the durable fix is a rebuild at the new
-    * auto rowBits. Same replay contract as
-    * [[graft.operators.Dedup.appendToMinhashIndex]]: pass the streaming
-    * micro-batch id as `batchId` and a replayed batch is skipped (if
-    * committed) or partition-overwritten (if its first attempt crashed)
-    * — exactly-once in effect; without it, one-shot single-writer. */
+    * auto rowBits. It is an [[applyEmbeddingCdc]] batch with no
+    * deletes: pass the streaming micro-batch id as `batchId` and a
+    * replayed batch is skipped (if committed) or partition-overwritten
+    * (if its first attempt crashed) — exactly-once in effect; without
+    * it, one-shot single-writer. */
   def appendToEmbeddingIndex(batch: DataFrame, dir: String,
                              allowOccupancyDrift: Boolean = false,
                              batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    IndexLease.withLease(spark, dir, "appendToEmbeddingIndex") {
-    val (root, meta) = embMeta(spark, dir)
-    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
-    Dedup.refuseShadowedInserts(batch, "vec_id",
-      Dedup.committedTombsAt(spark, s"$root/tomb", meta, "vec_id"),
-      "vec_id", "appendToEmbeddingIndex", dir, syncPath = batchId.isEmpty)
-    val bands = meta("bands").toInt
-    val rowBits = meta("rowBits").toInt
-    val cc = Dedup.materialize(batch.select(col("vec_id"), col("embedding")))
-    val nNew = meta("n_vectors").toLong + cc.count()
-    if (!allowOccupancyDrift) {
-      val auto = autoRowBits(nNew)
-      require(auto == rowBits,
-        s"appendToEmbeddingIndex: index at $dir grown to n=$nNew vectors " +
-          s"-> autoRowBits=$auto, but its keys were cut at rowBits=$rowBits " +
-          "— bucket occupancy (and per-batch candidate volume) is past the " +
-          "sizing target. Rebuild with writeEmbeddingIndex, or pass " +
-          "allowOccupancyDrift=true to accept the extra candidates")
-    }
-    val part = batchId.getOrElse(-1L)
-    // two independent writes off the materialized batch — overlapped
-    // (Par, guide §2.6); marker strictly last
-    Par.run(Seq(
-      () => Dedup.writeIndexTable(withBandKeys(cc, bands, rowBits), part,
-        s"$root/bands"),
-      () => Dedup.writeIndexTable(cc, part, s"$root/vectors")))
-    Dedup.writeMeta(spark, root, meta + ("n_vectors" -> nNew.toString)
-      ++ batchId.map(b => "last_committed_batch" -> b.toString))
-    }
+    commitEmbedding(spark, dir, batch,
+      IndexCdc.emptyDeletes(spark, EmbeddingIndexKind, "vec_id"), batchId,
+      allowOccupancyDrift, "appendToEmbeddingIndex")
   }
 
   /** One CDC change-batch applied to the embedding index atomically
-    * under ONE commit marker — the per-trigger body of
-    * [[graft.streaming.StreamOps.maintainEmbeddingCdcStream]], the
-    * sign-LSH twin of [[graft.operators.Dedup.applyMinhashCdc]]:
+    * under ONE commit marker — the family's in-place commit, which
+    * [[appendToEmbeddingIndex]] and [[deleteFromEmbeddingIndex]] run
+    * with one side empty and [[IndexCdc]] routes change streams to:
     * inserts are keyed under the index's stored (bands, rowBits),
     * deletes tombstoned, band keys + vectors + tombstones all in one
-    * `ingest_batch` partition with the marker strictly last (append
-    * then delete with one batchId cannot compose). Within one batch
-    * deletes apply FIRST (the shadow tombstone — `Dedup.ShadowCol` —
-    * kills pre-batch rows only), so delete+insert of one vec_id is an
+    * `ingest_batch` partition with the marker strictly last. Within one
+    * batch deletes apply FIRST (the shadow tombstone — `Dedup.ShadowCol`
+    * — kills pre-batch rows only), so delete+insert of one vec_id is an
     * UPDATE and a re-insert of an id deleted in an earlier batch
     * serves — no rebuild required. `n_vectors` nets inserts against
     * newly-tombstoned held ids (an upsert nets 0), so the
@@ -1457,17 +1410,30 @@ object Similarity {
                         dir: String, newVectors: DataFrame,
                         tombstones: DataFrame, batchId: Long,
                         allowOccupancyDrift: Boolean = false): Unit =
-    IndexLease.withLease(spark, dir, "applyEmbeddingCdc") {
+    commitEmbedding(spark, dir, newVectors, tombstones, Some(batchId),
+      allowOccupancyDrift, "applyEmbeddingCdc")
+
+  /** The embedding family's one in-place commit body
+    * ([[applyEmbeddingCdc]]): `batchId = None` is the synchronous path
+    * (base partition, marker untouched); a statically empty side writes
+    * nothing. `op` names the lease and the refusals. */
+  private def commitEmbedding(spark: org.apache.spark.sql.SparkSession,
+                              dir: String, newVectors: DataFrame,
+                              tombstones: DataFrame, batchId: Option[Long],
+                              allowOccupancyDrift: Boolean,
+                              op: String): Unit =
+    IndexLease.withLease(spark, dir, op) {
     val (root, meta) = embMeta(spark, dir)
-    if (batchId <= Dedup.lastCommittedBatch(meta)) return
+    if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
     val ids = tombstones.select(col("vec_id").cast("long").as("vec_id"))
       .distinct()
     val priorTombs =
       Dedup.committedTombsAt(spark, s"$root/tomb", meta, "vec_id")
     Dedup.refuseShadowedInserts(newVectors, "vec_id", priorTombs, "vec_id",
-      "applyEmbeddingCdc", dir, syncPath = false)
-    // only currently-LIVE ids tombstone and decrement (see
-    // deleteFromEmbeddingIndex)
+      op, dir, syncPath = batchId.isEmpty)
+    // only ids the index currently holds LIVE tombstone and decrement —
+    // double-deletes and unknown ids are no-ops, keeping n_vectors a
+    // live count under any delete/re-insert history
     val (fresh, relT) = Dedup.materializeTracked(
       Dedup.liveAmong(ids, "vec_id",
         Dedup.maskShadowed(
@@ -1480,33 +1446,40 @@ object Similarity {
       // too — the pre-batch shadow_upto spares this batch's rows)
       val cc = Dedup.materialize(
         newVectors.select(col("vec_id"), col("embedding")))
-      val nDel = fresh.count()
-      val nNew = meta("n_vectors").toLong + cc.count() - nDel
-      if (!allowOccupancyDrift) {
+      val n0 = meta("n_vectors").toLong
+      val nIns = Dedup.countRows(cc)
+      if (!allowOccupancyDrift && nIns > 0) {
         // growth direction ONLY (auto > rowBits): occupancy past the
         // sizing target inflates per-batch candidate volume — refuse.
         // The shrink direction (a net-deleting stream dropping n below
-        // the current rowBits bracket) is NOT refused: the stored keys
-        // stay valid, occupancy falls BELOW target (fewer candidates,
-        // same recall), and a delete-heavy stream must keep draining —
-        // rebuilding to re-tighten the bucket space is optional hygiene.
+        // the current rowBits bracket, or an index cut at a rowBits
+        // sized for more vectors than it holds) is NOT refused: the
+        // stored keys stay valid, occupancy sits BELOW target (fewer
+        // candidates, same recall), and a delete-heavy stream must keep
+        // draining — rebuilding to re-tighten the bucket space is
+        // optional hygiene.
+        val nNew = n0 + nIns - Dedup.countRows(fresh)
         val auto = autoRowBits(nNew)
         require(auto <= rowBits,
-          s"applyEmbeddingCdc: index at $dir grown to live n=$nNew " +
-            s"vectors -> autoRowBits=$auto, but its keys were cut at " +
-            s"rowBits=$rowBits — rebuild with writeEmbeddingIndex, or " +
-            "pass allowOccupancyDrift=true to accept the extra candidates")
+          s"$op: index at $dir grown to live n=$nNew vectors -> " +
+            s"autoRowBits=$auto, but its keys were cut at rowBits=$rowBits " +
+            "— bucket occupancy (and per-batch candidate volume) is past " +
+            "the sizing target. Rebuild with writeEmbeddingIndex, or pass " +
+            "allowOccupancyDrift=true to accept the extra candidates")
       }
+      val part = batchId.getOrElse(-1L)
       // three independent writes off the two materialized frames —
-      // overlapped (Par, guide §2.6); marker strictly last
-      Par.run(Seq(
-        () => Dedup.writeIndexTable(withBandKeys(cc, bands, rowBits),
-          batchId, s"$root/bands"),
-        () => Dedup.writeIndexTable(cc, batchId, s"$root/vectors"),
-        () => Dedup.writeTombs(fresh, Dedup.lastCommittedBatch(meta),
-          batchId, s"$root/tomb")))
-      Dedup.writeMeta(spark, root, meta + ("n_vectors" -> nNew.toString)
-        + ("last_committed_batch" -> batchId.toString))
+      // overlapped (Par, guide §2.6); the deleted count rides the tomb
+      // write (writeCounted); marker strictly last
+      val Seq(_, _, nDel) = Par.run(Seq(
+        () => { Dedup.writeIndexTable(withBandKeys(cc, bands, rowBits),
+          part, s"$root/bands"); 0L },
+        () => { Dedup.writeIndexTable(cc, part, s"$root/vectors"); 0L },
+        () => Dedup.writeTombs(fresh, Dedup.lastCommittedBatch(meta), part,
+          s"$root/tomb")))
+      Dedup.writeMeta(spark, root,
+        meta + ("n_vectors" -> (n0 + nIns - nDel).toString)
+          ++ batchId.map(b => "last_committed_batch" -> b.toString))
     } finally relT()
   }
 
@@ -1563,14 +1536,8 @@ object Similarity {
         s"rebuildEmbeddingIndex: every vector in $dir is deleted — " +
           "nothing to rebuild; delete the index directory instead")
       val rb = if (rowBits > 0) rowBits else autoRowBits(n)
-      Dedup.swapInDir(spark, dir) { tmp =>
-        Dedup.writeIndexTable(withBandKeys(cc, nb, rb), -1L, s"$tmp/bands",
-          overwriteAll = true)
-        Dedup.writeIndexTable(cc, -1L, s"$tmp/vectors", overwriteAll = true)
-        Dedup.writeMeta(spark, tmp, meta
-          + ("bands" -> nb.toString) + ("rowBits" -> rb.toString)
-          + ("n_vectors" -> n.toString))
-      }
+      swapInEmbedding(spark, dir,
+        EmbeddingIndex(withBandKeys(cc, nb, rb), cc, nb, rb), meta)
     } finally release()
   }
 

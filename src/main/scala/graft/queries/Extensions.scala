@@ -37,6 +37,21 @@ object Extensions {
     * and a rebuild, never a stale index. */
   private val gateIdxMemo =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Drains the op-column change feed `ins ∪ dels` (three files, one
+    * per trigger) into the index home `$root/idx` through
+    * `StreamOps.maintainIndexCdcStream` — the one stream every
+    * stream_*_cdc gate drives, whatever the family and layout. */
+  private def streamCdcInto(s: SparkSession, root: String, ins: DataFrame,
+                            dels: DataFrame): Unit = {
+    ins.unionByName(dels).repartition(3)
+      .write.mode("overwrite").parquet(s"$root/cdc")
+    graft.streaming.StreamOps.maintainIndexCdcStream(
+      s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
+      "op", s"$root/idx", s"$root/ckpt").stop()
+  }
+
   private def gateMinhashIndex(s: SparkSession, d: String): String = {
     val f = new java.io.File(s"$d/documents.parquet")
     gateIdxMemo.computeIfAbsent(s"$d#${f.length}#${f.lastModified}", _ => {
@@ -1350,13 +1365,7 @@ object Extensions {
           col("doc_id") % 13 === 5)
         .select(col("doc_id"), lit(null).cast("string").as("text"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainBm25CdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       graft.operators.Bm25Index.compact(s, s"$root/idx")
       graft.operators.Bm25Index.crossBm25TopK(s,
         docs.filter(col("doc_id") % 29 === 0)
@@ -1385,13 +1394,7 @@ object Extensions {
           col("doc_id") % 13 === 5)
         .select(col("doc_id"), lit(null).cast("string").as("text"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainShardedCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       graft.operators.ShardedIndex.compact(s, s"$root/idx")
       graft.operators.ShardedIndex.crossBm25TopKSharded(s,
         docs.filter(col("doc_id") % 29 === 0)
@@ -2427,13 +2430,7 @@ object Extensions {
       val dels = even.filter(col("doc_id") % 5 === 1)
         .select(col("doc_id"), lit(null).cast("string").as("text"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainMinhashCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       // fold the per-batch fragmentation before serving (row-preserving
       // hygiene — the checked result must not move)
       Dedup.compactMinhashIndex(s, s"$root/idx")
@@ -2441,7 +2438,7 @@ object Extensions {
         Dedup.readMinhashIndex(s, s"$root/idx"), "doc_id", "text", 0.5)
     }),
     // the SAME change stream against a 4-shard minhash home, through
-    // the ONE sharded stream entry point (maintainShardedCdcStream —
+    // the ONE index stream entry point (maintainIndexCdcStream —
     // per-trigger fanout to the touched shards, per-shard markers, home
     // fast-skip): nets to the same live corpus, so stream_minhash_cdc's
     // oracle replays verbatim. With stream_bm25_sharded_cdc and the
@@ -2460,13 +2457,7 @@ object Extensions {
       val dels = even.filter(col("doc_id") % 5 === 1)
         .select(col("doc_id"), lit(null).cast("string").as("text"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainShardedCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       graft.operators.ShardedIndex.compact(s, s"$root/idx")
       Dedup.crossMinhashPairs(docs.filter(col("doc_id") % 2 === 1),
         graft.operators.ShardedIndex.readMinhashSharded(s, s"$root/idx"),
@@ -3387,13 +3378,7 @@ object Extensions {
         .select(col("vec_id"),
           lit(null).cast("array<float>").as("embedding"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainEmbeddingCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       Similarity.compactEmbeddingIndex(s, s"$root/idx")
       Similarity.crossEmbeddingPairs(e.filter(col("vec_id") % 2 === 1),
         Similarity.readEmbeddingIndex(s, s"$root/idx"), 0.3,
@@ -3420,13 +3405,7 @@ object Extensions {
         .select(col("vec_id"),
           lit(null).cast("array<float>").as("embedding"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainShardedCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       graft.operators.ShardedIndex.compact(s, s"$root/idx")
       Similarity.crossEmbeddingPairs(e.filter(col("vec_id") % 2 === 1),
         graft.operators.ShardedIndex.readEmbeddingSharded(s, s"$root/idx"),
@@ -3434,8 +3413,8 @@ object Extensions {
     }),
     // the remaining two family × layout stream cells: the SAME change
     // histories as stream_prefix_cdc / stream_ivf_cdc fanned into
-    // 4-shard homes through the ONE sharded stream entry point
-    // (maintainShardedCdcStream) — each nets to the identical live
+    // 4-shard homes through the ONE index stream entry point
+    // (maintainIndexCdcStream) — each nets to the identical live
     // state, so the monolithic oracles replay verbatim and the matrix
     // (5 CDC families × {monolithic, sharded}) is CLOSED: the stream ×
     // sharding composition adds no semantics anywhere, only the
@@ -3455,13 +3434,7 @@ object Extensions {
       val dels = even.filter(col("doc_id") % 5 === 1)
         .select(col("doc_id"), lit(null).cast("string").as("text"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainShardedCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       graft.operators.ShardedIndex.compact(s, s"$root/idx")
       graft.operators.ShardedIndex.crossPrefixJoinSharded(s,
         docs.filter(col("doc_id") % 2 === 1), s"$root/idx")
@@ -3480,13 +3453,7 @@ object Extensions {
         .select(col("vec_id"),
           lit(null).cast("array<float>").as("embedding"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainShardedCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       graft.operators.ShardedIndex.compact(s, s"$root/idx")
       Similarity.ivfTopKIndexed(
         graft.operators.ShardedIndex.readIvfSharded(s, s"$root/idx"),
@@ -3626,13 +3593,7 @@ object Extensions {
       val dels = even.filter(col("doc_id") % 5 === 1)
         .select(col("doc_id"), lit(null).cast("string").as("text"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainPrefixCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       graft.operators.SimJoin.compactPrefixIndex(s, s"$root/idx")
       graft.operators.SimJoin.crossPrefixJoin(s,
         docs.filter(col("doc_id") % 2 === 1), s"$root/idx")
@@ -3807,13 +3768,7 @@ object Extensions {
         .select(col("vec_id"),
           lit(null).cast("array<float>").as("embedding"))
         .withColumn("op", lit("delete"))
-      ins.unionByName(dels).repartition(3)
-        .write.mode("overwrite").parquet(s"$root/cdc")
-      val q = graft.streaming.StreamOps.maintainIvfCdcStream(
-        s.readStream.schema(s.read.parquet(s"$root/cdc").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/cdc"),
-        "op", s"$root/idx", s"$root/ckpt")
-      q.stop()
+      streamCdcInto(s, root, ins, dels)
       Similarity.compactIvfIndex(s, s"$root/idx")
       Similarity.ivfTopKIndexed(Similarity.readIvfIndex(s, s"$root/idx"),
         e.filter(col("vec_id") < 5), 10)

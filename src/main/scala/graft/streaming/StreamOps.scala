@@ -351,115 +351,34 @@ object StreamOps {
           batchId = Some(batchId))
     }
 
-  /** CDC twin for the PERSISTED BM25 INDEX itself — the full
-    * grow-and-shrink lifecycle as one change stream: each micro-batch's
-    * insert rows are indexed (postings + signed partials) and its
-    * delete rows tombstoned, all under one commit marker
-    * (`Bm25Index.applyCdc` — append-then-delete with one batchId
-    * cannot compose, and split partition writes would clobber each
-    * other). Deletes apply FIRST, to previously committed docs — a
+  /** CDC stream for a PERSISTED INDEX home, whatever its family and
+    * layout — the full grow-and-shrink lifecycle as one change stream.
+    * Each micro-batch's insert rows are indexed and its delete rows
+    * tombstoned under one commit marker through `IndexCdc.apply`,
+    * which dispatches on the home's stored `kind`: the BM25, minhash,
+    * prefix, IVF and sign-LSH appliers, or a sharded home, which routes
+    * the batch to the shards it touches (per-shard markers heal a
+    * trigger that crashed mid-fanout; the home marker fast-skips
+    * replays). Deletes apply FIRST, to previously committed rows — a
     * batch carrying delete+insert of one id is an UPDATE (the CDC
-    * upsert encoding); serving stays bit-exact over the live corpus
-    * at every batch boundary because df/(N,S) fold signed partials
-    * exactly. Replay: a redelivered batch recomputes identical
-    * partition content and skips once its marker is durable. */
-  def maintainBm25CdcStream(cdc: DataFrame, opCol: String,
-                            indexDir: String, checkpointDir: String,
-                            id: String = "doc_id",
-                            text: String = "text"): StreamingQuery =
-    cdcFoldStream(cdc, opCol, checkpointDir, "maintainBm25CdcStream") {
+    * upsert encoding). Replay: a redelivered batch recomputes
+    * identical partition content and skips once its marker is
+    * durable. Document families read `id`/`text`; vector families key
+    * on `vec_id`/`embedding` and ignore both. */
+  def maintainIndexCdcStream(cdc: DataFrame, opCol: String, dir: String,
+                             checkpointDir: String, id: String = "doc_id",
+                             text: String = "text"): StreamingQuery =
+    cdcFoldStream(cdc, opCol, checkpointDir, "maintainIndexCdcStream") {
       (b, inserts, deletes, batchId) =>
-        graft.operators.Bm25Index.applyCdc(b.sparkSession, indexDir,
-          inserts, deletes, batchId, id, text)
-    }
-
-  /** CDC twin for a SHARDED index home (`ShardedIndex.applyCdc` per
-    * micro-batch): each batch routes to the shards it touches and
-    * applies through the child family's own `IndexCdc` applier under
-    * the batch's id — the home marker fast-skips replays, per-shard
-    * markers heal a trigger that crashed mid-fanout (the replay
-    * re-routes identically; committed shards skip). One stream feeds S
-    * independent writer domains without the caller naming any of
-    * them. */
-  def maintainShardedCdcStream(cdc: DataFrame, opCol: String,
-                               home: String, checkpointDir: String,
-                               id: String = "doc_id",
-                               text: String = "text"): StreamingQuery =
-    cdcFoldStream(cdc, opCol, checkpointDir, "maintainShardedCdcStream") {
-      (b, inserts, deletes, batchId) =>
-        graft.operators.ShardedIndex.applyCdc(b.sparkSession, home,
-          inserts, deletes, batchId, id, text)
-    }
-
-  /** CDC twin for the IVF index — inserts assigned under the stored
-    * quantizer (drift sentinel included), deletes tombstoned, one
-    * marker per micro-batch (`Similarity.applyIvfCdc`). The served
-    * board after any prefix of the stream equals an index that only
-    * ever held the live vectors, cell membership untouched. */
-  def maintainIvfCdcStream(cdc: DataFrame, opCol: String,
-                           indexDir: String,
-                           checkpointDir: String): StreamingQuery =
-    cdcFoldStream(cdc, opCol, checkpointDir, "maintainIvfCdcStream") {
-      (b, inserts, deletes, batchId) =>
-        graft.operators.Similarity.applyIvfCdc(b.sparkSession, indexDir,
-          inserts, deletes, batchId)
-    }
-
-  /** CDC twin for the DEDUP minhash signature index — right-to-be-
-    * forgotten at stream cadence: each micro-batch's insert docs are
-    * signed and banded under the index's stored parameters, its delete
-    * docs tombstoned out of candidate AND verify sides, one commit
-    * marker per batch (`Dedup.applyMinhashCdc` — deletes apply first
-    * within a batch, so delete+insert of one id is an update).
-    * After any prefix of the stream, a batch checked against the index
-    * matches exactly the live corpus at that boundary. */
-  def maintainMinhashCdcStream(cdc: DataFrame, opCol: String,
-                               indexDir: String, checkpointDir: String,
-                               id: String = "doc_id",
-                               text: String = "text"): StreamingQuery =
-    cdcFoldStream(cdc, opCol, checkpointDir, "maintainMinhashCdcStream") {
-      (b, inserts, deletes, batchId) =>
-        graft.operators.Dedup.applyMinhashCdc(b.sparkSession, indexDir,
-          inserts, deletes, batchId, id, text)
-    }
-
-  /** CDC twin for the sign-LSH embedding index
-    * (`Similarity.applyEmbeddingCdc`) — inserts keyed under the stored
-    * (bands, rowBits), deletes tombstoned, `n_vectors` netted to the
-    * live count so the occupancy refusal tracks reality, one marker
-    * per micro-batch. */
-  def maintainEmbeddingCdcStream(cdc: DataFrame, opCol: String,
-                                 indexDir: String,
-                                 checkpointDir: String): StreamingQuery =
-    cdcFoldStream(cdc, opCol, checkpointDir, "maintainEmbeddingCdcStream") {
-      (b, inserts, deletes, batchId) =>
-        graft.operators.Similarity.applyEmbeddingCdc(b.sparkSession,
-          indexDir, inserts, deletes, batchId)
-    }
-
-  /** CDC twin for the LOSSLESS prefix index
-    * (`SimJoin.applyPrefixCdc`) — inserts cut under the stored
-    * dictionary (selectivity-only staleness, never a lost pair),
-    * deletes tombstoned, one marker per micro-batch. Completes the
-    * family: every persisted index this engine ships now consumes the
-    * same change-stream contract. */
-  def maintainPrefixCdcStream(cdc: DataFrame, opCol: String,
-                              indexDir: String, checkpointDir: String,
-                              id: String = "doc_id",
-                              text: String = "text"): StreamingQuery =
-    cdcFoldStream(cdc, opCol, checkpointDir, "maintainPrefixCdcStream") {
-      (b, inserts, deletes, batchId) =>
-        graft.operators.SimJoin.applyPrefixCdc(b.sparkSession, indexDir,
-          inserts, deletes, batchId, id, text)
+        graft.operators.IndexCdc.apply(b.sparkSession, dir, inserts,
+          deletes, batchId, id, text)
     }
 
   /** The shared CDC-consumption harness: persist the micro-batch
-    * (validation + both op splits reuse it), refuse loudly on any op
-    * outside {insert, delete}, split, hand (batch, inserts, deletes,
-    * batchId) to the fold. NULL ops are checked explicitly — under
-    * three-valued logic a NULL makes `!isin(...)` NULL, which a bare
-    * filter would drop, and the malformed row would vanish SILENTLY
-    * instead of here. */
+    * (validation + both op splits reuse it), split it by
+    * `IndexCdc.splitOps` (which refuses any op outside {insert,
+    * delete}, NULL included), hand (batch, inserts, deletes, batchId)
+    * to the fold. */
   private def cdcFoldStream(cdc: DataFrame, opCol: String,
                             checkpointDir: String, who: String)(
       fold: (DataFrame, DataFrame, DataFrame, Long) => Unit): StreamingQuery = {
@@ -469,16 +388,9 @@ object StreamOps {
         val b = batch.toDF()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val unknown = b.filter(col(opCol).isNull ||
-              !col(opCol).isin("insert", "delete"))
-            .limit(1).collect()
-          require(unknown.isEmpty,
-            s"$who: unknown $opCol value " +
-              s"'${unknown.headOption.map(_.getAs[Any](opCol))
-                .getOrElse("")}' — expected insert|delete")
-          fold(b,
-            b.filter(col(opCol) === "insert"),
-            b.filter(col(opCol) === "delete"), batchId)
+          val (inserts, deletes) =
+            graft.operators.IndexCdc.splitOps(b, opCol, who)
+          fold(b, inserts, deletes, batchId)
         } finally b.unpersist()
       }
       .start()

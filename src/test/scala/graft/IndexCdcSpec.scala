@@ -66,6 +66,18 @@ class IndexCdcSpec extends AnyFunSuite with SparkSpec {
 
     val docDirs = Seq(bm25, mh, pfx)
     val vecDirs = Seq(ivf, emb)
+    // counts, not only ids: a BM25 (N, S) skew or a drifting
+    // n_docs / n_vectors leaves every live id set intact
+    def countsNetToLive(stage: String): Unit = {
+      assert(Bm25Index.statsConsistency(spark, bm25) == ((0L, 0L, 0L)),
+        s"BM25 statistics diverged from the live postings $stage")
+      assert(Dedup.readMeta(spark, idxRoot(mh))("n_docs").toLong ==
+        ids(IndexCdc.liveIds(spark, mh), "id").size,
+        s"minhash n_docs diverged from the live count $stage")
+      assert(Dedup.readMeta(spark, idxRoot(emb))("n_vectors").toLong ==
+        ids(IndexCdc.liveIds(spark, emb), "id").size,
+        s"embedding n_vectors diverged from the live count $stage")
+    }
     batches.foreach { case (b, ins, del) =>
       docDirs.foreach { d =>
         IndexCdc.apply(spark, d, docs.filter(ins("doc_id")),
@@ -85,6 +97,7 @@ class IndexCdcSpec extends AnyFunSuite with SparkSpec {
         assert(ids(IndexCdc.liveIds(spark, d), "id") == want,
           s"live set diverged from the contract at $d")
       }
+    countsNetToLive("after the history")
 
     // replayed batch (same durable batchId): every family skips — the
     // live set is byte-identical, no family double-applies
@@ -104,6 +117,7 @@ class IndexCdcSpec extends AnyFunSuite with SparkSpec {
         assert(ids(IndexCdc.liveIds(spark, d), "id") == want,
           s"compaction changed the live set at $d")
       }
+    countsNetToLive("after compact")
 
     // façade rebuild: one more takedown first (compaction already
     // folded the earlier tombstones away, so rebuild must see fresh
@@ -131,6 +145,7 @@ class IndexCdcSpec extends AnyFunSuite with SparkSpec {
         assert(!Dedup.indexTableHasData(spark, s"${idxRoot(d)}/tomb"),
           s"rebuild left tombstones on disk at $d")
       }
+    countsNetToLive("after rebuild")
   }
 
   test("crash mid-fanout heals on replay: a batch applied to SOME " +
@@ -194,7 +209,7 @@ class IndexCdcSpec extends AnyFunSuite with SparkSpec {
       .filter(col("doc_id") === updId).head().getSeq[Int](1).toSet
     assert(hs(a) == hs(b), "upsert image diverged between the forms")
     // the streaming twin: the same upsert batch as ONE micro-batch
-    // through maintainMinhashCdcStream — cdcFoldStream's op split must
+    // through maintainIndexCdcStream — cdcFoldStream's op split must
     // deliver deletes-first update semantics end to end
     val c = graft.sources.Scratch.dir("cdcf-ops-c")
     Dedup.writeMinhashIndex(held, "doc_id", "text", c)
@@ -203,7 +218,7 @@ class IndexCdcSpec extends AnyFunSuite with SparkSpec {
       .unionByName(upd.select(col("doc_id"),
         lit(null).cast("string").as("text")).withColumn("op", lit("delete")))
       .coalesce(1).write.mode("overwrite").parquet(feed)
-    graft.streaming.StreamOps.maintainMinhashCdcStream(
+    graft.streaming.StreamOps.maintainIndexCdcStream(
       spark.readStream.schema(spark.read.parquet(feed).schema)
         .parquet(feed),
       "op", c, graft.sources.Scratch.dir("cdcf-ops-ckpt")).stop()

@@ -373,6 +373,23 @@ class SignatureIndexSpec extends AnyFunSuite with SparkSpec {
     assert(Dedup.readMeta(spark, idxRoot(idxDir))("n_vectors").toLong == 2049L)
   }
 
+  test("appendToEmbeddingIndex accepts an append into a band space cut " +
+    "for a larger corpus") {
+    // keys cut at rowBits = 9 over fewer than 2,048 vectors: autoRowBits
+    // picks 8 until the index outgrows 2,048, so occupancy sits BELOW
+    // target — only growth past the target refuses, as in
+    // applyEmbeddingCdc
+    val e = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val idxDir = graft.sources.Scratch.dir("sigidx-ewide")
+    Similarity.writeEmbeddingIndex(e.filter(col("vec_id") % 2 === 0), idxDir,
+      rowBits = 9)
+    val n0 = Dedup.readMeta(spark, idxRoot(idxDir))("n_vectors").toLong
+    assert(Similarity.autoRowBits(n0 + 1) < 9, s"vacuous: n=$n0 needs 9 bits")
+    Similarity.appendToEmbeddingIndex(
+      e.filter(col("vec_id") % 2 === 1).limit(1), idxDir)
+    assert(Dedup.readMeta(spark, idxRoot(idxDir))("n_vectors").toLong == n0 + 1)
+  }
+
   test("selfMaintainingDedupStream: batch 2 dedups against batch 1's novel docs") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     // fixtures from DedupSpec: near1 ~ near2 (jaccard ≈ 0.571 ≥ 0.5),
@@ -525,7 +542,7 @@ class SignatureIndexSpec extends AnyFunSuite with SparkSpec {
     "checkpoint — deletes and inserts exactly once") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
-    // the maintainMinhashCdcStream twin of the ingestion restart law:
+    // the minhash CDC stream twin of the ingestion restart law:
     // change batches (including DELETES) delivered across a stop +
     // new-query restart must land exactly once, and a restart that
     // discards the checkpoint must hit the documented marker-skip
@@ -560,7 +577,7 @@ class SignatureIndexSpec extends AnyFunSuite with SparkSpec {
     // interrupted run: insert doc 10, drain, STOP
     writeOneFile(Seq((10L, near1, "insert")).toDF("doc_id", "text", "op"),
       s"$streamDir/b0.parquet", t - 60000)
-    graft.streaming.StreamOps.maintainMinhashCdcStream(
+    graft.streaming.StreamOps.maintainIndexCdcStream(
       stream(streamDir), "op", idxDir, ckptDir).stop()
     assert(Dedup.readMeta(spark, idxRoot(idxDir))("n_docs").toLong == 3L)
     // while the process is down: a DELETE of a held doc and an insert
@@ -571,14 +588,14 @@ class SignatureIndexSpec extends AnyFunSuite with SparkSpec {
     // negative control: a FRESH checkpoint re-forms one batch 0 from
     // all files; batchId 0 <= marker makes the guard skip EVERYTHING —
     // the delete must NOT have half-applied
-    graft.streaming.StreamOps.maintainMinhashCdcStream(
+    graft.streaming.StreamOps.maintainIndexCdcStream(
       spark.readStream.schema(cdcSchema).format("parquet").load(streamDir),
       "op", idxDir, graft.sources.Scratch.dir("crs-ckpt-fresh")).stop()
     assert(Dedup.readMeta(spark, idxRoot(idxDir))("n_docs").toLong == 3L,
       "fresh-checkpoint restart should have skipped the re-formed " +
         "batch whole (marker guard) — a partial apply is the real bug")
     // the real restart: SAME checkpoint → batches 1 and 2 delivered
-    graft.streaming.StreamOps.maintainMinhashCdcStream(
+    graft.streaming.StreamOps.maintainIndexCdcStream(
       stream(streamDir), "op", idxDir, ckptDir).stop()
     val held = Dedup.readMinhashIndex(spark, idxDir).sets
       .select("doc_id").as[Long].collect().toSeq.sorted
@@ -592,7 +609,7 @@ class SignatureIndexSpec extends AnyFunSuite with SparkSpec {
     Dedup.writeMinhashIndex(
       Seq((1L, other), (2L, other2)).toDF("doc_id", "text"),
       "doc_id", "text", refIdx)
-    graft.streaming.StreamOps.maintainMinhashCdcStream(
+    graft.streaming.StreamOps.maintainIndexCdcStream(
       stream(streamDir), "op", refIdx,
       graft.sources.Scratch.dir("crs-ref-ckpt")).stop()
     val refHeld = Dedup.readMinhashIndex(spark, refIdx).sets
