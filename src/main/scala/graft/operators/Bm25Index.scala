@@ -81,8 +81,8 @@ object Bm25Index {
 
   /** Fixed on-disk table schemas, passed EXPLICITLY to every read:
     * parquet schema inference fires a footer-reading Spark job per
-    * `spark.read.parquet` call, and the sharded serve
-    * ([[ShardedIndex.crossBm25TopKSharded]]) opens 2 tables × S shards
+    * `spark.read.parquet` call, and the serve ([[serve]]) over a
+    * sharded home opens 2 tables × S shards
     * — at the S-in-the-hundreds sizing that is hundreds of tiny
     * sequential driver jobs per serve, for schemas that never change
     * (they are this writer's own fixed layout). Explicit schemas make
@@ -149,13 +149,69 @@ object Bm25Index {
   private def dfPartials(postings: DataFrame): DataFrame =
     postings.groupBy("term").agg(count(lit(1)).as("df"))
 
-  /** Committed shadow tombstones — (doc_id, `Dedup.ShadowCol`) — or
-    * None when no delete has ever run (missing `tomb/` = the common
-    * append-only case pays zero cost; an empty-born tomb table from an
-    * insert-only CDC batch counts as absent). */
-  private def committedTombs(spark: SparkSession, dir: String,
-                             meta: Map[String, String]): Option[DataFrame] =
-    Dedup.committedTombsAt(spark, s"$dir/tomb", meta, "doc_id")
+  /** One index directory opened for a read or a commit: the version
+    * root resolved ONCE ([[Dedup.indexRoot]]'s contract) and its commit
+    * record read and validated once. (N, S), the df partials, the
+    * tombstones and the postings all come from this one record, so a
+    * commit by the single writer between two table reads can never
+    * pair one record's (N, S) with the next record's postings — readers
+    * take no lease. */
+  private final class Snapshot(spark: SparkSession, dir: String) {
+    val root: String = Dedup.indexRoot(spark, dir)
+    val meta: Map[String, String] = Dedup.readMeta(spark, root)
+    validate(meta, dir)
+
+    /** The commit record's (N, S) — no Spark job; zero docs allowed
+      * (the refusal belongs to whoever owns the total: [[liveTotals]]). */
+    def totals: (Long, Long) = (meta(NDocs).toLong, meta(NTokens).toLong)
+
+    /** Committed shadow tombstones — (doc_id, `Dedup.ShadowCol`) — or
+      * None when no delete has ever run (missing `tomb/` = the common
+      * append-only case pays zero cost; an empty-born tomb table from an
+      * insert-only CDC batch counts as absent). */
+    lazy val tombs: Option[DataFrame] =
+      Dedup.committedTombsAt(spark, s"$root/tomb", meta, "doc_id")
+
+    /** The committed signed df partials, RAW (un-aggregated) and lazy —
+      * [[foldDf]] folds them, over one directory or a shard union. */
+    def dfPartials: DataFrame =
+      Dedup.committedOnly(readDfTable(spark, root), meta).select("term", "df")
+
+    /** The committed LIVE postings (doc_id, term, tf, dl), tombstones
+      * masked. With `probedKeys` (a broadcast-sized distinct-term frame)
+      * the scan semi-joins to the probed terms FIRST (partition-pruned
+      * committed scan) and the shadow mask runs over the already-bounded
+      * stream — the serve's match stream. */
+    def livePostings(probedKeys: Option[DataFrame] = None): DataFrame = {
+      val committed = Dedup.committedOnly(readPostings(spark, root), meta)
+      Dedup.maskShadowed(
+        probedKeys.fold(committed)(committed.join(_, Seq("term"), "left_semi")),
+        "doc_id", tombs, "doc_id")
+        .select("doc_id", "term", "tf", "dl")
+    }
+  }
+
+  /** Exact global document frequencies: ONE `groupBy(term).sum` over
+    * signed partials (appends positive, deletes negative) of one
+    * directory or of a shard union — df is distributive, so one fold
+    * over all partials ≡ the fold of per-shard folds, whose S shuffle
+    * stages would each materialize as their own AQE job. Terms whose
+    * docs are all deleted fold to 0 and drop (applied to the GLOBAL
+    * sum) — exactly as a fresh build over the live corpus would never
+    * emit them. */
+  private def foldDf(partials: DataFrame): DataFrame =
+    partials.groupBy("term").agg(sum(col("df")).as("df"))
+      .filter(col("df") > 0)
+
+  /** Σ of the commit records' (N, S) over `shards`, refused only when
+    * the GLOBAL N is 0: a takedown may drain one shard of a live home,
+    * and a drained shard contributes (0, 0). */
+  private def liveTotals(shards: Seq[Snapshot], index: String): (Long, Long) = {
+    val (n, s) = shards.map(_.totals)
+      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+    require(n > 0, s"$index holds no committed documents")
+    (n, s)
+  }
 
   /** The one whole-index writer behind [[write]], [[writeFromPostings]]
     * and [[rebuild]]: `post` and its df partials land in a fresh
@@ -266,20 +322,15 @@ object Bm25Index {
                      tombstones: DataFrame, batchId: Option[Long],
                      id: String, text: String, op: String): Unit =
     IndexLease.withLease(spark, dir, op) {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
+    val snap = new Snapshot(spark, dir)
+    val (root, meta) = (snap.root, snap.meta)
     if (batchId.exists(_ <= Dedup.lastCommittedBatch(meta))) return
     val ids = tombstones.select(col(id).cast("long").as("doc_id")).distinct()
-    val priorTombs = committedTombs(spark, root, meta)
-    Dedup.refuseShadowedInserts(newDocs, id, priorTombs, "doc_id", op, dir,
+    Dedup.refuseShadowedInserts(newDocs, id, snap.tombs, "doc_id", op, dir,
       syncPath = batchId.isEmpty)
     // LIVE pre-batch postings: the retraction must see exactly what
     // this batch's tombstones newly kill, never already-shadowed rows
-    val livePost = Dedup.maskShadowed(
-      Dedup.committedOnly(readPostings(spark, root), meta),
-      "doc_id", priorTombs, "doc_id")
-      .select("doc_id", "term", "tf", "dl")
+    val livePost = snap.livePostings()
     // ONE materialization for the whole retraction: the killed postings
     // livePost ⋉ ids ≡ livePost ⋉ (ids ∩ live), and the tombstone id set
     // is its distinct doc_id — deriving it from the materialized frame
@@ -341,109 +392,23 @@ object Bm25Index {
         unmasked = Seq("df" -> Seq("term", "df")))
     }
 
-  /** Exact global document frequencies: Σ over committed batch
-    * partials (appends positive, deletes negative), vocab-bounded.
-    * Terms whose docs are all deleted fold to 0 and drop — exactly as
-    * a fresh build over the live corpus would never emit them. */
-  def foldedDf(spark: SparkSession, dir: String): DataFrame = {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    Dedup.committedOnly(readDfTable(spark, root), meta)
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0)
-  }
-
   /** Exact global (N, S) of the live corpus, read from the commit
     * record — no Spark job. */
-  def foldedStats(spark: SparkSession, dir: String): (Long, Long) = {
-    val (n, s) = committedTotals(spark, dir)
-    require(n > 0, s"BM25 index at $dir holds no committed documents")
-    (n, s)
-  }
-
-  /** The commit record's (N, S), zero docs allowed — the per-shard leg
-    * of the sharded serves ([[ShardedIndex.crossBm25TopKSharded]]),
-    * where a takedown may empty ONE shard while the global index stays
-    * live; the n > 0 refusal belongs to whoever owns the total. */
-  private[graft] def committedTotals(spark: SparkSession,
-                                     dir: String): (Long, Long) = {
-    val meta = Dedup.readMeta(spark, Dedup.indexRoot(spark, dir))
-    validate(meta, dir)
-    (meta(NDocs).toLong, meta(NTokens).toLong)
-  }
-
-  /** The committed signed df partials of the index at `dir`, RAW
-    * (un-aggregated) and lazy — the sharded serve unions S of these
-    * and runs ONE global `groupBy(term).sum`, instead of per-shard
-    * [[foldedDf]] aggregates whose S shuffle stages each materialize as
-    * their own AQE job (df is distributive, so one fold over all
-    * partials ≡ the fold of per-shard folds; the df > 0 drop applies to
-    * the global sum). */
-  private[graft] def dfPartialsFrame(spark: SparkSession,
-                                     dir: String): DataFrame = {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    Dedup.committedOnly(readDfTable(spark, root), meta)
-      .select("term", "df")
-  }
-
-  /** The committed LIVE postings rows matching `probedKeys` (a
-    * broadcast-sized distinct-term frame): the query-term-bounded match
-    * stream both the single-directory serve ([[crossBm25TopK]]) and the
-    * sharded serve's per-shard legs read — semi-join to the probed
-    * terms FIRST (partition-pruned committed scan), then the
-    * tombstone shadow mask over the already-bounded stream. */
-  private[graft] def liveTermBoundedPostings(spark: SparkSession,
-                                             dir: String,
-                                             probedKeys: DataFrame): DataFrame = {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    val matched = Dedup.committedOnly(
-      readPostings(spark, root), meta)
-      .join(probedKeys, Seq("term"), "left_semi")
-    Dedup.maskShadowed(matched, "doc_id",
-      committedTombs(spark, root, meta), "doc_id")
-      .select("doc_id", "term", "tf", "dl")
-  }
+  def foldedStats(spark: SparkSession, dir: String): (Long, Long) =
+    liveTotals(Seq(new Snapshot(spark, dir)), s"BM25 index at $dir")
 
   /** Serve a query batch from the stored index: top-k per query,
     * bit-identical to [[TextOps.bm25TopK]] over the index's full
-    * committed LIVE content (appends minus tombstoned docs). The
-    * corpus-side postings scan reduces to the batch's own distinct
-    * query terms (broadcast semi-join — the query batch is the
-    * per-trigger unit, batch-bounded by contract, never
-    * corpus-derived; the `crossPrefixJoin` probed-keys shape), then
-    * the match stream anti-joins the committed tombstones — the
-    * anti-join's probe side is the already-term-bounded match stream,
-    * so deletes cost one scan of the (single-column) tombstone table
-    * per serve, reclaimed by [[rebuild]]. Serving cost is Σ_q Σ_t
-    * df(t) — the match stream — plus a vocab-bounded df fold,
-    * independent of how many batches the index accreted. `maxDfFrac`
-    * is the same serving-path pruning knob as the inline form (a
-    * semantics change, caller-owned). */
+    * committed LIVE content (appends minus tombstoned docs) — the
+    * one-directory case of [[serve]], where the cost shape lives.
+    * `maxDfFrac` is the same serving-path pruning knob as the inline
+    * form (a semantics change, caller-owned). */
   def crossBm25TopK(spark: SparkSession, queries: DataFrame, dir: String,
                     k: Int = 5, qid: String = "query_id",
                     qtext: String = "query_text",
-                    maxDfFrac: Double = 1.0): DataFrame = {
-    require(k > 0, s"crossBm25TopK: k must be positive, got $k")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"crossBm25TopK: maxDfFrac must be in (0, 1], got $maxDfFrac")
-    val (nDocs, sTok) = foldedStats(spark, dir)
-    val kept = TextOps.bm25KeptTerms(foldedDf(spark, dir), nDocs, maxDfFrac)
-    val qterms = TextOps.bm25QueryTerms(queries, qid, qtext)
-    val probedKeys = broadcast(qterms.select("term").distinct())
-    val post = liveTermBoundedPostings(spark, dir, probedKeys)
-    val scored = post
-      .join(kept, Seq("term"))
-      .join(qterms, Seq("term"))
-      .transform(TextOps.withBm25Score(nDocs, sTok))
-      .groupBy("query_id", "doc_id")
-      .agg(sum(col("__sc")).as("score_micro"))
-    TextOps.bm25Board(scored, k)
-  }
+                    maxDfFrac: Double = 1.0): DataFrame =
+    serve(spark, queries, dir, Seq(dir), "BM25 index", "crossBm25TopK", k,
+      qid, qtext, maxDfFrac, None)
 
   /** Statistics scope for [[crossBm25TopKFiltered]] — the ONE real
     * semantic fork in filtered lexical retrieval, so it is a typed
@@ -496,33 +461,71 @@ object Bm25Index {
                             qid: String = "query_id",
                             qtext: String = "query_text",
                             maxDfFrac: Double = 1.0,
-                            scope: FilterScope = FilteredStats): DataFrame = {
-    require(k > 0, s"crossBm25TopKFiltered: k must be positive, got $k")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"crossBm25TopKFiltered: maxDfFrac must be in (0, 1], got $maxDfFrac")
-    val allowedKeys = allowedDocKeys(allowed, "crossBm25TopKFiltered")
+                            scope: FilterScope = FilteredStats): DataFrame =
+    serve(spark, queries, dir, Seq(dir), "BM25 index",
+      "crossBm25TopKFiltered", k, qid, qtext, maxDfFrac,
+      Some((allowed, scope)))
+
+  /** THE BM25 serve, over a list of index directories: a monolithic
+    * index passes `Seq(dir)`, a sharded home its shard directories
+    * ([[ShardedIndex.crossBm25TopKSharded]]) — so the one-shard case IS
+    * the monolithic serve, plan for plan. Each directory is opened
+    * ONCE ([[Snapshot]]).
+    *
+    * The corpus-side postings scan reduces to the batch's own distinct
+    * query terms (broadcast semi-join — the query batch is the
+    * per-trigger unit, batch-bounded by contract, never
+    * corpus-derived; the `crossPrefixJoin` probed-keys shape), then
+    * the match stream masks the committed tombstones — the mask's
+    * probe side is the already-term-bounded match stream, so deletes
+    * cost one scan of the (single-column) tombstone table per serve,
+    * reclaimed by [[rebuild]]. Serving cost is Σ_q Σ_t df(t) — the
+    * match stream — plus a vocab-bounded df fold, independent of how
+    * many batches the index accreted.
+    *
+    * Exactness at any shard count: shards partition the corpus
+    * disjointly and df/(N, S) are distributive counts, so Σ over
+    * per-shard signed partials IS the global statistic; every
+    * match-stream row carries the same (tf, dl) it would carry
+    * unsharded; scores are integer micro-units summed per (query, doc)
+    * — order-free. The S match streams union lazily (ONE job, not S),
+    * the S df partials fold in ONE aggregate ([[foldDf]]) and (N, S) is
+    * a sum of commit records (no Spark job), so the job count is
+    * independent of S (`PlanAuditSpec`).
+    *
+    * `filter` is the filtered serve's (allowed keys, scope); a sharded
+    * home's live postings union IS the monolithic home's, so both
+    * scopes stay bit-identical across layouts too. `index` and `home`
+    * name the index in the refusals, `what` the public caller. */
+  private[operators] def serve(spark: SparkSession, queries: DataFrame,
+                               home: String, dirs: Seq[String],
+                               index: String, what: String, k: Int,
+                               qid: String, qtext: String,
+                               maxDfFrac: Double,
+                               filter: Option[(DataFrame, FilterScope)])
+      : DataFrame = {
+    TextOps.requireBm25Args(what, k, maxDfFrac)
+    val allowedKeys = filter.map { case (allowed, scope) =>
+      (allowedDocKeys(allowed, what), scope) }
+    val shards = dirs.map(new Snapshot(spark, _))
+    def union(f: Snapshot => DataFrame): DataFrame =
+      shards.map(f).reduce(_.unionByName(_))
     val qterms = TextOps.bm25QueryTerms(queries, qid, qtext)
-    scope match {
-      case HomeStats =>
-        val (nDocs, sTok) = foldedStats(spark, dir)
-        val kept = TextOps.bm25KeptTerms(foldedDf(spark, dir), nDocs,
-          maxDfFrac)
-        val probedKeys = broadcast(qterms.select("term").distinct())
-        val scored = liveTermBoundedPostings(spark, dir, probedKeys)
-          .join(allowedKeys, Seq("doc_id"), "left_semi")
-          .join(kept, Seq("term"))
-          .join(qterms, Seq("term"))
-          .transform(TextOps.withBm25Score(nDocs, sTok))
-          .groupBy("query_id", "doc_id")
-          .agg(sum(col("__sc")).as("score_micro"))
-        TextOps.bm25Board(scored, k)
-      case FilteredStats =>
+    allowedKeys match {
+      case Some((ids, FilteredStats)) =>
         tenantBoard(
-          livePostings(spark, dir)
-            .join(allowedKeys, Seq("doc_id"), "left_semi"),
+          union(_.livePostings()).join(ids, Seq("doc_id"), "left_semi"),
           qterms, k, maxDfFrac,
-          s"crossBm25TopKFiltered: the filter excludes every live " +
-            s"document of $dir")
+          s"$what: the filter excludes every live document of $home")
+      case _ =>
+        val (nDocs, sTok) = liveTotals(shards, s"$index at $home")
+        val probedKeys = broadcast(qterms.select("term").distinct())
+        val post = union(_.livePostings(Some(probedKeys)))
+        // HomeStats: home statistics, only the match stream masked
+        val matched = allowedKeys.fold(post) { case (ids, _) =>
+          post.join(ids, Seq("doc_id"), "left_semi") }
+        TextOps.bm25Board(matched, foldDf(union(_.dfPartials)), qterms,
+          nDocs, sTok, maxDfFrac, k)
     }
   }
 
@@ -586,26 +589,11 @@ object Bm25Index {
     * is GC'd and the ContextCleaner drops the blocks. (Non-replicated
     * — an executor loss fails the serve, which retries; acceptable for
     * a stateless read path.) */
-  private[operators] def tenantBoard(post0: DataFrame, qterms: DataFrame,
-                                     k: Int, maxDfFrac: Double,
-                                     emptyMsg: String): DataFrame = {
-    val post = post0.localCheckpoint()
-    val stats = TextOps.bm25StatsPartials(post).head()
-    val nDocs = stats.getLong(0)
-    require(nDocs > 0,
+  private def tenantBoard(post: DataFrame, qterms: DataFrame, k: Int,
+                          maxDfFrac: Double, emptyMsg: String): DataFrame =
+    TextOps.bm25SelfBoard(post.localCheckpoint(), qterms, k, maxDfFrac,
       s"$emptyMsg — an empty tenant corpus has no idf; " +
         "widen the filter or serve HomeStats over an empty board")
-    val sTok = stats.getLong(1)
-    val dft = post.groupBy("term").agg(count(lit(1)).as("df"))
-    val kept = TextOps.bm25KeptTerms(dft, nDocs, maxDfFrac)
-    val scored = post
-      .join(kept, Seq("term"))
-      .join(qterms, Seq("term"))
-      .transform(TextOps.withBm25Score(nDocs, sTok))
-      .groupBy("query_id", "doc_id")
-      .agg(sum(col("__sc")).as("score_micro"))
-    TextOps.bm25Board(scored, k)
-  }
 
   /** The FULL committed live postings of the index — (doc_id, term,
     * tf, dl), tombstones masked. The corpus-equivalent artifact a
@@ -613,15 +601,8 @@ object Bm25Index {
     * recompute from it exactly, so an index written from these rows
     * serves bit-identically without the original text. */
   private[graft] def livePostings(spark: SparkSession,
-                                  dir: String): DataFrame = {
-    val root = Dedup.indexRoot(spark, dir)
-    val meta = Dedup.readMeta(spark, root)
-    validate(meta, dir)
-    Dedup.maskShadowed(
-      Dedup.committedOnly(readPostings(spark, root), meta),
-      "doc_id", committedTombs(spark, root, meta), "doc_id")
-      .select("doc_id", "term", "tf", "dl")
-  }
+                                  dir: String): DataFrame =
+    new Snapshot(spark, dir).livePostings()
 
   /** [[write]] from an already-tokenized postings frame — the
     * re-shard writer: a sharded home's new shards are built from LIVE
@@ -652,15 +633,16 @@ object Bm25Index {
     * (mismatched df terms, N diff, S diff); all-zero = consistent. */
   private[graft] def statsConsistency(spark: SparkSession,
                                       dir: String): (Long, Long, Long) = {
-    val live = livePostings(spark, dir)
+    val snap = new Snapshot(spark, dir)
+    val live = snap.livePostings()
     val dfMismatch = dfPartials(live).withColumnRenamed("df", "df_live")
-      .join(foldedDf(spark, dir).withColumnRenamed("df", "df_fold"),
+      .join(foldDf(snap.dfPartials).withColumnRenamed("df", "df_fold"),
         Seq("term"), "full_outer")
       .filter(coalesce(col("df_live"), lit(0L)) =!=
         coalesce(col("df_fold"), lit(0L)))
       .count()
     val (nLive, sLive) = totalsOf(TextOps.bm25StatsPartials(live))
-    val (nFold, sFold) = foldedStats(spark, dir)
+    val (nFold, sFold) = liveTotals(Seq(snap), s"BM25 index at $dir")
     (dfMismatch, nLive - nFold, sLive - sFold)
   }
 
@@ -676,15 +658,15 @@ object Bm25Index {
     * and deleted rows are now physically gone. */
   def rebuild(spark: SparkSession, dir: String, targetFiles: Int = 4): Unit =
     IndexLease.withLease(spark, dir, "Bm25Index.rebuild") {
-    val meta = Dedup.readMeta(spark, Dedup.indexRoot(spark, dir))
-    val (post, release) = Dedup.materializeTracked(livePostings(spark, dir))
+    val snap = new Snapshot(spark, dir)
+    val (post, release) = Dedup.materializeTracked(snap.livePostings())
     try {
       // an all-deleted corpus would rebuild to empty-born tables that
       // no reader can open — refuse with the honest instruction instead
       require(post.head(1).nonEmpty,
         s"Bm25Index.rebuild: every document in $dir is deleted — " +
           "nothing to rebuild; delete the index directory instead")
-      swapInIndex(spark, dir, post.coalesce(targetFiles), meta)
+      swapInIndex(spark, dir, post.coalesce(targetFiles), snap.meta)
     } finally release()
   }
 }

@@ -53,15 +53,6 @@ object Dedup {
   def md5Hash60(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
 
-  /** Eagerly materializes an intermediate reused by several downstream
-    * branches. With a checkpoint dir configured (cluster runs) this is a
-    * RELIABLE checkpoint: blocks land on the cluster FS and survive
-    * executor loss. Without one (local/bench runs) it falls back to
-    * `localCheckpoint` — blocks are GC-managed instead of pinned in the
-    * session CacheManager like `persist`, but are NON-REPLICATED and
-    * lineage-truncated, so an executor loss would fail the job; that
-    * trade is acceptable only in single-JVM runs, which is exactly when
-    * no checkpoint dir is set. */
   /** True iff the frame's OPTIMIZED plan provably yields no rows — a
     * zero-row local relation (`df.limit(0)`, a filter Catalyst proves
     * false, the empty side `IndexCdc.emptyInserts`/`emptyDeletes`
@@ -97,6 +88,15 @@ object Dedup {
     }
   }
 
+  /** Eagerly materializes an intermediate reused by several downstream
+    * branches. With a checkpoint dir configured (cluster runs) this is a
+    * RELIABLE checkpoint: blocks land on the cluster FS and survive
+    * executor loss. Without one (local/bench runs) it falls back to
+    * `localCheckpoint` — blocks are GC-managed instead of pinned in the
+    * session CacheManager like `persist`, but are NON-REPLICATED and
+    * lineage-truncated, so an executor loss would fail the job; that
+    * trade is acceptable only in single-JVM runs, which is exactly when
+    * no checkpoint dir is set. */
   private[graft] def materialize(df: DataFrame): DataFrame =
     materializeTracked(df)._1
 

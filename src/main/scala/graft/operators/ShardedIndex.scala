@@ -658,131 +658,46 @@ object ShardedIndex {
 
   /** Serve a query batch from a sharded BM25 index — bit-identical to
     * [[Bm25Index.crossBm25TopK]] over one home holding the same live
-    * corpus, at ANY shard count. Exactness argument: the shards
-    * partition the corpus disjointly and df/(N, S) are distributive
-    * counts, so Σ over per-shard signed folds IS the global statistic;
-    * every match-stream row carries the same (tf, dl) it would carry
-    * unsharded; scores are integer micro-units summed per (query, doc)
-    * — order-free. Cost: the same query-term-bounded match stream
-    * (each shard contributes its slice, union is one lazy plan — ONE
-    * job, not S), plus a vocab-bounded df fold per shard; (N, S) is a
-    * sum of the shards' commit records, no Spark job. */
+    * corpus, at ANY shard count: both are [[Bm25Index.serve]], over the
+    * shard directories here and over `Seq(dir)` there (the exactness
+    * argument and the cost shape are documented there). A drained
+    * shard contributes (0, 0); only the global total is refused. */
   def crossBm25TopKSharded(spark: SparkSession, queries: DataFrame,
                            home: String, k: Int = 5,
                            qid: String = "query_id",
                            qtext: String = "query_text",
-                           maxDfFrac: Double = 1.0): DataFrame = {
-    require(k > 0, s"crossBm25TopKSharded: k must be positive, got $k")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"crossBm25TopKSharded: maxDfFrac must be in (0, 1], got $maxDfFrac")
-    val m = manifest(spark, home)
-    require(m("child_kind") == Bm25Index.Kind,
-      s"sharded index at $home holds ${m("child_kind")}, not BM25")
-    val dirs = shardDirs(home, m)
-    val (nDocs, sTok) = bm25Totals(spark, home, dirs)
-    // RAW signed partials unioned, ONE global fold: per-shard foldedDf
-    // aggregates would put S shuffle stages in the plan (one AQE job
-    // each); df is distributive over the partials, so a single
-    // groupBy over the union — with the net-zero drop applied to the
-    // GLOBAL sum — is the same statistic in one stage
-    val globalDf = dirs.map(Bm25Index.dfPartialsFrame(spark, _))
-      .reduce(_.unionByName(_))
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0)
-    val kept = TextOps.bm25KeptTerms(globalDf, nDocs, maxDfFrac)
-    val qterms = TextOps.bm25QueryTerms(queries, qid, qtext)
-    val probedKeys = broadcast(qterms.select("term").distinct())
-    val post = dirs
-      .map(Bm25Index.liveTermBoundedPostings(spark, _, probedKeys))
-      .reduce(_.unionByName(_))
-    val scored = post
-      .join(kept, Seq("term"))
-      .join(qterms, Seq("term"))
-      .transform(TextOps.withBm25Score(nDocs, sTok))
-      .groupBy("query_id", "doc_id")
-      .agg(sum(col("__sc")).as("score_micro"))
-    TextOps.bm25Board(scored, k)
-  }
-
-  /** Global (N, S) of a sharded BM25 home: the sum of the shards'
-    * commit records, read from metadata — no Spark job at any S.
-    * Emptied shards (a takedown may have drained one) contribute
-    * (0, 0); only the GLOBAL total is refused. */
-  private def bm25Totals(spark: SparkSession, home: String,
-                         dirs: Seq[String]): (Long, Long) = {
-    val (n, s) = dirs.map(Bm25Index.committedTotals(spark, _))
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    require(n > 0, s"sharded BM25 index at $home holds no committed documents")
-    (n, s)
-  }
+                           maxDfFrac: Double = 1.0): DataFrame =
+    Bm25Index.serve(spark, queries, home, bm25Shards(spark, home),
+      "sharded BM25 index", "crossBm25TopKSharded", k, qid, qtext,
+      maxDfFrac, None)
 
   /** Metadata-filtered serve over a SHARDED BM25 home — the filter ×
     * layout cell: [[Bm25Index.crossBm25TopKFiltered]]'s contract
     * (ids-only `allowed` key set, typed [[Bm25Index.FilterScope]]
-    * statistics knob, pre-filter semantics) over the cross-shard
-    * gather. Shard routing partitions docs disjointly, so the union
-    * of per-shard live postings IS the monolithic home's live
-    * postings — both scopes therefore serve BIT-IDENTICALLY to the
-    * monolithic filtered serve over the same content (the law in
-    * `ShardedIndexSpec`), and sharding stays an operational knob
-    * under filters too:
-    *
-    *  - [[Bm25Index.HomeStats]]: the global (N, S) and df are the
-    *    unchanged cross-shard gathers (a metadata sum and one aggregate
-    *    job, never S driver round trips); the filter adds ONE ids-only
-    *    semi-join to the unioned query-term-bounded match stream.
-    *  - [[Bm25Index.FilteredStats]]: the allowed docs' live postings
-    *    (per-shard unions, one slice) feed the shared
-    *    [[Bm25Index.tenantBoard]] arithmetic — df/N/S recomputed over
-    *    the tenant's slice exactly as a fresh per-tenant build would,
-    *    cost bounded by the TENANT's postings across shards, never
-    *    the home's. */
+    * statistics knob, pre-filter semantics) through the same
+    * [[Bm25Index.serve]] over the shard directories. Shard routing
+    * partitions docs disjointly, so the union of per-shard live
+    * postings IS the monolithic home's live postings — both scopes
+    * serve BIT-IDENTICALLY to the monolithic filtered serve over the
+    * same content (the law in `ShardedIndexSpec`). */
   def crossBm25TopKShardedFiltered(spark: SparkSession, queries: DataFrame,
                                    home: String, allowed: DataFrame,
                                    k: Int = 5, qid: String = "query_id",
                                    qtext: String = "query_text",
                                    maxDfFrac: Double = 1.0,
                                    scope: Bm25Index.FilterScope =
-                                     Bm25Index.FilteredStats): DataFrame = {
-    require(k > 0, s"crossBm25TopKShardedFiltered: k must be positive, got $k")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"crossBm25TopKShardedFiltered: maxDfFrac must be in (0, 1], " +
-        s"got $maxDfFrac")
+                                     Bm25Index.FilteredStats): DataFrame =
+    Bm25Index.serve(spark, queries, home, bm25Shards(spark, home),
+      "sharded BM25 index", "crossBm25TopKShardedFiltered", k, qid, qtext,
+      maxDfFrac, Some((allowed, scope)))
+
+  /** The shard directories of a sharded BM25 home, refusing any other
+    * child family. */
+  private def bm25Shards(spark: SparkSession, home: String): Seq[String] = {
     val m = manifest(spark, home)
     require(m("child_kind") == Bm25Index.Kind,
       s"sharded index at $home holds ${m("child_kind")}, not BM25")
-    val allowedKeys = Bm25Index.allowedDocKeys(
-      allowed, "crossBm25TopKShardedFiltered")
-    val dirs = shardDirs(home, m)
-    val qterms = TextOps.bm25QueryTerms(queries, qid, qtext)
-    scope match {
-      case Bm25Index.HomeStats =>
-        val (nDocs, sTok) = bm25Totals(spark, home, dirs)
-        val globalDf = dirs.map(Bm25Index.dfPartialsFrame(spark, _))
-          .reduce(_.unionByName(_))
-          .groupBy("term").agg(sum(col("df")).as("df"))
-          .filter(col("df") > 0)
-        val kept = TextOps.bm25KeptTerms(globalDf, nDocs, maxDfFrac)
-        val probedKeys = broadcast(qterms.select("term").distinct())
-        val scored = dirs
-          .map(Bm25Index.liveTermBoundedPostings(spark, _, probedKeys))
-          .reduce(_.unionByName(_))
-          .join(allowedKeys, Seq("doc_id"), "left_semi")
-          .join(kept, Seq("term"))
-          .join(qterms, Seq("term"))
-          .transform(TextOps.withBm25Score(nDocs, sTok))
-          .groupBy("query_id", "doc_id")
-          .agg(sum(col("__sc")).as("score_micro"))
-        TextOps.bm25Board(scored, k)
-      case Bm25Index.FilteredStats =>
-        Bm25Index.tenantBoard(
-          dirs.map(Bm25Index.livePostings(spark, _))
-            .reduce(_.unionByName(_))
-            .join(allowedKeys, Seq("doc_id"), "left_semi"),
-          qterms, k, maxDfFrac,
-          s"crossBm25TopKShardedFiltered: the filter excludes every " +
-            s"live document of $home")
-    }
+    shardDirs(home, m)
   }
 
   /** Open a sharded minhash index as ONE [[Dedup.MinhashIndex]] handle:

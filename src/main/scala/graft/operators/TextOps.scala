@@ -448,39 +448,36 @@ object TextOps {
                id: String = "doc_id", text: String = "text",
                qid: String = "query_id", qtext: String = "query_text",
                maxDfFrac: Double = 1.0): DataFrame = {
-    require(k > 0, s"bm25TopK: k must be positive, got $k")
-    bm25Board(bm25TermScores(corpus, queries, id, text, qid, qtext,
-      maxDfFrac)
-      .groupBy("query_id", "doc_id")
-      .agg(sum(col("__sc")).as("score_micro")), k)
+    requireBm25Args("bm25TopK", k, maxDfFrac)
+    bm25SelfBoard(docTermFreqs(corpus, id, text)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      bm25QueryTerms(queries, qid, qtext), k, maxDfFrac,
+      "bm25TopK: corpus has no tokenized documents")
   }
 
-  /** [[bm25TopK]]'s term-level match stream — one row per (query, term,
-    * matching doc) with the per-term micro-unit score `__sc`. Exposed
-    * for the scale probe: this stream's row count IS the operator's
-    * growth law. */
-  private[graft] def bm25TermScores(corpus: DataFrame, queries: DataFrame,
-                                    id: String, text: String, qid: String,
-                                    qtext: String,
-                                    maxDfFrac: Double): DataFrame = {
+  /** The argument checks every BM25 board entry point shares. */
+  private[operators] def requireBm25Args(what: String, k: Int,
+                                         maxDfFrac: Double): Unit = {
+    require(k > 0, s"$what: k must be positive, got $k")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"bm25TopK: maxDfFrac must be in (0, 1], got $maxDfFrac")
-    val postings = docTermFreqs(corpus, id, text)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // stats off the PERSISTED postings (materializes the cache), not a
-    // second tokenize pass over the raw corpus: one doc-keyed fold
-    // (map-side combined, no count-distinct Expand) gives N = docs and
-    // S = Σ dl = total tokens
-    val stats = bm25StatsPartials(postings).head()
+      s"$what: maxDfFrac must be in (0, 1], got $maxDfFrac")
+  }
+
+  /** Board over a postings slice that is its own corpus — inline
+    * [[bm25TopK]] and the stored index's tenant-scope filtered serve:
+    * (N, S) and df derive from `post` itself. `post` must already be
+    * cached or checkpointed, because the stats head(), the df fold and
+    * the scoring join all read it (the corpus is tokenized once). The
+    * stats are one doc-keyed fold (map-side combined, no count-distinct
+    * Expand): N = docs, S = Σ dl = total tokens. */
+  private[operators] def bm25SelfBoard(post: DataFrame, qterms: DataFrame,
+                                       k: Int, maxDfFrac: Double,
+                                       emptyMsg: String): DataFrame = {
+    val stats = bm25StatsPartials(post).head()
     val nDocs = stats.getLong(0)
-    require(nDocs > 0, "bm25TopK: corpus has no tokenized documents")
-    val sTok = stats.getLong(1)
-    val dft = postings.groupBy("term").agg(count(lit(1)).as("df"))
-    val kept = bm25KeptTerms(dft, nDocs, maxDfFrac)
-    postings
-      .join(kept, Seq("term"))
-      .join(bm25QueryTerms(queries, qid, qtext), Seq("term"))
-      .transform(withBm25Score(nDocs, sTok))
+    require(nDocs > 0, emptyMsg)
+    bm25Board(post, post.groupBy("term").agg(count(lit(1)).as("df")),
+      qterms, nDocs, stats.getLong(1), maxDfFrac, k)
   }
 
   /** The per-(doc, term) postings table (doc_id, term, tf, dl) — the
@@ -512,34 +509,39 @@ object TextOps {
     postings.groupBy("doc_id").agg(max(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("s"))
 
-  private[operators] def bm25KeptTerms(dft: DataFrame, nDocs: Long,
-                                       maxDfFrac: Double): DataFrame =
-    if (maxDfFrac >= 1.0) dft
-    else dft.filter(col("df") <= lit(math.ceil(maxDfFrac * nDocs).toLong))
-
   private[operators] def bm25QueryTerms(queries: DataFrame, qid: String,
                                         qtext: String): DataFrame =
     queries.select(col(qid).cast("long").as("query_id"),
       explode(array_distinct(tokens(col(qtext)))).as("term"))
 
-  /** The exact integer Okapi arithmetic (see [[bm25TopK]]) over a
-    * matched (tf, dl, df) stream — shared verbatim by the inline and
-    * the index-serving paths, so the scores are bit-identical. */
-  private[operators] def withBm25Score(nDocs: Long, sTok: Long)
-                                      (matched: DataFrame): DataFrame =
-    matched
+  /** The one scoring tail every BM25 board ends in — inline
+    * [[bm25TopK]], the stored index's serve and its tenant board: the
+    * (doc_id, term, tf, dl) match stream joins the (term, df) table
+    * (cut by `maxDfFrac`) and the (query_id, term) query terms, scores
+    * each (term, doc) with the exact integer Okapi arithmetic (see
+    * [[bm25TopK]]), sums per (query, doc), and cuts per-query top-k
+    * through the bounded [[TopK.TopKAgg]] buffer under the (score desc,
+    * doc_id asc) total order, projected to the gate schema. */
+  private[operators] def bm25Board(post: DataFrame, df: DataFrame,
+                                   qterms: DataFrame, nDocs: Long,
+                                   sTok: Long, maxDfFrac: Double,
+                                   k: Int): DataFrame = {
+    val kept =
+      if (maxDfFrac >= 1.0) df
+      else df.filter(col("df") <= lit(math.ceil(maxDfFrac * nDocs).toLong))
+    val scored = post
+      .join(kept, Seq("term"))
+      .join(qterms, Seq("term"))
       .withColumn("__idf", expr(
         s"(cast(1000000 as bigint) * (2 * ($nDocs - df) + 1)) div (2 * df + 1)"))
       .withColumn("__sat", expr(
         s"(cast(1000000 as bigint) * tf * 22 * $sTok) div " +
           s"(10 * cast($sTok as bigint) * tf + 3 * cast($sTok as bigint) + 9 * dl * $nDocs)"))
       .withColumn("__sc", expr("(__idf * __sat) div cast(1000000 as bigint)"))
-
-  /** The shared board cut: per-query top-k through the bounded
-    * [[TopK.TopKAgg]] buffer under the (score desc, doc_id asc) total
-    * order, projected to the gate schema. */
-  private[operators] def bm25Board(scored: DataFrame, k: Int): DataFrame =
+      .groupBy("query_id", "doc_id")
+      .agg(sum(col("__sc")).as("score_micro"))
     TopK.topKPerGroup(scored, "query_id", "doc_id", "score_micro", k)
       .select(col("query_id"), col("rk"), col("doc_id"),
         col("score_micro").cast("long").as("score_micro"))
+  }
 }

@@ -8,12 +8,13 @@ import org.apache.hadoop.fs.Path
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 import graft.operators.IndexLease
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** The reference's daily DAG (`dags/etl.py:148-157`: extract, transform,
   * load, run by a daily cron over whatever input files exist,
   * `catchup=False` at `:154`, retries at `:20-21`). Two entry points share
-  * one dimension step and one parquet writer; they differ only in the
+  * one dimension step and one parquet writer
+  * ([[graft.sources.Sinks.overwriteParquet]]); they differ only in the
   * fact source and the fact write:
   *
   *  - [[runBatch]] enriches all of `inDir/orders.csv` and overwrites
@@ -99,7 +100,7 @@ object RefOrchestration {
         "would drop rows its offset log counts as processed")
       val (products, users) = dimensions(spark, inDir, outDir)
       val obs = Observation()
-      overwriteZstd(RefPipeline.ordersEnriched(
+      Sinks.overwriteParquet(RefPipeline.ordersEnriched(
           Tables.csv(spark, s"$inDir/orders.csv", Tables.refOrdersSchema),
           products, users).observe(obs, count(lit(1)).as("n")),
         s"$outDir/orders")
@@ -200,9 +201,6 @@ object RefOrchestration {
     * always produces identical bytes (the rerun-idempotence laws are
     * checked at the file level, not just row sets). */
   private def writeSorted(df: DataFrame, by: Seq[String], path: String): Unit =
-    overwriteZstd(df.repartition(1).sortWithinPartitions(by.map(col): _*), path)
-
-  /** The one parquet writer of every sink: overwrite, zstd. */
-  private def overwriteZstd(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+    Sinks.overwriteParquet(
+      df.repartition(1).sortWithinPartitions(by.map(col): _*), path)
 }

@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** K1/K2: idempotent overwrite (the drop+create+insert cycle). */
+  /** K1/K2: idempotent overwrite (the drop+create+insert cycle), zstd —
+    * the one parquet writer of every ETL sink (`RefOrchestration`'s
+    * batch, dimension and per-arrival writes). */
   def overwriteParquet(df: DataFrame, path: String,
                        partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
+    val w = df.write.mode("overwrite").option("compression", "zstd")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path)
   }

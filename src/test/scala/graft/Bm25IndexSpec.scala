@@ -360,6 +360,10 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     assert(served == recut,
       "home-scope board must equal the exhaustively-recut unfiltered " +
         "stream (same stats, matches masked)")
+    val all = board(Bm25Index.crossBm25TopKFiltered(spark, queries, dir,
+      corpus.select("doc_id"), k = 5, scope = Bm25Index.HomeStats))
+    assert(all == board(Bm25Index.crossBm25TopK(spark, queries, dir, 5)),
+      "an all-ids filter must serve exactly the unfiltered board")
   }
 
   test("filtered serve refusals: key shape; empty tenant refuses " +

@@ -66,23 +66,73 @@ class ShardedIndexSpec extends AnyFunSuite with SparkSpec {
     val mono = graft.sources.Scratch.dir("shard-flt-mono")
     Bm25Index.write(held, mono)
     Bm25Index.applyCdc(spark, mono, ins, dels, batchId = 0L)
-    val home = graft.sources.Scratch.dir("shard-flt-4")
-    ShardedIndex.writeBm25(held, home, shards = 4)
-    ShardedIndex.applyCdc(spark, home, ins, dels, batchId = 0L)
-    Seq(Bm25Index.FilteredStats, Bm25Index.HomeStats).foreach { scope =>
-      val expect = canon(Bm25Index.crossBm25TopKFiltered(spark,
+    val scopes = Seq(Bm25Index.FilteredStats, Bm25Index.HomeStats)
+    val expect = scopes.map { scope =>
+      val b = canon(Bm25Index.crossBm25TopKFiltered(spark,
         queries(docs), mono, allowed, k = 5, scope = scope))
-      assert(expect.nonEmpty, s"$scope monolithic fixture board is empty")
+      assert(b.nonEmpty, s"$scope monolithic fixture board is empty")
+      scope -> b
+    }.toMap
+    Seq(1, 4).foreach { s =>
+      val home = graft.sources.Scratch.dir(s"shard-flt-$s")
+      ShardedIndex.writeBm25(held, home, shards = s)
+      ShardedIndex.applyCdc(spark, home, ins, dels, batchId = 0L)
+      scopes.foreach { scope =>
+        assert(canon(ShardedIndex.crossBm25TopKShardedFiltered(spark,
+          queries(docs), home, allowed, k = 5, scope = scope)) ==
+          expect(scope),
+          s"sharded $scope filtered board at S=$s diverged from the " +
+            "monolithic one")
+      }
+      // the wrong-key refusal carries over the shared contract
+      val e = intercept[IllegalArgumentException] {
+        ShardedIndex.crossBm25TopKShardedFiltered(spark, queries(docs),
+          home, docs.select("doc_id", "lang"), k = 5)
+      }
+      assert(e.getMessage.contains("single doc_id key"))
+    }
+  }
+
+  test("a drained shard: a takedown that empties one shard leaves the " +
+    "home serving exactly the monolithic boards over the live corpus") {
+    val corpus = docs.filter(col("doc_id") % 29 =!= 0)
+    val drained = ShardedIndex.shardOf(col("doc_id"), 4) === 0
+    val live = corpus.filter(!drained)
+    val allowed = docs.filter(col("lang") =!= "en").select("doc_id")
+    val home = graft.sources.Scratch.dir("shard-drained")
+    ShardedIndex.writeBm25(corpus, home, shards = 4)
+    ShardedIndex.delete(spark, home,
+      corpus.filter(drained).select("doc_id"), batchId = 0L)
+    // shard 0 holds no live document: its own commit record says N = 0
+    val e0 = intercept[IllegalArgumentException] {
+      Bm25Index.foldedStats(spark, ShardedIndex.shardDir(home, 0))
+    }
+    assert(e0.getMessage.contains("no committed documents"))
+    val mono = graft.sources.Scratch.dir("shard-drained-mono")
+    Bm25Index.write(live, mono)
+    val expect = canon(Bm25Index.crossBm25TopK(spark, queries(docs), mono,
+      k = 5))
+    assert(expect.nonEmpty, "drained-shard fixture board is empty")
+    assert(canon(ShardedIndex.crossBm25TopKSharded(spark, queries(docs),
+      home, k = 5)) == expect,
+      "a drained shard changed the sharded board")
+    Seq(Bm25Index.FilteredStats, Bm25Index.HomeStats).foreach { scope =>
       assert(canon(ShardedIndex.crossBm25TopKShardedFiltered(spark,
-        queries(docs), home, allowed, k = 5, scope = scope)) == expect,
-        s"sharded $scope filtered board diverged from the monolithic one")
+        queries(docs), home, allowed, k = 5, scope = scope)) ==
+        canon(Bm25Index.crossBm25TopKFiltered(spark, queries(docs), mono,
+          allowed, k = 5, scope = scope)),
+        s"a drained shard changed the sharded $scope filtered board")
     }
-    // the wrong-key refusal carries over the shared contract
+    // the monolithic serve over an all-deleted index still refuses: the
+    // per-shard n = 0 allowance never reaches the global total
+    val gone = graft.sources.Scratch.dir("shard-drained-gone")
+    val few = corpus.filter(col("doc_id") < 40)
+    Bm25Index.write(few, gone)
+    Bm25Index.delete(spark, gone, few.select("doc_id"), batchId = Some(0L))
     val e = intercept[IllegalArgumentException] {
-      ShardedIndex.crossBm25TopKShardedFiltered(spark, queries(docs),
-        home, docs.select("doc_id", "lang"), k = 5)
+      Bm25Index.crossBm25TopK(spark, queries(docs), gone, k = 5)
     }
-    assert(e.getMessage.contains("single doc_id key"))
+    assert(e.getMessage.contains("no committed documents"), e.getMessage)
   }
 
   test("routing is a disjoint partition: every live id in exactly one " +
