@@ -156,11 +156,13 @@ object Dedup {
     * FIXED for the lifetime of its path (version roots are new `vN`
     * paths, scratch dirs are UUID-fresh), so the first read's inferred
     * schema is memoized by path and every later read of that path is
-    * inference-job-free. The memo holds only StructTypes — a few
+    * inference-job-free. [[writeIndexTable]] seeds the memo with the
+    * schema it wrote, so a table this session wrote is never inferred
+    * at all. The memo holds only StructTypes — a few
     * hundred bytes per distinct path, bounded by the number of index
     * tables a session touches. NOT for foreign/unknown inputs, whose
     * schema the footer must stay authoritative for. */
-  private val pqSchemaMemo =
+  private[graft] val pqSchemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.spark.sql.types.StructType]()
 
@@ -177,7 +179,7 @@ object Dedup {
     * gaining the packed-codes column at rebuild
     * ([[Similarity.ivfTopKQuantized]]'s refusal message) — keeps
     * concrete-path keying. */
-  private def pqMemoKey(path: String): String =
+  private[graft] def pqMemoKey(path: String): String =
     if (path.endsWith("/assigned")) path
     else path.replaceAll("/v\\d+(?=/|$)", "/v#")
 
@@ -563,7 +565,14 @@ object Dedup {
     * REPLACES its own partition instead of double-appending — the
     * idempotency backbone), plain `append` into the base partition for
     * synchronous batch = -1 callers, which by the single-writer
-    * contract run once. A statically empty frame writes nothing. */
+    * contract run once. A statically empty frame writes nothing.
+    *
+    * Seeds [[readPq]]'s schema memo with what a read of `path` infers:
+    * the written columns made nullable (Spark writes every parquet
+    * column optional), then `ingest_batch` as a partition column, typed
+    * as partition inference types its value. A whole-table write
+    * replaces the entry; an in-place write keeps the one the table
+    * already has. */
   private[graft] def writeIndexTable(rows: DataFrame, batch: Long,
                                      path: String,
                                      overwriteAll: Boolean = false): Unit = {
@@ -577,6 +586,14 @@ object Dedup {
       w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .parquet(path)
     else w.mode("append").parquet(path)
+    val written = org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(rows.schema)
+        .filterNot(_.name == IngestBatchCol) :+
+        org.apache.spark.sql.types.StructField(IngestBatchCol,
+          if (batch.isValidInt) org.apache.spark.sql.types.IntegerType
+          else org.apache.spark.sql.types.LongType))
+    if (overwriteAll) pqSchemaMemo.put(pqMemoKey(path), written)
+    else pqSchemaMemo.putIfAbsent(pqMemoKey(path), written)
   }
 
   private def validateMinhashMeta(meta: Map[String, String],

@@ -34,13 +34,20 @@ object RefPipeline {
     * (J2, drops unmatched product ids) ⋈ users-enriched (J3, `_x`/`_y`
     * collision naming), then project + rename `Name_x`→`Product_Name`
     * (P2/P3). Columns
-    * `(Fecha, User_ID, Product_ID, Product_Name, Category, Price)`. */
+    * `(Fecha, User_ID, Product_ID, Product_Name, Category, Price)`.
+    *
+    * Each task's rows come out clustered by `Product_ID`: a per-task
+    * sort, no exchange. `Product_Name`, `Category` and `Price` are
+    * functions of `Product_ID`, so a parquet sink stores all four as
+    * long dictionary/RLE runs instead of one random dictionary index
+    * per row (the orders sink shrinks by more than half). */
   def ordersEnriched(orders: DataFrame, products: DataFrame,
                      usersFinal: DataFrame): DataFrame = {
     val op = joinPandas(orders, products, "Product_ID", "Id")
     val opu = joinPandas(op, usersFinal, "User_ID", "Id")
     opu.select(col("Fecha"), col("User_ID"), col("Product_ID"),
       col("Name_x").as("Product_Name"), col("Category"), col("Price"))
+      .sortWithinPartitions(col("Product_ID"))
   }
 
   /** products pass-through load (reference `dags/etl.py:242` pulls the

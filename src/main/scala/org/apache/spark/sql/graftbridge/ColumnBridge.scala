@@ -20,6 +20,11 @@ object ColumnBridge {
   def cloneSession(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
+  /** `s` with every field, array element and map value nullable — the
+    * schema Spark writes to parquet (`asNullable` is private[spark]). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Block until the listener bus has delivered every queued event
     * (`waitUntilEmpty` is private[spark]) — lets a test count jobs via
     * a SparkListener deterministically instead of sleep-polling. */

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Bm25Index, Dedup, IndexCdc, Similarity, SimJoin}
 
@@ -231,6 +232,49 @@ class IndexCdcSpec extends AnyFunSuite with SparkSpec {
           .withColumn("op", lit("upsert")), 2L)
     }
     assert(ex.getMessage.contains("insert|delete"))
+  }
+
+  test("the index-table writer seeds the readPq schema memo with the " +
+    "schema a read infers, partition column included") {
+    val docs = graft.sources.Tables.documents(spark, base)
+    val embs = graft.sources.Tables.embeddings(spark, base)
+    // the four families whose tables Dedup.writeIndexTable writes (IVF
+    // writes its centroids and cells with its own writer)
+    val dirs = Seq("bm25", "mh", "pfx", "emb")
+      .map(f => graft.sources.Scratch.dir(s"cdcf-seed-$f"))
+    val Seq(bm25, mh, pfx, emb) = dirs
+    /** (table, seeded, inferred) for every `ingest_batch` table that
+      * holds rows. */
+    def tables(dir: String): Seq[(String, StructType, StructType)] = {
+      val root = new java.io.File(idxRoot(dir))
+      root.listFiles().toSeq.filter(_.isDirectory).map(_.toString)
+        .filter(Dedup.indexTableHasData(spark, _)).map(t =>
+          (t, Dedup.pqSchemaMemo.get(Dedup.pqMemoKey(t)),
+            spark.read.parquet(t).schema))
+    }
+    def seeded(stage: String): Unit = dirs.foreach { d =>
+      val ts = tables(d)
+      assert(ts.nonEmpty, s"no tables under $d")
+      ts.foreach { case (t, memo, inferred) =>
+        assert(memo == inferred, s"$stage: memo of $t")
+      }
+    }
+
+    Bm25Index.write(docs.filter(initial("doc_id")), bm25)
+    Dedup.writeMinhashIndex(docs.filter(initial("doc_id")),
+      "doc_id", "text", mh)
+    SimJoin.writePrefixIndex(docs.filter(initial("doc_id")),
+      "doc_id", "text", 1, 2, pfx)
+    Similarity.writeEmbeddingIndex(embs.filter(initial("vec_id")), emb)
+    seeded("after the whole-index writes")
+
+    // one batch with both sides: in-place partitions and tombstones
+    val (_, ins, del) = batches.head
+    Seq(bm25, mh, pfx).foreach(d => IndexCdc.apply(spark, d,
+      docs.filter(ins("doc_id")), docs.filter(del("doc_id")).select("doc_id"), 1L))
+    IndexCdc.apply(spark, emb, embs.filter(ins("vec_id")),
+      embs.filter(del("vec_id")).select("vec_id"), 1L)
+    seeded("after a CDC batch")
   }
 
   test("routing refuses unknown kinds and non-index dirs by name") {

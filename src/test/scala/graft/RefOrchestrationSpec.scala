@@ -327,6 +327,80 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     assert(shuffled == 0L, s"the rerun wrote $shuffled shuffle bytes")
   }
 
+  // ---- orders layout: clustered by product -------------------------------
+
+  /** The parquet data files under `dir`, in file-name order. */
+  private def dataFiles(dir: String): Seq[String] =
+    Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.startsWith("part-"))
+      .map(_.toString).toSeq.sorted
+
+  test("runBatch writes every orders part file non-decreasing in Product_ID") {
+    val (in, out) = freshRoot()
+    stageBoth(in)
+    // split the one input file so several tasks each write a part file
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (Files.size(Paths.get(s"$in/orders.csv")) / 3 + 1).toString)
+    try RefOrchestration.runBatch(spark, in, out)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val files = dataFiles(s"$out/orders")
+    assert(files.size > 1, s"expected several part files, got $files")
+    for (f <- files) {
+      val ids = spark.read.parquet(f).select("Product_ID").collect()
+        .map(_.getLong(0)).toSeq
+      assert(ids.nonEmpty && ids == ids.sorted,
+        s"$f is not clustered by Product_ID")
+    }
+  }
+
+  test("each ingest_batch file is sorted by the product-first key, " +
+    "and its write sorts once") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val (in, out) = freshRoot()
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
+    // Sorts in the optimized plan of each per-arrival write
+    val sorts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = qe.optimizedPlan match {
+        case w: InsertIntoHadoopFsRelationCommand
+            if w.outputPath.toString.contains("ingest_batch=") =>
+          sorts.add(w.collect { case s: Sort => s }.size)
+        case _ =>
+      }
+      override def onFailure(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      RefOrchestration.runIncremental(spark, in, out)
+      RefFixtures.stageFactChunk(spark, sf, in, 1)
+      RefOrchestration.runIncremental(spark, in, out)
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(l)
+    assert(sorts.asScala.toSeq == Seq(1, 1),
+      s"Sorts per arrival write: ${sorts.asScala.toSeq}")
+
+    // product first, and a total order: the key covers every column
+    assert(RefOrchestration.arrivalSortKey.head == "Product_ID" &&
+      RefOrchestration.arrivalSortKey.sorted ==
+        RefOrchestration.readOrdersSink(spark, out).columns.toSeq.sorted)
+    val files = dataFiles(s"$out/orders")
+    assert(files.count(_.contains("ingest_batch=")) == 2, s"$files")
+    val key = RefOrchestration.arrivalSortKey.map(org.apache.spark.sql.functions.col)
+    for (f <- files) {
+      val rows = spark.read.parquet(f).select(key: _*)
+      assert(rows.collect().toSeq == rows.sort(key: _*).collect().toSeq,
+        s"$f is not sorted by ${RefOrchestration.arrivalSortKey}")
+    }
+  }
+
   test("runBatch refuses an incremental outDir before writing anything") {
     val (in, out) = freshRoot()
     stageBoth(in)

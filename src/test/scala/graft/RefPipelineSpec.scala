@@ -63,6 +63,41 @@ class RefPipelineSpec extends AnyFunSuite with SparkSpec {
       Seq("Widget", "Widget", "Gadget", "Sprocket"))
   }
 
+  test("orders pipeline: each task's rows clustered by Product_ID, no exchange added") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def exchanges(p: SparkPlan): Int = (p match {
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+      case _: Exchange => 1
+      case _ => 0
+    }) + p.children.map(exchanges).sum
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    // broadcast joins, then shuffled joins
+    for (threshold <- Seq(prev, "-1")) try {
+      spark.conf.set(key, threshold)
+      val usersFinal = RefPipeline.usersEnriched(users, userInfo)
+      val out = RefPipeline.ordersEnriched(orders.repartition(3), products, usersFinal)
+      // the plan without the clustering sort: the orders pipeline before it
+      val unsorted = out.queryExecution.analyzed match {
+        case s: Sort if !s.global => s.child
+        case p => fail(s"ordersEnriched does not end in a per-task sort:\n$p")
+      }
+      assert(unsorted.collect { case s: Sort => s }.isEmpty)
+      val unsortedPlan = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.executePlan(unsorted).executedPlan
+      assert(exchanges(out.queryExecution.executedPlan) == exchanges(unsortedPlan),
+        s"threshold $threshold: the sort added an exchange:\n" +
+          out.queryExecution.executedPlan)
+      val parts = out.select("Product_ID").rdd
+        .glom().collect().map(_.map(_.getLong(0)).toSeq)
+      assert(parts.forall(p => p == p.sorted) && parts.flatten.length == 4,
+        s"threshold $threshold: ${parts.toSeq}")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("products pass-through is unmodified") {
     val out = RefPipeline.productsPassthrough(products)
     assert(out.collect().toSet == products.collect().toSet)
