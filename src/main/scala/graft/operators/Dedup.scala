@@ -156,12 +156,13 @@ object Dedup {
     * FIXED for the lifetime of its path (version roots are new `vN`
     * paths, scratch dirs are UUID-fresh), so the first read's inferred
     * schema is memoized by path and every later read of that path is
-    * inference-job-free. [[writeIndexTable]] seeds the memo with the
-    * schema it wrote, so a table this session wrote is never inferred
-    * at all. The memo holds only StructTypes — a few
-    * hundred bytes per distinct path, bounded by the number of index
-    * tables a session touches. NOT for foreign/unknown inputs, whose
-    * schema the footer must stay authoritative for. */
+    * inference-job-free. [[writeIndexTable]] and the IVF layout writer
+    * seed the memo with the schema they wrote ([[seedPqSchema]]), so a
+    * table this session wrote is never inferred at all. The memo holds
+    * only StructTypes — a few hundred bytes per distinct path, bounded
+    * by the number of index tables a session touches. NOT for
+    * foreign/unknown inputs, whose schema the footer must stay
+    * authoritative for. */
   private[graft] val pqSchemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.spark.sql.types.StructType]()
@@ -567,12 +568,10 @@ object Dedup {
     * synchronous batch = -1 callers, which by the single-writer
     * contract run once. A statically empty frame writes nothing.
     *
-    * Seeds [[readPq]]'s schema memo with what a read of `path` infers:
-    * the written columns made nullable (Spark writes every parquet
-    * column optional), then `ingest_batch` as a partition column, typed
-    * as partition inference types its value. A whole-table write
-    * replaces the entry; an in-place write keeps the one the table
-    * already has. */
+    * Seeds [[readPq]]'s schema memo ([[seedPqSchema]]) with
+    * `ingest_batch` as a partition column, typed as partition inference
+    * types its value. A whole-table write replaces the entry; an
+    * in-place write keeps the one the table already has. */
   private[graft] def writeIndexTable(rows: DataFrame, batch: Long,
                                      path: String,
                                      overwriteAll: Boolean = false): Unit = {
@@ -586,14 +585,29 @@ object Dedup {
       w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .parquet(path)
     else w.mode("append").parquet(path)
-    val written = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(rows.schema)
-        .filterNot(_.name == IngestBatchCol) :+
-        org.apache.spark.sql.types.StructField(IngestBatchCol,
-          if (batch.isValidInt) org.apache.spark.sql.types.IntegerType
-          else org.apache.spark.sql.types.LongType))
-    if (overwriteAll) pqSchemaMemo.put(pqMemoKey(path), written)
-    else pqSchemaMemo.putIfAbsent(pqMemoKey(path), written)
+    seedPqSchema(path, rows.schema,
+      Seq(org.apache.spark.sql.types.StructField(IngestBatchCol,
+        if (batch.isValidInt) org.apache.spark.sql.types.IntegerType
+        else org.apache.spark.sql.types.LongType)),
+      replace = overwriteAll)
+  }
+
+  /** Seeds [[readPq]]'s schema memo for a table this session just wrote
+    * at `path` with what a read of it infers: the written `data` columns
+    * made nullable (Spark writes every parquet column optional), then
+    * the `partitions` columns as partition inference types their
+    * values. `replace` for a whole-table write; an in-place write keeps
+    * the entry the table already has. */
+  private[graft] def seedPqSchema(path: String,
+                                  data: org.apache.spark.sql.types.StructType,
+                                  partitions: Seq[org.apache.spark.sql.types.StructField],
+                                  replace: Boolean): Unit = {
+    val names = partitions.map(_.name).toSet
+    val read = org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(data)
+        .filterNot(f => names(f.name)) ++ partitions)
+    if (replace) pqSchemaMemo.put(pqMemoKey(path), read)
+    else pqSchemaMemo.putIfAbsent(pqMemoKey(path), read)
   }
 
   private def validateMinhashMeta(meta: Map[String, String],

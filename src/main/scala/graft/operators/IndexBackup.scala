@@ -24,7 +24,7 @@ import org.apache.spark.sql.graftbridge.HadoopBridge
   * code and could silently normalize exactly the torn state a backup
   * must preserve evidence of). Two exclusions: the home's `LEASE`
   * file (it is OUR lease during the copy — restoring it would wedge
-  * the restored home until the TTL) and `_staging_*` scratch trees
+  * the restored home until the TTL) and `staging-*` scratch trees
   * (CDC routing residue, never part of served state).
   *
   * Backup layout (all under `backupDir`):
@@ -60,7 +60,7 @@ object IndexBackup {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Recursive relative file list under `root` with (length, mtime),
-    * excluding the lease file and `_staging_*` scratch trees.
+    * excluding the lease file and `staging-*` scratch trees.
     * Driver-side, bounded by the home's file count — the same
     * metadata-scale bound every maintenance op accepts. The mtime is
     * the delta-rotation quick check ([[rotate]]): this engine's homes
@@ -73,7 +73,7 @@ object IndexBackup {
       fs.listStatus(p).toSeq.flatMap { st =>
         val name = st.getPath.getName
         val childRel = if (rel.isEmpty) name else s"$rel/$name"
-        if (name.startsWith("_staging_")) Seq.empty
+        if (name.startsWith(ShardedIndex.StagingPrefix)) Seq.empty
         else if (st.isDirectory) walk(st.getPath, childRel)
         else if (name == Dedup.LeaseFile) Seq.empty
         else Seq((childRel, st.getLen, st.getModificationTime))

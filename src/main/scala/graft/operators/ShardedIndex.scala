@@ -112,11 +112,15 @@ object ShardedIndex {
     m
   }
 
-  /** Stages `df` into `<home>/_staging_<tag>` partitioned by the shard
+  /** Name prefix of the staging trees [[stageRouted]] writes at a
+    * home. Neither it nor the partition column may start with `_` or
+    * `.`: Spark's hidden-path filter would flag the staging root on
+    * every read-back and drop the partition directories. */
+  private[graft] val StagingPrefix = "staging-"
+
+  /** Stages `df` into `<home>/staging-<tag>` partitioned by the shard
     * column, so the per-shard loop reads partition-PRUNED slices of one
-    * materialized pass instead of rescanning the input S times. The
-    * partition column must not start with `_` or the hidden-file filter
-    * would drop its directories from the read-back listing. An empty
+    * materialized pass instead of rescanning the input S times. An empty
     * input (e.g. an insert-only batch's delete side) stages nothing.
     * Returns (per-shard reader, shards actually present, cleanup). */
   private def stageRouted(df: DataFrame, home: String, shards: Int,
@@ -126,7 +130,7 @@ object ShardedIndex {
     // touches no shard: nothing to stage
     if (Dedup.staticallyEmpty(df)) return (_ => df, Seq.empty, () => ())
     val spark = df.sparkSession
-    val dir = s"$home/_staging_$tag"
+    val dir = s"$home/$StagingPrefix$tag"
     // ONE pass over the input: the routed write itself. The old shape
     // spent two more Spark jobs per call — an isEmpty probe before the
     // write and a distinct().collect() after it to learn which shards

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 /** Similarity search over embedding columns (`array<float>`) — SURVEY
   * §2.9: brute-force cosine top-k as the exactness baseline, and a
@@ -343,7 +344,8 @@ object Similarity {
     * streams through, so the histogram can never diverge from the files
     * it describes). `cids` is the stored quantizer's cell id list —
     * model-scale, so the observation is ≤ nCentroids counter columns
-    * folded map-side. */
+    * folded map-side. Seeds [[Dedup.readPq]]'s schema memo for a layout
+    * that holds rows, so its first read infers nothing. */
   private def writeAssignedWithHist(rows: DataFrame, cids: Seq[Int],
                                     path: String): Map[Int, Long] = {
     val obs = org.apache.spark.sql.Observation()
@@ -353,10 +355,20 @@ object Similarity {
       cids.tail.map(cid =>
         sum(when(col("cent_id") === cid, 1L).otherwise(0L)).as(s"c_$cid")): _*)
     counted.write.mode("overwrite").partitionBy("cent_id").parquet(path)
-    cids.flatMap { cid =>
+    val hist = cids.flatMap { cid =>
       obs.get.get(s"c_$cid").map(_.asInstanceOf[Long]).filter(_ > 0)
         .map(cid -> _)
     }.toMap
+    if (hist.nonEmpty) Dedup.seedPqSchema(path, rows.schema,
+      Seq(StructField("cent_id", IntegerType)), replace = true)
+    hist
+  }
+
+  /** Overwrites the one-file `centroids` table at `path` and seeds
+    * [[Dedup.readPq]]'s schema memo with it. */
+  private def writeCentroids(cents: DataFrame, path: String): Unit = {
+    cents.repartition(1).write.mode("overwrite").parquet(path)
+    Dedup.seedPqSchema(path, cents.schema, Nil, replace = true)
   }
 
   /** Drift sentinel floor: batches below 20 rows/cell are too small
@@ -427,9 +439,8 @@ object Similarity {
           .repartition(col("cent_id"))
       else ivfAssignedRows(vectors, cents)
     Dedup.swapInDir(spark, dir) { tmp =>
-      cents.map { case (cid, v) => (cid, v.toSeq) }
-        .toDF("cent_id", "embedding")
-        .repartition(1).write.mode("overwrite").parquet(s"$tmp/centroids")
+      writeCentroids(cents.map { case (cid, v) => (cid, v.toSeq) }
+        .toDF("cent_id", "embedding"), s"$tmp/centroids")
       val hist = writeAssignedWithHist(assigned, cents.map(_._1),
         s"$tmp/assigned")
       Dedup.writeMeta(spark, tmp, baseMeta ++ Map(
@@ -776,8 +787,7 @@ object Similarity {
     // replacement builds beside it — nothing to pre-materialize, the
     // old version is untouched until two commits later
     Dedup.swapInDir(spark, dir) { tmp =>
-      cents.repartition(1).write.mode("overwrite")
-        .parquet(s"$tmp/centroids")
+      writeCentroids(cents, s"$tmp/centroids")
       // re-baseline the drift sentinel from the rows just rewritten:
       // deletes never decrement cell_hist (the delete leg is
       // deliberately scan-free), so under churn the stored histogram
@@ -805,15 +815,26 @@ object Similarity {
   }
 
   /** The stored quantizer + cell-partitioned corpus of [[writeIvfIndex]].
-    * `cents` is model-scale driver data (nCentroids × dim). */
-  final case class IvfIndex(cents: Seq[(Int, Array[Float])],
-                            assigned: DataFrame)
+    * `cents` is model-scale driver data (nCentroids × dim), collected on
+    * first use, so a caller that reads only `assigned` (live ids,
+    * rebuild, compact) runs no job to open the index. */
+  final class IvfIndex(readCents: => Seq[(Int, Array[Float])],
+                       val assigned: DataFrame) {
+    lazy val cents: Seq[(Int, Array[Float])] = readCents
+
+    def copy(assigned: DataFrame = assigned): IvfIndex =
+      new IvfIndex(cents, assigned)
+  }
+
+  object IvfIndex {
+    def apply(cents: => Seq[(Int, Array[Float])],
+              assigned: DataFrame): IvfIndex = new IvfIndex(cents, assigned)
+  }
 
   def readIvfIndex(spark: SparkSession, dir: String): IvfIndex = {
     // version snapshot: resolve once — this handle keeps serving the
     // resolved version even while a rebuild commits the next one
     val (root, meta) = ivfMeta(spark, dir)
-    val cents = readIvfCentroids(spark, root)
     // base rows are batch -1 (the assigned/ table is cent_id-
     // partitioned only); batch rows keep their ingest_batch so the
     // shadow mask can order them against the tombstones.
@@ -834,7 +855,7 @@ object Similarity {
     val assigned = Dedup.maskShadowed(unioned, "vec_id",
       ivfTombs(spark, root, meta), "vec_id")
       .drop(Dedup.IngestBatchCol)
-    IvfIndex(cents, assigned)
+    IvfIndex(readIvfCentroids(spark, root), assigned)
   }
 
   /** [[ivfTopK]] against a stored index: identical probe math (same

@@ -23,12 +23,35 @@ object RefPipeline {
       .withColumn("BirthDay", truncateIsoDate(col("BirthDay")))
   }
 
+  /** Clustering key of the users dimension sink. `Name` and `Email`
+    * arrive in `user_info` document order, one random dictionary index
+    * per row; sorted by `Email`, neighbouring emails share their
+    * prefixes, which zstd folds away, and where emails spell the name
+    * (`first.last…@`) `Name` stores as runs too: one string key gives
+    * the bytes `Name, Email` gives. */
+  val usersKey: Seq[String] = Seq("Email")
+
+  /** Clustering key of the orders fact sink. `Product_Name`, `Category`
+    * and `Price` are functions of `Product_ID`, so the four store as
+    * dictionary/RLE runs; inside a product, `Fecha` then stores as runs
+    * too, and `User_ID` ascends within each (product, day). */
+  val ordersKey: Seq[String] = Seq("Product_ID", "Fecha", "User_ID")
+
+  /** Clustering key of the products sink: its primary key. */
+  val productsKey: Seq[String] = Seq("Id")
+
   /** transform_user (reference `dags/etl.py:69-86`): users ⋈ user_info
     * on Document (J1). 300-row output on reference-shaped data; columns
-    * `(Id, Document, Name, BirthDay, Gender, Email, Phone)`. */
+    * `(Id, Document, Name, BirthDay, Gender, Email, Phone)`.
+    *
+    * Each task's rows come out sorted by [[usersKey]]: a per-task sort,
+    * no exchange. Catalyst drops it where the order cannot matter (under
+    * [[ordersEnriched]]'s J3 join, under a one-file sink sort), so a
+    * plan that consumes this frame still sorts once. */
   def usersEnriched(users: DataFrame, userInfo: DataFrame): DataFrame =
     joinPandasOn(users, transformUserInfo(userInfo), "Document")
       .select("Id", "Document", "Name", "BirthDay", "Gender", "Email", "Phone")
+      .sortWithinPartitions(usersKey.map(col): _*)
 
   /** transform_orders (reference `dags/etl.py:89-124`): orders ⋈ products
     * (J2, drops unmatched product ids) ⋈ users-enriched (J3, `_x`/`_y`
@@ -36,18 +59,18 @@ object RefPipeline {
     * (P2/P3). Columns
     * `(Fecha, User_ID, Product_ID, Product_Name, Category, Price)`.
     *
-    * Each task's rows come out clustered by `Product_ID`: a per-task
-    * sort, no exchange. `Product_Name`, `Category` and `Price` are
-    * functions of `Product_ID`, so a parquet sink stores all four as
-    * long dictionary/RLE runs instead of one random dictionary index
-    * per row (the orders sink shrinks by more than half). */
+    * Each task's rows come out sorted by [[ordersKey]]: a per-task
+    * sort, no exchange, so a parquet sink stores the product-derived
+    * columns and `Fecha` as runs instead of one random dictionary index
+    * per row. The users side's own sort drops out under J3, so the plan
+    * sorts once. */
   def ordersEnriched(orders: DataFrame, products: DataFrame,
                      usersFinal: DataFrame): DataFrame = {
     val op = joinPandas(orders, products, "Product_ID", "Id")
     val opu = joinPandas(op, usersFinal, "User_ID", "Id")
     opu.select(col("Fecha"), col("User_ID"), col("Product_ID"),
       col("Name_x").as("Product_Name"), col("Category"), col("Price"))
-      .sortWithinPartitions(col("Product_ID"))
+      .sortWithinPartitions(ordersKey.map(col): _*)
   }
 
   /** products pass-through load (reference `dags/etl.py:242` pulls the

@@ -73,6 +73,27 @@ class IndexBackupSpec extends AnyFunSuite with SparkSpec {
       == before, "restored sharded home drifted")
   }
 
+  test("a backup skips a staging tree left at a sharded home, whose name " +
+      "Spark does not treat as hidden") {
+    val prefix = ShardedIndex.StagingPrefix
+    assert(!prefix.startsWith("_") && !prefix.startsWith("."), prefix)
+    val docs = graft.sources.Tables.documents(spark, base).limit(40)
+    val home = graft.sources.Scratch.dir("bk-staging")
+    val bk = graft.sources.Scratch.dir("bk-staging-copy")
+    ShardedIndex.writeMinhash(docs, home, shards = 2,
+      id = "doc_id", text = "text")
+    // the residue of a crashed routed write: rows staged by shard
+    docs.limit(5).withColumn("g_shard", lit(0)).write.mode("overwrite")
+      .partitionBy("g_shard").parquet(s"$home/${prefix}write")
+    assert(spark.read.parquet(s"$home/${prefix}write").count() == 5)
+    import spark.implicits._
+    val rels = IndexBackup.backup(spark, home, bk)
+      .select("relpath").as[String].collect()
+    assert(rels.exists(_.startsWith("shard=")), rels.mkString(","))
+    assert(!rels.exists(_.contains(prefix)),
+      s"the backup carried the staging tree: ${rels.filter(_.contains(prefix)).mkString(",")}")
+  }
+
   test("refusals: torn backup, tampered bytes, committed overwrite, " +
       "non-empty destination — each loud, each naming the problem") {
     val docs = graft.sources.Tables.documents(spark, base).limit(40)

@@ -277,6 +277,40 @@ class IndexCdcSpec extends AnyFunSuite with SparkSpec {
     seeded("after a CDC batch")
   }
 
+  test("opening a fresh IVF index for its live ids runs no Spark job; " +
+    "its writer seeds the readPq schema memo") {
+    val embs = graft.sources.Tables.embeddings(spark, base)
+    val ivf = graft.sources.Scratch.dir("cdcf-ivf-jobs")
+    Dedup.pqSchemaMemo.keySet.removeIf(_.startsWith(ivf))
+    Similarity.writeIvfIndex(embs.filter(initial("vec_id")), ivf,
+      nCentroids = 4)
+    def seeded(stage: String): Unit = for (t <- Seq("centroids", "assigned")) {
+      val path = s"${idxRoot(ivf)}/$t"
+      assert(Dedup.pqSchemaMemo.get(Dedup.pqMemoKey(path)) ==
+        spark.read.parquet(path).schema, s"$stage: memo of $path")
+    }
+    seeded("after writeIvfIndex")
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    val live =
+      try {
+        val built = IndexCdc.liveIds(spark, ivf)
+        org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+        built
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(n.get() == 0, s"building IndexCdc.liveIds ran ${n.get()} Spark jobs")
+    assert(ids(live, "id") == ids(embs.filter(initial("vec_id")), "vec_id"))
+    Similarity.compactIvfIndex(spark, ivf)
+    seeded("after compactIvfIndex")
+  }
+
   test("routing refuses unknown kinds and non-index dirs by name") {
     val stranger = graft.sources.Scratch.dir("cdcf-stranger")
     Dedup.writeMeta(spark, stranger, Map("kind" -> "not_an_index"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipelines.RefOrchestration
+import graft.pipelines.{RefOrchestration, RefPipeline}
 import graft.queries.RefFixtures
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -327,7 +327,7 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     assert(shuffled == 0L, s"the rerun wrote $shuffled shuffle bytes")
   }
 
-  // ---- orders layout: clustered by product -------------------------------
+  // ---- sink layouts: each sink clustered by its key ----------------------
 
   /** The parquet data files under `dir`, in file-name order. */
   private def dataFiles(dir: String): Seq[String] =
@@ -336,10 +336,12 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
         p.getFileName.toString.startsWith("part-"))
       .map(_.toString).toSeq.sorted
 
-  test("runBatch writes every orders part file non-decreasing in Product_ID") {
+  /** A `runBatch` over an input split 3 ways through
+    * `spark.sql.files.maxPartitionBytes`, so several tasks each write an
+    * orders part file; returns those files. */
+  private def splitBatchOrders(): Seq[String] = {
     val (in, out) = freshRoot()
     stageBoth(in)
-    // split the one input file so several tasks each write a part file
     val key = "spark.sql.files.maxPartitionBytes"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, (Files.size(Paths.get(s"$in/orders.csv")) / 3 + 1).toString)
@@ -347,30 +349,26 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     val files = dataFiles(s"$out/orders")
     assert(files.size > 1, s"expected several part files, got $files")
-    for (f <- files) {
-      val ids = spark.read.parquet(f).select("Product_ID").collect()
-        .map(_.getLong(0)).toSeq
-      assert(ids.nonEmpty && ids == ids.sorted,
-        s"$f is not clustered by Product_ID")
-    }
+    files
   }
 
-  test("each ingest_batch file is sorted by the product-first key, " +
-    "and its write sorts once") {
+  /** The rows of one parquet file, projected on `key`, in file order. */
+  private def keyRows(file: String, key: Seq[String]): Seq[org.apache.spark.sql.Row] =
+    spark.read.parquet(file).select(key.map(org.apache.spark.sql.functions.col): _*)
+      .collect().toSeq
+
+  /** Runs `body` and returns, per parquet write whose output path
+    * `written` accepts, (output path, Sort nodes in its optimized plan). */
+  private def sortsPerWrite(written: String => Boolean)(body: => Unit): Seq[(String, Int)] = {
     import org.apache.spark.sql.catalyst.plans.logical.Sort
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    val (in, out) = freshRoot()
-    RefFixtures.stageDims(spark, sf, in)
-    RefFixtures.stageFactChunk(spark, sf, in, 0)
-    // Sorts in the optimized plan of each per-arrival write
-    val sorts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sorts = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              ns: Long): Unit = qe.optimizedPlan match {
-        case w: InsertIntoHadoopFsRelationCommand
-            if w.outputPath.toString.contains("ingest_batch=") =>
-          sorts.add(w.collect { case s: Sort => s }.size)
+        case w: InsertIntoHadoopFsRelationCommand if written(w.outputPath.toString) =>
+          sorts.add(w.outputPath.toString -> w.collect { case s: Sort => s }.size)
         case _ =>
       }
       override def onFailure(f: String,
@@ -379,13 +377,62 @@ class RefOrchestrationSpec extends AnyFunSuite with SparkSpec {
     }
     spark.listenerManager.register(l)
     try {
+      body
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(l)
+    sorts.asScala.toSeq
+  }
+
+  test("runBatch writes every orders part file non-decreasing in Product_ID") {
+    for (f <- splitBatchOrders()) {
+      val ids = spark.read.parquet(f).select("Product_ID").collect()
+        .map(_.getLong(0)).toSeq
+      assert(ids.nonEmpty && ids == ids.sorted,
+        s"$f is not clustered by Product_ID")
+    }
+  }
+
+  test("runBatch writes every orders part file non-decreasing in " +
+    "Product_ID, Fecha, User_ID") {
+    assert(RefPipeline.ordersKey == Seq("Product_ID", "Fecha", "User_ID"))
+    for (f <- splitBatchOrders()) {
+      val rows = keyRows(f, RefPipeline.ordersKey)
+      assert(rows.nonEmpty && nonDecreasing(rows),
+        s"$f is not sorted by ${RefPipeline.ordersKey}")
+    }
+  }
+
+  test("every users part file is non-decreasing in Email, and each " +
+    "dimension write sorts once") {
+    assert(RefPipeline.usersKey == Seq("Email"))
+    for (e <- entryPoints) {
+      val (in, out) = freshRoot()
+      stageBoth(in)
+      val sorts = sortsPerWrite(p => p.endsWith("/users") || p.endsWith("/products")) {
+        e.run(in, out)
+      }
+      assert(sorts.map(_._1.split('/').last).sorted == Seq("products", "users") &&
+        sorts.forall(_._2 == 1), s"${e.name}: Sorts per dimension write: $sorts")
+      for ((t, key) <- Seq("users" -> RefPipeline.usersKey,
+          "products" -> RefPipeline.productsKey); f <- dataFiles(s"$out/$t")) {
+        val rows = keyRows(f, key)
+        assert(rows.nonEmpty && nonDecreasing(rows), s"${e.name}: $f is not sorted by $key")
+      }
+    }
+  }
+
+  test("each ingest_batch file is sorted by the product-first key, " +
+    "and its write sorts once") {
+    val (in, out) = freshRoot()
+    RefFixtures.stageDims(spark, sf, in)
+    RefFixtures.stageFactChunk(spark, sf, in, 0)
+    // Sorts in the optimized plan of each per-arrival write
+    val sorts = sortsPerWrite(_.contains("ingest_batch=")) {
       RefOrchestration.runIncremental(spark, in, out)
       RefFixtures.stageFactChunk(spark, sf, in, 1)
       RefOrchestration.runIncremental(spark, in, out)
-      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
-    } finally spark.listenerManager.unregister(l)
-    assert(sorts.asScala.toSeq == Seq(1, 1),
-      s"Sorts per arrival write: ${sorts.asScala.toSeq}")
+    }.map(_._2)
+    assert(sorts == Seq(1, 1), s"Sorts per arrival write: $sorts")
 
     // product first, and a total order: the key covers every column
     assert(RefOrchestration.arrivalSortKey.head == "Product_ID" &&

@@ -63,6 +63,17 @@ class RefPipelineSpec extends AnyFunSuite with SparkSpec {
       Seq("Widget", "Widget", "Gadget", "Sprocket"))
   }
 
+  /** Sort nodes in `df`'s optimized plan. */
+  private def sorts(df: DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    df.queryExecution.optimizedPlan.collect { case s: Sort => s }.size
+  }
+
+  /** Whether every partition of `df` is non-decreasing in `key`. */
+  private def partitionsSortedBy(df: DataFrame, key: Seq[String]): Boolean =
+    df.select(key.map(org.apache.spark.sql.functions.col): _*).rdd
+      .glom().collect().forall(p => nonDecreasing(p.toSeq))
+
   test("orders pipeline: each task's rows clustered by Product_ID, no exchange added") {
     import org.apache.spark.sql.catalyst.plans.logical.Sort
     import org.apache.spark.sql.execution.SparkPlan
@@ -80,12 +91,19 @@ class RefPipelineSpec extends AnyFunSuite with SparkSpec {
       spark.conf.set(key, threshold)
       val usersFinal = RefPipeline.usersEnriched(users, userInfo)
       val out = RefPipeline.ordersEnriched(orders.repartition(3), products, usersFinal)
-      // the plan without the clustering sort: the orders pipeline before it
-      val unsorted = out.queryExecution.analyzed match {
+      assert(out.queryExecution.analyzed match {
+        case s: Sort => !s.global
+        case _ => false
+      }, s"ordersEnriched does not end in a per-task sort:\n${out.queryExecution.analyzed}")
+      // the plan without the clustering sorts (the orders' and the
+      // users side's): the orders pipeline before either
+      val unsorted = out.queryExecution.analyzed.transform {
         case s: Sort if !s.global => s.child
-        case p => fail(s"ordersEnriched does not end in a per-task sort:\n$p")
       }
       assert(unsorted.collect { case s: Sort => s }.isEmpty)
+      // the users side's sort drops out under J3: the plan sorts once
+      assert(sorts(out) == 1,
+        s"threshold $threshold:\n${out.queryExecution.optimizedPlan}")
       val unsortedPlan = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sessionState.executePlan(unsorted).executedPlan
       assert(exchanges(out.queryExecution.executedPlan) == exchanges(unsortedPlan),
@@ -96,6 +114,44 @@ class RefPipelineSpec extends AnyFunSuite with SparkSpec {
       assert(parts.forall(p => p == p.sorted) && parts.flatten.length == 4,
         s"threshold $threshold: ${parts.toSeq}")
     } finally spark.conf.set(key, prev)
+  }
+
+  test("orders pipeline: each task's rows sorted by Product_ID, Fecha, User_ID") {
+    assert(RefPipeline.ordersKey == Seq("Product_ID", "Fecha", "User_ID"))
+    // several orders per product, days and users out of order
+    val many = Seq(
+      ("2024-04-03", 2L, 12L), ("2024-04-01", 2L, 13L), ("2024-04-01", 2L, 11L),
+      ("2024-04-02", 3L, 10L), ("2024-04-03", 2L, 10L), ("2024-04-01", 3L, 12L),
+      ("2024-04-02", 4L, 11L), ("2024-04-01", 2L, 12L), ("2024-04-02", 3L, 13L))
+      .toDF("Fecha", "Product_ID", "User_ID")
+    val out = RefPipeline.ordersEnriched(many.repartition(2), products,
+      RefPipeline.usersEnriched(users, userInfo))
+    assert(partitionsSortedBy(out, RefPipeline.ordersKey))
+    assert(out.count() == 9)
+  }
+
+  test("users pipeline: each task's rows sorted by Email, one sort; " +
+    "every part file a sink write leaves is too") {
+    assert(RefPipeline.usersKey == Seq("Email"))
+    // user_info in an order that is not Email order, users split 2 ways
+    val info = userInfo.union(Seq(
+      (300004L, "Al Zed", "1980-01-01T00:00:00", "m", "z@x.com", "6"),
+      (300005L, "Al Zed", "1981-01-01T00:00:00", "m", "y@x.com", "7"))
+      .toDF("document", "name", "birthday", "gender", "email", "phone"))
+    val moreUsers = users.union(Seq((14L, 300004L), (15L, 300005L))
+      .toDF("Id", "Document")).repartition(2)
+    val out = RefPipeline.usersEnriched(moreUsers, info)
+    assert(sorts(out) == 1, out.queryExecution.optimizedPlan.toString)
+    assert(partitionsSortedBy(out, RefPipeline.usersKey))
+    val dir = java.nio.file.Files.createTempDirectory("graft-users").resolve("users")
+    graft.sources.Sinks.overwriteParquet(out, dir.toString)
+    val files = java.nio.file.Files.list(dir).toArray.map(_.toString)
+      .filter(_.split('/').last.startsWith("part-")).toSeq
+    assert(files.nonEmpty)
+    for (f <- files) assert(nonDecreasing(spark.read.parquet(f)
+      .select(RefPipeline.usersKey.map(org.apache.spark.sql.functions.col): _*)
+      .collect().toSeq), f)
+    assert(files.map(spark.read.parquet(_).count()).sum == 6)
   }
 
   test("products pass-through is unmodified") {

@@ -26,4 +26,25 @@ trait SparkSpec {
     * Specs peeking at index internals must go through this. */
   def idxRoot(dir: String): String =
     graft.operators.Dedup.indexRoot(spark, dir)
+
+  /** Whether `rows` are non-decreasing in their (long or string)
+    * columns, compared left to right as an ascending Spark sort compares
+    * them: nulls first, strings by their UTF-8 bytes. */
+  def nonDecreasing(rows: Seq[org.apache.spark.sql.Row]): Boolean = {
+    def cmp(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+      case (x: String, y: String) =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(x)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
+      case _ => throw new IllegalArgumentException(s"cannot compare $a and $b")
+    }
+    rows.sliding(2).forall {
+      case Seq(a, b) => (0 until a.length).iterator.map(i => cmp(a.get(i), b.get(i)))
+        .find(_ != 0).forall(_ < 0)
+      case _ => true
+    }
+  }
 }
